@@ -65,27 +65,57 @@ object AvroSink {
     fields.endRecord()
   }
 
-  /** Spark row value -> Avro generic value, recursively. `avro` is the
-    * NON-NULL branch schema for this position. */
-  private def toAvro(dt: DataType, avro: Schema, v: Any): Any = (dt, v) match {
-    case (_, null) => null
-    case (TimestampType, ts: java.sql.Timestamp) =>
-      // full micros: getTime() is ms-truncated; nanos carries the rest
-      java.lang.Long.valueOf(ts.toInstant.getEpochSecond * 1000000L +
-        ts.toInstant.getNano / 1000L)
-    case (BinaryType, b: Array[Byte]) => java.nio.ByteBuffer.wrap(b)
-    case (ArrayType(elem, _), s: scala.collection.Seq[_]) =>
-      val elemSchema = nonNull(avro.getElementType)
-      val out = new java.util.ArrayList[Any](s.length)
-      s.foreach(x => out.add(toAvro(elem, elemSchema, x)))
-      out
-    case (st: StructType, row: Row) =>
+  /** Spark value -> Avro generic value converter for one position,
+    * built once per partition: `avro` is the NON-NULL branch schema for
+    * this position, and every nested field's branch schema is resolved
+    * here, not per row. */
+  private def converter(dt: DataType, avro: Schema): Any => Any = dt match {
+    case TimestampType => {
+      case ts: java.sql.Timestamp =>
+        // full micros: getTime() is ms-truncated; nanos carries the rest
+        java.lang.Long.valueOf(ts.toInstant.getEpochSecond * 1000000L +
+          ts.toInstant.getNano / 1000L)
+      case x => x
+    }
+    case BinaryType => {
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case x => x
+    }
+    case ArrayType(elem, _) =>
+      val conv = converter(elem, nonNull(avro.getElementType))
+      val f: Any => Any = {
+        case s: scala.collection.Seq[_] =>
+          val out = new java.util.ArrayList[Any](s.length)
+          s.foreach(x => out.add(conv(x)))
+          out
+        case x => x
+      }
+      f
+    case st: StructType =>
+      val toRecord = recordConverter(st, avro, st.fields.indices.toArray)
+      val f: Any => Any = {
+        case row: Row => toRecord(row)
+        case x => x
+      }
+      f
+    case _ => identity
+  }
+
+  /** Row -> Avro record for struct `st`, reading field `i` of the record
+    * from column `columns(i)` of the row. Nulls stay null. */
+  private def recordConverter(st: StructType, avro: Schema,
+      columns: Array[Int]): Row => GenericData.Record = {
+    val convs = st.fields.map(f => converter(f.dataType, nonNull(avro.getField(f.name).schema())))
+    row => {
       val rec = new GenericData.Record(avro)
-      st.fields.zipWithIndex.foreach { case (f, i) =>
-        rec.put(f.name, toAvro(f.dataType, nonNull(avro.getField(f.name).schema()), row.get(i)))
+      var i = 0
+      while (i < convs.length) {
+        val v = row.get(columns(i))
+        if (v != null) rec.put(i, convs(i)(v))
+        i += 1
       }
       rec
-    case (_, x) => x
+    }
   }
 
   /** Unwrap a `["null", T]` union to T. */
@@ -128,6 +158,8 @@ object AvroSink {
       graft.functions.Exact.bucket(col(tsMsCol), rotationSeconds * 1000))
     val schema = StructType(df.schema.fields)
     val schemaJson = avroSchema(schema, "GraftRow").toString
+    val columns = schema.fieldNames.map(bucketed.schema.fieldIndex)
+    val bucketCol = bucketed.schema.fieldIndex("__bucket")
     new File(outDir).mkdirs()
     // repartition by bucket so a bucket's rows co-locate -> one file per
     // bucket per shuffle partition; scales out with the cluster.
@@ -136,6 +168,7 @@ object AvroSink {
       .sortWithinPartitions(col("__bucket"))
       .foreachPartition { (rows: Iterator[Row]) =>
         val avro = new Schema.Parser().parse(schemaJson)
+        val toRecord = recordConverter(schema, avro, columns)
         var current: Option[(Long, DataFileWriter[GenericRecord])] = None
         val pid = org.apache.spark.TaskContext.getPartitionId()
         def open(bucket: Long): DataFileWriter[GenericRecord] = {
@@ -145,19 +178,13 @@ object AvroSink {
           w
         }
         rows.foreach { row =>
-          val bucket = row.getAs[Long]("__bucket")
+          val bucket = row.getLong(bucketCol)
           val w = current match {
             case Some((b, w0)) if b == bucket => w0
             case Some((_, w0)) => w0.close(); val w1 = open(bucket); current = Some((bucket, w1)); w1
             case None => val w1 = open(bucket); current = Some((bucket, w1)); w1
           }
-          val rec = new GenericData.Record(avro)
-          schema.fields.foreach { f =>
-            val v = row.get(row.fieldIndex(f.name))
-            rec.put(f.name,
-              toAvro(f.dataType, nonNull(avro.getField(f.name).schema()), v))
-          }
-          w.append(rec)
+          w.append(toRecord(row))
         }
         current.foreach(_._2.close())
       }

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
-import graft.ingest.{AvroSink, Bitcoin}
+import java.io.File
+
+import org.apache.spark.sql.{DataFrame, Row}
+import graft.ingest.{AvroSink, Bitcoin, BlockEtl}
 
 /** Golden-fixture spec (FIXTURES.md §1): every reference quirk on the
   * exact BQRow schema, flagship ETL output checked by hand. */
@@ -72,7 +74,7 @@ class BitcoinSpec extends AnyFunSuite {
     assert(r1.warehouseRows == 6) // 5 blocks + the duplicated b1
     assert(r1.etlRows == 5) // dedup keeps one b1; empty b2 vanishes
     // the at-least-once append: a re-run doubles the warehouse but the
-    // REPLACE'd ETL output is unchanged — etl.sh's whole reason to exist
+    // ETL output is unchanged — etl.sh's whole reason to exist
     val r2 = graft.ingest.BlockEtl.run(spark, blocks.toDF(), work, rotationSeconds = 600)
     assert(r2.warehouseRows == 12)
     assert(r2.etlRows == 5)
@@ -88,5 +90,110 @@ class BitcoinSpec extends AnyFunSuite {
     val b5 = rows.find(_("block_id").toString == "b5").get
     val txs = b5("transactions").asInstanceOf[java.util.List[_]]
     assert(txs.size == 2) // nested array survived the avro round-trip
+  }
+
+  // -- incremental BlockEtl.run ------------------------------------------
+
+  /** The golden arrivals split in two, one copy of b1 in each half. */
+  private lazy val arrivals = blocks.collect().toSeq
+  private lazy val (firstHalf, secondHalf) = {
+    val (b1s, rest) = arrivals.partition(_.getString(0) == "b1")
+    assert(b1s.size == 2 && rest.size == 4)
+    (b1s.head +: rest.take(2), b1s(1) +: rest.drop(2))
+  }
+
+  private def frame(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), Bitcoin.blockSchema)
+
+  /** Order-insensitive content of a frame; bytes compared by value. */
+  private def content(df: DataFrame): Seq[String] = {
+    def canon(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+      case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
+      case s: scala.collection.Seq[_] => s.map(canon).mkString("[", ",", "]")
+      case x => x.toString
+    }
+    df.collect().toSeq.map(canon).sorted
+  }
+
+  private def dest(work: String) = spark.read.parquet(s"$work/transactions")
+
+  /** The destination must hold what one full etl.sh over every arrival
+    * so far gives, and the counts must be the cumulative totals. */
+  private def assertFolded(work: String, r: BlockEtl.Result, all: Seq[Row]): Unit = {
+    val want = Bitcoin.etl(frame(all))
+    assert(content(dest(work)) == content(want))
+    assert(r.warehouseRows == all.size)
+    assert(r.etlRows == want.count())
+  }
+
+  private def newWork(): String = java.nio.file.Files.createTempDirectory("blocketl").toString
+
+  test("incremental BlockEtl: split duplicate and re-runs match a full etl of all arrivals") {
+    val work = newWork()
+    var all = Seq.empty[Row]
+    for (batch <- Seq(firstHalf, secondHalf, firstHalf, secondHalf)) {
+      val r = BlockEtl.run(spark, frame(batch), work, rotationSeconds = 600)
+      all ++= batch
+      assertFolded(work, r, all)
+    }
+    assert(new File(s"$work/transactions/${BlockEtl.LogName}").isFile)
+  }
+
+  test("incremental BlockEtl: a warehouse file appended outside run is folded next call") {
+    val work = newWork()
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    // a crash after the warehouse commit, before the destination's
+    frame(secondHalf).write.mode("append").parquet(s"$work/warehouse")
+    val r = BlockEtl.run(spark, frame(Seq.empty), work, rotationSeconds = 600)
+    assertFolded(work, r, firstHalf ++ secondHalf)
+  }
+
+  test("incremental BlockEtl: a crash after the destination commit adds no duplicates") {
+    val work = newWork()
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    val log = new File(s"$work/transactions/${BlockEtl.LogName}").toPath
+    val before = java.nio.file.Files.readAllBytes(log)
+    BlockEtl.run(spark, frame(secondHalf), work, rotationSeconds = 600)
+    // the log never got replaced: the second call's files look new
+    java.nio.file.Files.write(log, before)
+    val r = BlockEtl.run(spark, frame(Seq.empty), work, rotationSeconds = 600)
+    assertFolded(work, r, firstHalf ++ secondHalf)
+  }
+
+  test("incremental BlockEtl: deleting the destination rebuilds it with the same rows") {
+    val work = newWork()
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    BlockEtl.run(spark, frame(secondHalf), work, rotationSeconds = 600)
+    val built = content(dest(work))
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(s"$work/transactions"))
+    val r = BlockEtl.run(spark, frame(Seq.empty), work, rotationSeconds = 600)
+    assert(content(dest(work)) == built)
+    assertFolded(work, r, firstHalf ++ secondHalf)
+  }
+
+  test("incremental BlockEtl: a destination without a log picks up no duplicates") {
+    val work = newWork()
+    // the layout the full-replace pipeline left: warehouse + replaced
+    // destination, no _etl_log
+    blocks.write.parquet(s"$work/warehouse")
+    Bitcoin.etl(spark.read.schema(Bitcoin.blockSchema).parquet(s"$work/warehouse"))
+      .write.parquet(s"$work/transactions")
+    val r = BlockEtl.run(spark, blocks.toDF(), work, rotationSeconds = 600)
+    assertFolded(work, r, arrivals ++ arrivals)
+  }
+
+  test("BlockEtl: a failing warehouse sink fails the call and leaves no sink thread") {
+    val work = newWork()
+    // a regular file where the warehouse directory belongs
+    java.nio.file.Files.write(new File(work, "warehouse").toPath, Array[Byte](1))
+    intercept[Exception] {
+      BlockEtl.run(spark, blocks.toDF(), work, rotationSeconds = 600)
+    }
+    val running = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName == BlockEtl.AppendThreadName)
+    assert(running.isEmpty)
+    assert(!new File(s"$work/transactions").exists()) // nothing folded
   }
 }
