@@ -4,33 +4,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = Session.builder(cpus)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // AQE stays ON (the 100TB posture: runtime re-plan, skew splits);
-      // SPARK_GRAFT_AQE=false exists for measuring its per-query cost
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // r14: let AQE coalesce CACHED plans' output partitioning too
-      // (default false). The suite persists many small post-shuffle
-      // relations (BPE vocab, iterative edge caches' aggregates);
-      // without this every consumer job scans them at the static
-      // shuffle-partition count — pure task-scheduling overhead
-      // locally, and at cluster scale the same flag lets AQE right-
-      // size cached relations to advisoryPartitionSizeInBytes instead
-      // of the static 32/200. Scale-adaptive, not a local[32] tune;
-      // explicit repartition(n, key) caches are exempt by AQE's own
-      // user-specified-repartition rule. SPARK_GRAFT_CACHE_AQE=false
-      // is the A/B control.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up (JMH-style): run every query once at the smallest
@@ -92,18 +67,11 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
-    // SPARK_GRAFT_FIRST=q_a,q_b promotes named queries to the front of
-    // the suite — the A/B harness for the driver-side inflation
-    // investigation (does q_kmeans_fx read its isolated time when no
-    // heavy neighbor precedes it?). Everything else runs NAME-SORTED
-    // (BenchLine.order, spec-pinned): the registry Map's hash order
-    // moved paid_build attribution between rounds and produced false
-    // driver-side regressions (r12 VERDICT #2).
-    val firstNames = sys.env.get("SPARK_GRAFT_FIRST")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+    // NAME-SORTED order (BenchLine.order, spec-pinned): the registry
+    // Map's hash order moved paid_build attribution between rounds and
+    // produced false driver-side regressions (r12 VERDICT #2).
     val ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      BenchLine.order(selected.keys, firstNames).map(n => n -> selected(n))
+      BenchLine.order(selected.keys).map(n => n -> selected(n))
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // Per-query JVM memory evidence for the driver-inflation
     // investigation (VERDICT r6 #1): GC wall time + collection count
@@ -136,16 +104,14 @@ object Bench {
       //    2-3x inflation on the heaviest neighbors).
       // BLOCKING unpersist: clearCache() alone schedules block removal
       // asynchronously, and the cleanup threads would overlap the next
-      // query's timed region. SPARK_GRAFT_NOCLEAR=1 is the A/B control.
-      if (!sys.env.contains("SPARK_GRAFT_NOCLEAR")) {
-        // Suite-shared materializations (SharedFrames) are exempt:
-        // they exist precisely to survive across the family's queries,
-        // and a localCheckpointed RDD is unrecoverable once dropped.
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => graft.ops.SharedFrames.isShared(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        spark.sharedState.cacheManager.clearCache()
-      }
+      // query's timed region.
+      // Suite-shared materializations (SharedFrames) are exempt: they
+      // exist precisely to survive across the family's queries, and a
+      // localCheckpointed RDD is unrecoverable once dropped.
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => graft.ops.SharedFrames.isShared(id) }
+        .values.foreach(_.unpersist(blocking = true))
+      spark.sharedState.cacheManager.clearCache()
       System.gc()
       // Attribute shared-frame builds triggered inside the timed region
       // to this query (side-file paid_build field): the FIRST consumer

@@ -43,13 +43,8 @@ object BenchLine {
     * q_copurchase_lift read 5.68s paying graph_pairs_ge2 vs 2.23s
     * isolated). Name-sorted order makes paid_build attribution stable
     * round-over-round: the alphabetically-first family member always
-    * pays. SPARK_GRAFT_FIRST promotions (the A/B harness) stay at the
-    * front in their given order; the rest sort by name. */
-  def order(names: Iterable[String], first: Seq[String] = Seq.empty): Seq[String] = {
-    val nameSet = names.toSet
-    val promoted = first.filter(nameSet.contains).distinct
-    promoted ++ names.toSeq.distinct.filterNot(promoted.contains).sorted
-  }
+    * pays. */
+  def order(names: Iterable[String]): Seq[String] = names.toSeq.distinct.sorted
 
   /** Renders the artifact line, degrading per-query precision
     * (3 -> 2 -> 1 decimals), then falling back to the most-expensive-N

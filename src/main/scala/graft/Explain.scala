@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan inspector: `runMain graft.Explain <query> [sfDir] [aqe]`
   * prints the formatted physical plan of one registry query — the
   * local loop for plan work that PlanDump (the committed pins) sits on
@@ -11,17 +9,8 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val aqe = args.length > 2 && args(2) == "aqe"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("4").getOrCreate()
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     println(df.queryExecution.explainString(

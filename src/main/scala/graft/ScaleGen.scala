@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up slice generator for the SCALING.md experiment (r11 verdict
@@ -30,14 +30,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(in, out, kStr) = args
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

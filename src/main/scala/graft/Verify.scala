@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy (non-ANSI) arithmetic: bad casts / div-by-zero yield NULL,
-      // matching the oracle queries' guarded CASE semantics
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = Session.builder(cpus)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // testdata timestamps: orders/lineitem are TIMESTAMP(MILLIS) ->
-      // read as session-UTC TIMESTAMP (not NTZ); events.ts is
-      // TIMESTAMP(NANOS) which Spark can only surface as a nanos long
-      // (Tables.load converts it back to a timestamp column)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r14: mirror Bench's cached-plan AQE coalescing so the hash
-      // gates exercise the same physical configuration the bench runs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -193,13 +193,7 @@ object BlockEtl {
       java.nio.file.Files.createTempDirectory("blocketl").toString)
     val rotation = opts.getOrElse("rotationtime", "600").toLong
     val threads = opts.getOrElse("threads", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(threads).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val blocks = opts.get("input").filter(_ != "golden")
       .map(p => spark.read.schema(Bitcoin.blockSchema).parquet(p))

@@ -20,6 +20,18 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("the test session runs the engine contract of graft.Session " +
+    "(the configuration Verify and Bench run)") {
+    val conf = SharedSpark.spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.ansi.enabled") == "false")
+    assert(conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+  }
+
   test("entry (flagship) smoke: rows > 0 on sf0.001") {
     assert(SparkEntry.entry(SharedSpark.spark).count() > 0)
   }

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole forked test JVM (never stopped —
-  * suites share it). Mirrors Verify.scala's session configuration. */
+  * suites share it). Built by [[graft.Session]], the engine contract
+  * Verify and Bench run under; only the master (`local[4]`) and a temp
+  * warehouse dir are test-specific. */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Session.builder("4")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
