@@ -1,88 +1,50 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.text.Text
 
 /** Batch-vs-corpus dedup verdicts — the production posture at 100TB: a
   * (small) new batch is probed against the EXISTING corpus index,
   * never corpus-vs-corpus. Exact tier matches on the canonical content
-  * fingerprint (md5 of the sorted distinct token set); near tier
-  * shares a minhash LSH band and verifies at the Jaccard threshold
-  * (the [[MinHash]] signature chain); exact takes precedence; every
-  * new doc gets a verdict row.
+  * fingerprint ([[contentFingerprint]]); near tier is the [[MinHash]]
+  * operator's batch-vs-corpus probe (shared LSH band, exact Jaccard
+  * >= 0.5); exact takes precedence; every new doc gets a verdict row.
   *
   * Shape: the corpus's fingerprint + band index is a write-once
-  * artifact; the batch BROADCASTS to the band join and only verified
-  * candidates fetch shingle arrays — the corpus is never rescanned,
-  * never self-joined, nothing quadratic leaves a band bucket.
+  * artifact; the batch joins the band index (AQE broadcasts it while it
+  * fits) and only verified candidates fetch shingle arrays — the corpus
+  * is never rescanned, never self-joined, nothing quadratic leaves a
+  * band bucket.
   *
   * This is the engine behind BOTH q_dedup_incremental (whose DuckDB
-  * oracle replays the md5 signature chain at the 0.5 threshold — its
-  * constants are the defaults here) and the streaming
-  * [[graft.streaming.Streams]] verdict sink, which applies it per
-  * micro-batch against a static corpus.
+  * oracle replays the fingerprint and the [[MinHash.oracleCtes]]
+  * signature chain) and the streaming [[graft.streaming.Streams]]
+  * verdict sink, which applies it per micro-batch against a static
+  * corpus.
   */
 object Incremental {
 
+  /** Canonical content fingerprint of a token array: md5 of the sorted
+    * distinct tokens joined with '|' — case/whitespace/word-order
+    * insensitive (raw byte-identity is a strictly weaker prefilter);
+    * null for a token-less doc. */
+  def contentFingerprint(toks: Column): Column =
+    when(size(toks) > 0,
+      md5(array_join(sort_array(array_distinct(toks)), "|").cast("binary")))
+
   /** One (doc_id, verdict, dup_of) row per `newDocs` row, judged
-    * against `corpus`. Both frames need (idCol, textCol). */
-  def verdicts(
-      newDocs: DataFrame,
-      corpus: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      jaccardThreshold: Double = 0.5): DataFrame = {
-    val spark = newDocs.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // compiled shingle UDF behind repartition (single-file-input lesson)
-    def prep(df: DataFrame): DataFrame = df
-      .repartition(nPart)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"),
-        Text.shingleSetUdf(3)(col(textCol)).as("shs"))
-    val nw = prep(newDocs)
-    val old = prep(corpus)
-    // canonical content fingerprint: case/whitespace/word-order
-    // insensitive (raw byte-identity is a strictly weaker prefilter)
-    def fp(df: DataFrame): DataFrame = {
-      val toks = Text.tokens(col("text"))
-      df.select(col("doc_id"),
-        when(size(toks) > 0,
-          md5(array_join(sort_array(array_distinct(toks)), "|").cast("binary")))
-          .as("fp"))
-    }
+    * against `corpus`. Both frames need (doc_id, text). */
+  def verdicts(newDocs: DataFrame, corpus: DataFrame): DataFrame = {
+    val nw = MinHash.shingled(newDocs)
+    val old = MinHash.shingled(corpus)
+    def fp(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), contentFingerprint(Text.tokens(col("text"))).as("fp"))
     val exact = fp(nw)
       .join(fp(old).toDF("old_id", "fp"), "fp")
       .groupBy("doc_id").agg(min(col("old_id")).as("dup_of_exact"))
-    def bands(df: DataFrame): DataFrame = {
-      val sig = df.filter(size(col("shs")) > 0)
-        .select(col("doc_id"), Text.md5MinhashSigUdf(8)(col("shs")).as("sig"))
-      val bandStructs = (0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          concat_ws("|",
-            element_at(col("sig"), 2 * b + 1),
-            element_at(col("sig"), 2 * b + 2)).as("bkey")))
-      sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band"), col("bk.bkey"))
-    }
-    val cand = bands(nw)
-        .select(col("doc_id").as("new_id"), col("band"), col("bkey"))
-      .join(bands(old)
-        .select(col("doc_id").as("old_id"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .select("new_id", "old_id").distinct()
-    val near = cand
-      .join(nw.filter(size(col("shs")) > 0)
-        .select(col("doc_id").as("new_id"), col("shs").as("sa")), Seq("new_id"))
-      .join(old.filter(size(col("shs")) > 0)
-        .select(col("doc_id").as("old_id"), col("shs").as("sb")), Seq("old_id"))
-      .select(col("new_id"), col("old_id"),
-        size(array_intersect(col("sa"), col("sb"))).cast(LongType).as("common"),
-        size(col("sa")).cast(LongType).as("n_a"),
-        size(col("sb")).cast(LongType).as("n_b"))
-      .filter(col("common").cast(DoubleType) /
-        (col("n_a") + col("n_b") - col("common")) >= jaccardThreshold)
+    def nonEmpty(df: DataFrame): DataFrame = df.filter(size(col("shs")) > 0)
+    val near = MinHash.nearMatches(nonEmpty(nw), nonEmpty(old))
       .groupBy(col("new_id").as("doc_id"))
       .agg(min(col("old_id")).as("dup_of_near"))
     nw.select("doc_id")

@@ -1,50 +1,158 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.text.Text
 
 /** MinHash + LSH near-duplicate detection (shingle -> minhash signature
-  * -> band -> bucket-join), the standard web-scale text dedup pipeline
-  * (Broder 1997, "On the resemblance and containment of documents";
-  * banding analysis per Leskovec/Rajaraman/Ullman, MMDS ch. 3).
+  * -> band -> bucket-join -> exact verify), the standard web-scale text
+  * dedup pipeline (Broder 1997, "On the resemblance and containment of
+  * documents"; banding analysis per Leskovec/Rajaraman/Ullman, MMDS
+  * ch. 3). The one operator behind q_dedup_minhash,
+  * q_minhash_estimate, q_split_leakage and the near tier of
+  * [[Incremental.verdicts]].
   *
-  * Scale design: candidate generation is an equi-join on (band, bandKey)
-  * — a plain hash shuffle, no pairwise cross-product. With b bands of r
-  * rows, a pair at Jaccard j collides with prob 1-(1-j^r)^b; verification
-  * of the (small) candidate set computes exact Jaccard. All hashing is
-  * xxhash64 (codegen'd native Catalyst expression, no UDFs).
+  * Fixed constants, not parameters — the DuckDB oracles replay them
+  * through [[oracleCtes]]: word 3-shingle sets; permutation hash p of
+  * a shingle is md5("p:" + shingle) as lowercase hex; the signature is
+  * the [[K]] = 8 minima; 4 bands of 2 minima; candidates verify at
+  * exact shingle Jaccard >= 0.5. A pair at Jaccard j shares a band with
+  * probability 1-(1-j^2)^4.
+  *
+  * Scale shape: the signature is ONE narrow compiled-UDF pass over a
+  * round-robin repartitioned doc scan (no shingle explode, no signature
+  * shuffle); candidates are an equi-join on (band, bkey) — a plain hash
+  * shuffle, never a pairwise cross-product; verification joins only the
+  * candidate pairs back to the per-doc shingle ARRAYS and intersects
+  * them. No broadcast hints: the candidate side is corpus-scaled, so
+  * stats/AQE broadcast it while it fits and degrade to a shuffled join
+  * past the broadcast limit.
   */
 object MinHash {
 
-  /** k-hash minhash signature of a shingle array column. */
-  def signature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, s => xxhash64(i, s))))
+  /** Signature length (minima per document). */
+  val K = 8
 
-  /** Band keys: array<struct<band:int, key:bigint>>; key hashes the
-    * band's slice of the signature. */
-  def bandKeys(sig: Column, numBands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => struct(
-        b.as("band"),
-        xxhash64(concat_ws(",", transform(
-          slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          v => v.cast("string")))).as("key")))
+  private val Bands = 4
+  private val RowsPerBand = 2
+  private val MinJaccard = 0.5
 
-  /** Candidate near-dup id pairs (idA < idB) from banded signatures.
-    * `df` must carry `id` and a shingle array column `shCol`. */
-  def candidatePairs(df: DataFrame, id: String, shCol: String,
-      k: Int = 8, numBands: Int = 4): DataFrame = {
-    require(k % numBands == 0,
-      s"k=$k must be divisible by numBands=$numBands or trailing hashes are never banded")
-    val rows = k / numBands
-    val banded = df
-      .select(col(id).as("__id"),
-        explode(bandKeys(signature(col(shCol), k), numBands, rows)).as("bk"))
-      .select(col("__id"), col("bk.band"), col("bk.key"))
-    val a = banded.select(col("__id").as("id_a"), col("band"), col("key"))
-    val b = banded.select(col("__id").as("id_b"), col("band"), col("key"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+  /** (doc_id, text, shs) from (doc_id, text): the distinct word
+    * 3-shingle set per doc, computed behind a round-robin repartition —
+    * the inputs are single parquet files and the md5 work is CPU-bound,
+    * so without it the whole signature stage runs on one core. Docs
+    * with fewer than 3 tokens get an empty set (their signature would
+    * be all-null): filter on `size(shs) > 0` before [[signatures]]. */
+  def shingled(docs: DataFrame): DataFrame =
+    docs
+      .repartition(docs.sparkSession.conf
+        .get("spark.sql.shuffle.partitions", "32").toInt)
+      .select(col("doc_id"), col("text"),
+        Text.shingleSetUdf(3)(col("text")).as("shs"))
+
+  /** All K minima in ONE compiled pass over the shingle set: element p
+    * is MIN over shingles of md5("p:" + shingle) as lowercase hex —
+    * identical to SQL `MIN(md5(p || ':' || shingle))` in Spark and
+    * DuckDB, since hex strings compare bytewise in both. No explode,
+    * no K-way aggregate, no shuffle. */
+  private val signatureUdf: UserDefinedFunction =
+    udf { (shingles: Seq[String]) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val minima = new Array[String](K)
+      val buf = new Array[Char](32) // reused across K * |shingles| digests
+      shingles.foreach { sh =>
+        var p = 0
+        while (p < K) {
+          md.reset()
+          val h = graft.functions.Hex.bytesToHex(
+            md.digest((p.toString + ":" + sh).getBytes("UTF-8")), 16, buf)
+          if (minima(p) == null || h < minima(p)) minima(p) = h
+          p += 1
+        }
+      }
+      minima
+    }
+
+  /** (doc_id, sig) from (doc_id, shs) with non-empty `shs`. */
+  def signatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), signatureUdf(col("shs")).as("sig"))
+
+  /** (doc_id, band, bkey) from (doc_id, sig): one row per band, the key
+    * is the band's minima joined with '|'. */
+  def bands(sigs: DataFrame): DataFrame = {
+    val bandStructs = (0 until Bands).map(b =>
+      struct(lit(b).as("band"),
+        concat_ws("|", (1 to RowsPerBand).map(r =>
+          element_at(col("sig"), RowsPerBand * b + r)): _*).as("bkey")))
+    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band"), col("bk.bkey"))
   }
+
+  /** Distinct (doc_a, doc_b), doc_a < doc_b, sharing a band key within
+    * one band frame. */
+  def candidates(bands: DataFrame): DataFrame =
+    bandJoin(bands, bands, "doc_a", "doc_b")
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+
+  /** Distinct (new_id, old_id) sharing a band key, batch vs corpus. */
+  def candidates(newBands: DataFrame, oldBands: DataFrame): DataFrame =
+    bandJoin(newBands, oldBands, "new_id", "old_id")
+      .select("new_id", "old_id").distinct()
+
+  private def bandJoin(
+      a: DataFrame, b: DataFrame, aId: String, bId: String): DataFrame =
+    a.select(col("doc_id").as(aId), col("band"), col("bkey"))
+      .join(b.select(col("doc_id").as(bId), col("band"), col("bkey")),
+        Seq("band", "bkey"))
+
+  /** `pairs` with the shingle arrays of both members joined on:
+    * `sa` from `a`'s (doc_id, shs) by `aId`, `sb` from `b`'s by `bId`. */
+  def withShingles(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      aId: String, bId: String): DataFrame =
+    pairs
+      .join(a.select(col("doc_id").as(aId), col("shs").as("sa")), Seq(aId))
+      .join(b.select(col("doc_id").as(bId), col("shs").as("sb")), Seq(bId))
+
+  /** Exact overlap of the joined arrays: common, n_a, n_b (bigint). */
+  def overlap: Seq[Column] = Seq(
+    size(array_intersect(col("sa"), col("sb"))).cast(LongType).as("common"),
+    size(col("sa")).cast(LongType).as("n_a"),
+    size(col("sb")).cast(LongType).as("n_b"))
+
+  private def verified(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      aId: String, bId: String): DataFrame =
+    withShingles(pairs, a, b, aId, bId)
+      .select(Seq(col(aId), col(bId)) ++ overlap: _*)
+      .withColumn("jaccard",
+        col("common").cast(DoubleType) / (col("n_a") + col("n_b") - col("common")))
+      .filter(col("jaccard") >= MinJaccard)
+
+  /** Verified near-dup pairs within one corpus of (doc_id, shs), shs
+    * non-empty: (doc_a, doc_b, common, n_a, n_b, jaccard), doc_a < doc_b. */
+  def nearPairs(docs: DataFrame): DataFrame =
+    verified(candidates(bands(signatures(docs))), docs, docs,
+      "doc_a", "doc_b")
+
+  /** Verified near-dup matches of a batch against a corpus, both
+    * (doc_id, shs) with shs non-empty:
+    * (new_id, old_id, common, n_a, n_b, jaccard). */
+  def nearMatches(newDocs: DataFrame, corpus: DataFrame): DataFrame =
+    verified(
+      candidates(bands(signatures(newDocs)), bands(signatures(corpus))),
+      newDocs, corpus, "new_id", "old_id")
+
+  /** DuckDB replay of [[signatures]] + [[bands]]: the `perm`, `mh` and
+    * `bands` CTEs over an `sh(doc_id, shingle)` CTE of distinct
+    * 3-shingles. Interpolate after `sh`, comma-separated; the 8 and
+    * the 2 are [[K]] and the rows per band. */
+  val oracleCtes: String =
+    """perm AS (SELECT unnest(range(0, 8)) AS p),
+      |mh AS (SELECT doc_id, p, MIN(md5(CAST(p AS VARCHAR) || ':' || shingle)) AS mh
+      |       FROM sh, perm GROUP BY doc_id, p),
+      |bands AS (SELECT doc_id, p // 2 AS band,
+      |                 string_agg(mh, '|' ORDER BY p) AS bkey
+      |          FROM mh GROUP BY doc_id, band)""".stripMargin
 }

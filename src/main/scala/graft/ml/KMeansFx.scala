@@ -148,30 +148,32 @@ object KMeansFx {
   /** Argmin of the fx squared distance over `cents` (sorted by cid
     * ascending), ties to the lowest cid — identical to the
     * (dist, cid)-ordered rank-1 window of the oracle chain. Returns
-    * struct(cluster, dist) or null for a null vector. */
-  private def argminUdf(cents: Array[(Long, Array[Long])]) = udf {
-    v: Seq[Long] =>
-      if (v == null) null
-      else {
-        var bestCid = -1L
-        var bestD = Long.MaxValue
-        var j = 0
-        while (j < cents.length) {
-          val cv = cents(j)._2
-          require(cv.length == v.length,
-            s"fx point length ${v.length} != centroid length ${cv.length}")
-          var d = 0L
-          var i = 0
-          while (i < cv.length) {
-            val t = v(i) - cv(i)
-            d += t * t
-            i += 1
-          }
-          if (d < bestD) { bestD = d; bestCid = cents(j)._1 }
-          j += 1
-        }
-        (bestCid, bestD)
+    * (cluster, dist), or (-1, Long.MaxValue) for an empty table. */
+  private def argmin(cents: Array[(Long, Array[Long])], v: Seq[Long]): (Long, Long) = {
+    var bestCid = -1L
+    var bestD = Long.MaxValue
+    var j = 0
+    while (j < cents.length) {
+      val cv = cents(j)._2
+      require(cv.length == v.length,
+        s"fx point length ${v.length} != centroid length ${cv.length}")
+      var d = 0L
+      var i = 0
+      while (i < cv.length) {
+        val t = v(i) - cv(i)
+        d += t * t
+        i += 1
       }
+      if (d < bestD) { bestD = d; bestCid = cents(j)._1 }
+      j += 1
+    }
+    (bestCid, bestD)
+  }
+
+  /** [[argmin]] as a UDF: struct(cluster, dist), or null for a null
+    * vector. */
+  private def argminUdf(cents: Array[(Long, Array[Long])]) = udf {
+    v: Seq[Long] => if (v == null) null else argmin(cents, v)
   }
 
   /** The Lloyd loop over ALREADY-PREPARED points (pid, v: Array[Long])
@@ -290,27 +292,7 @@ object KMeansFx {
       cents: Map[Long, Array[(Long, Array[Long])]]): DataFrame = {
     val f = udf { (g: Long, v: Seq[Long]) =>
       if (v == null) null
-      else {
-        val cs = cents.getOrElse(g, Array.empty[(Long, Array[Long])])
-        var bestCid = -1L
-        var bestD = Long.MaxValue
-        var j = 0
-        while (j < cs.length) {
-          val cv = cs(j)._2
-          require(cv.length == v.length,
-            s"fx point length ${v.length} != centroid length ${cv.length}")
-          var d = 0L
-          var i = 0
-          while (i < cv.length) {
-            val t = v(i) - cv(i)
-            d += t * t
-            i += 1
-          }
-          if (d < bestD) { bestD = d; bestCid = cs(j)._1 }
-          j += 1
-        }
-        (bestCid, bestD)
-      }
+      else argmin(cents.getOrElse(g, Array.empty[(Long, Array[Long])]), v)
     }
     pts.withColumn("s", f(col("g"), col("v")))
   }

@@ -4,14 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.{Q, Tables}
+import graft.dedup.MinHash
 import graft.text.Text
 
 /** Wave 4b — near-duplicate detection and similarity search, the
   * training-data-pipeline core. Oracle-matched variants use engine-
   * portable exact arithmetic: md5 for permutation hashing, DECIMAL
   * accumulation for dot products (order-free => bit-identical doubles
-  * in Spark and DuckDB). The xxhash64 / zip_with fast paths live in
-  * [[graft.dedup.MinHash]] / [[graft.ml.Embeddings]] (ScalaTest'd).
+  * in Spark and DuckDB). The minhash LSH family (q_dedup_minhash,
+  * q_minhash_estimate, q_split_leakage, q_dedup_incremental) composes
+  * the one [[graft.dedup.MinHash]] operator and its oracle CTEs; the
+  * zip_with dense path lives in [[graft.ml.Embeddings]] (ScalaTest'd).
   */
 object DedupSim {
 
@@ -31,6 +34,13 @@ object DedupSim {
     Tables.load(s, d, "documents")
       .select(col("doc_id"),
         explode(Text.shingleSetUdf(3)(col("text"))).as("shingle"))
+
+  /** (doc_id, text, shs) with a non-empty 3-shingle set — the
+    * [[MinHash]] input of the corpus-level minhash queries (the
+    * signature of an empty set is all-null). */
+  private def minhashDocs(s: SparkSession, d: String): DataFrame =
+    MinHash.shingled(Tables.load(s, d, "documents"))
+      .filter(size(col("shs")) > 0)
 
   private[queries] val shingleSql =
     """t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
@@ -121,16 +131,13 @@ object DedupSim {
   /** MinHash + LSH banding, engine-portable form: permutation hash j of
     * a shingle is md5("j:" + shingle); signature = 8 minima; 4 bands of
     * 2; candidates share a band; candidates verified with exact Jaccard
-    * >= 0.5. Fast path (xxhash64) in [[graft.dedup.MinHash]]. */
+    * >= 0.5 — the [[MinHash.nearPairs]] chain, whose scaladoc states
+    * the scale shape (narrow signature pass, banded equi-join, array
+    * verify, no broadcast hint on the corpus-scaled candidate side). */
   val minhashLsh: Q = Q(
     "q_dedup_minhash",
     s"""WITH $shingleSql,
-       |perm AS (SELECT unnest(range(0, 8)) AS p),
-       |mh AS (SELECT doc_id, p, MIN(md5(CAST(p AS VARCHAR) || ':' || shingle)) AS mh
-       |       FROM sh, perm GROUP BY doc_id, p),
-       |bands AS (SELECT doc_id, p // 2 AS band,
-       |                 string_agg(mh, '|' ORDER BY p) AS bkey
-       |          FROM mh GROUP BY doc_id, band),
+       |${MinHash.oracleCtes},
        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |         FROM bands a JOIN bands b
        |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -138,49 +145,7 @@ object DedupSim {
        |SELECT c.doc_a, c.doc_b, j.jaccard
        |FROM cand c JOIN jac j ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
        |WHERE j.jaccard >= 0.5 ORDER BY c.doc_a, c.doc_b""".stripMargin) { (s, d) =>
-    // One narrow pass computes the full 8-minimum signature per doc from
-    // the shingle SET (no shingle explode, no signature shuffle); the
-    // input is round-robin repartitioned first because the md5 work is
-    // CPU-bound and the source is a single parquet file — without the
-    // repartition the whole signature stage runs on one core.
-    // Candidates come from the banded equi-join; verification joins the
-    // candidate pairs back to the per-doc shingle ARRAYS and intersects
-    // them — the shingle frame is never exploded or shuffled. The
-    // candidate side carries NO broadcast hint: it is corpus-scaled
-    // (grows with the dup rate), so stats/AQE broadcast it while it
-    // fits and degrade to a shuffled join past the 8GB limit.
-    val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      .select(col("doc_id"), Text.shingleSetUdf(3)(col("text")).as("shs"))
-      .filter(size(col("shs")) > 0) // sig of an empty set is all-null
-    val withSig = docs.select(
-      col("doc_id"), Text.md5MinhashSigUdf(8)(col("shs")).as("sig"))
-    val bandStructs = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        concat_ws("|",
-          element_at(col("sig"), 2 * b + 1),
-          element_at(col("sig"), 2 * b + 2)).as("bkey")))
-    val bands = withSig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.bkey"))
-    val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("bkey"))
-    val cand = a.join(b, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    // Verify ONLY the candidate pairs — never the all-pairs Jaccard.
-    // The candidate set is sparse (≪ corpus) but still corpus-scaled,
-    // so no forced broadcast — AQE picks the strategy by actual size.
-    val common = cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("shs").as("sa")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("shs").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).cast(LongType).as("common"),
-        size(col("sa")).cast(LongType).as("n_a"),
-        size(col("sb")).cast(LongType).as("n_b"))
-    common
-      .withColumn("jaccard",
-        col("common").cast(DoubleType) / (col("n_a") + col("n_b") - col("common")))
-      .filter(col("jaccard") >= 0.5)
+    MinHash.nearPairs(minhashDocs(s, d))
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
   }
@@ -201,12 +166,7 @@ object DedupSim {
   val minhashEstimate: Q = Q(
     "q_minhash_estimate",
     s"""WITH $shingleSql,
-       |perm AS (SELECT unnest(range(0, 8)) AS p),
-       |mh AS (SELECT doc_id, p, MIN(md5(CAST(p AS VARCHAR) || ':' || shingle)) AS mh
-       |       FROM sh, perm GROUP BY doc_id, p),
-       |bands AS (SELECT doc_id, p // 2 AS band,
-       |                 string_agg(mh, '|' ORDER BY p) AS bkey
-       |          FROM mh GROUP BY doc_id, band),
+       |${MinHash.oracleCtes},
        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |         FROM bands a JOIN bands b
        |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -221,43 +181,21 @@ object DedupSim {
        |  j.common * 1000000 // (j.n_a + j.n_b - j.common) AS jac_e6
        |FROM agr g JOIN jac j ON j.doc_a = g.doc_a AND j.doc_b = g.doc_b
        |ORDER BY g.doc_a, g.doc_b""".stripMargin) { (s, d) =>
-    val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      .select(col("doc_id"), Text.shingleSetUdf(3)(col("text")).as("shs"))
-      .filter(size(col("shs")) > 0)
-    val withSig = docs.select(
-      col("doc_id"), Text.md5MinhashSigUdf(8)(col("shs")).as("sig"))
-    val bandStructs = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        concat_ws("|",
-          element_at(col("sig"), 2 * b + 1),
-          element_at(col("sig"), 2 * b + 2)).as("bkey")))
-    val bands = withSig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.bkey"))
-    val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val agree = (1 to 8)
+    val docs = minhashDocs(s, d)
+    val withSig = MinHash.signatures(docs)
+    val cand = MinHash.candidates(MinHash.bands(withSig))
+    val agree = (1 to MinHash.K)
       .map(i => when(element_at(col("siga"), i) === element_at(col("sigb"), i),
         1L).otherwise(0L))
       .reduce(_ + _)
-    cand
+    val withSigs = cand
       .join(withSig.select(col("doc_id").as("doc_a"), col("sig").as("siga")),
         Seq("doc_a"))
       .join(withSig.select(col("doc_id").as("doc_b"), col("sig").as("sigb")),
         Seq("doc_b"))
-      .join(docs.select(col("doc_id").as("doc_a"), col("shs").as("sa")),
-        Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("shs").as("sb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        agree.as("agree"),
-        size(array_intersect(col("sa"), col("sb"))).cast(LongType).as("common"),
-        size(col("sa")).cast(LongType).as("n_a"),
-        size(col("sb")).cast(LongType).as("n_b"))
+    MinHash.withShingles(withSigs, docs, docs, "doc_a", "doc_b")
+      .select(Seq(col("doc_a"), col("doc_b"), agree.as("agree")) ++
+        MinHash.overlap: _*)
       .select(col("doc_a"), col("doc_b"), col("agree"),
         (col("agree") * 125L).as("est_e3"),
         expr("common * 1000000 div (n_a + n_b - common)").as("jac_e6"))
@@ -1111,12 +1049,7 @@ object DedupSim {
        |old_fp AS (SELECT doc_id, fp FROM fp WHERE doc_id % 10 <> 0),
        |exact AS (SELECT n.doc_id, MIN(o.doc_id) AS dup_of
        |  FROM new_fp n JOIN old_fp o ON n.fp = o.fp GROUP BY 1),
-       |perm AS (SELECT unnest(range(0, 8)) AS p),
-       |mh AS (SELECT doc_id, p, MIN(md5(CAST(p AS VARCHAR) || ':' || shingle)) AS mh
-       |       FROM sh, perm GROUP BY doc_id, p),
-       |bands AS (SELECT doc_id, p // 2 AS band,
-       |                 string_agg(mh, '|' ORDER BY p) AS bkey
-       |          FROM mh GROUP BY doc_id, band),
+       |${MinHash.oracleCtes},
        |cand AS (SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
        |         FROM bands n JOIN bands o
        |           ON n.band = o.band AND n.bkey = o.bkey
@@ -1139,9 +1072,9 @@ object DedupSim {
        |FROM new_fp n LEFT JOIN exact e ON n.doc_id = e.doc_id
        |              LEFT JOIN near nr ON n.doc_id = nr.doc_id
        |ORDER BY n.doc_id""".stripMargin) { (s, d) =>
-    // the oracle above replays Incremental.verdicts' DEFAULT constants
-    // (md5 minhash sig 8 = 4 bands x 2, Jaccard >= 0.5) — change one
-    // and the other must follow
+    // the oracle above replays Incremental.verdicts: its fingerprint,
+    // the MinHash.oracleCtes signature chain, and MinHash's fixed
+    // Jaccard >= 0.5 verify
     val docs = Tables.load(s, d, "documents")
     graft.dedup.Incremental.verdicts(
       docs.filter(col("doc_id") % 10 === 0),
@@ -1184,9 +1117,7 @@ object DedupSim {
     val toks = Text.tokens(col("text"))
     val fp = Tables.load(s, d, "documents")
       .select(col("doc_id"), size(toks).cast(LongType).as("n_toks"),
-        when(size(toks) > 0,
-          md5(array_join(sort_array(array_distinct(toks)), "|").cast("binary")))
-          .as("fp"))
+        graft.dedup.Incremental.contentFingerprint(toks).as("fp"))
     val byFp = Window.partitionBy("fp")
     val keeperW = Window.partitionBy("fp")
       .orderBy(col("n_toks").desc, col("doc_id"))
@@ -1215,12 +1146,7 @@ object DedupSim {
   val splitLeakage: Q = Q(
     "q_split_leakage",
     s"""WITH $shingleSql,
-       |perm AS (SELECT unnest(range(0, 8)) AS p),
-       |mh AS (SELECT doc_id, p, MIN(md5(CAST(p AS VARCHAR) || ':' || shingle)) AS mh
-       |       FROM sh, perm GROUP BY doc_id, p),
-       |bands AS (SELECT doc_id, p // 2 AS band,
-       |                 string_agg(mh, '|' ORDER BY p) AS bkey
-       |          FROM mh GROUP BY doc_id, band),
+       |${MinHash.oracleCtes},
        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |         FROM bands a JOIN bands b
        |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -1236,37 +1162,9 @@ object DedupSim {
        |       jaccard
        |FROM ver WHERE train_a <> train_b
        |ORDER BY train_doc, eval_doc""".stripMargin) { (s, d) =>
-    val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      .select(col("doc_id"), Text.shingleSetUdf(3)(col("text")).as("shs"))
-      .filter(size(col("shs")) > 0)
-    val withSig = docs.select(
-      col("doc_id"), Text.md5MinhashSigUdf(8)(col("shs")).as("sig"))
-    val bandStructs = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        concat_ws("|",
-          element_at(col("sig"), 2 * b + 1),
-          element_at(col("sig"), 2 * b + 2)).as("bkey")))
-    val bands = withSig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.bkey"))
-    val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
     def isTrain(c: org.apache.spark.sql.Column) =
       md5(c.cast("string").cast("binary")) < "cc"
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("shs").as("sa")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("shs").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).cast(LongType).as("common"),
-        size(col("sa")).cast(LongType).as("n_a"),
-        size(col("sb")).cast(LongType).as("n_b"))
-      .withColumn("jaccard",
-        col("common").cast(DoubleType) / (col("n_a") + col("n_b") - col("common")))
-      .filter(col("jaccard") >= 0.5)
+    MinHash.nearPairs(minhashDocs(s, d))
       .withColumn("train_a", isTrain(col("doc_a")))
       .withColumn("train_b", isTrain(col("doc_b")))
       .filter(col("train_a") =!= col("train_b"))

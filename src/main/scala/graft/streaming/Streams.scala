@@ -279,7 +279,6 @@ object Streams {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Convenience: run a memory-sink query to completion for tests. */
   /** Streaming ingestion dedup: every micro-batch of documents gets an
     * exact_dup / near_dup / unique verdict against a STATIC corpus —
     * [[graft.dedup.Incremental.verdicts]] applied per batch inside
@@ -317,24 +316,9 @@ object Streams {
       schema: org.apache.spark.sql.types.StructType,
       dir: String,
       maxFilesPerTrigger: Int,
-      checkpoint: String): Seq[(Long, Long)] = {
-    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        val n = df.count()
-        batches.synchronized { batches += ((id, n)) }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    batches.synchronized(batches.toSeq.sortBy(_._1))
-  }
+      checkpoint: String): Seq[(Long, Long)] =
+    sustainedDrainWithBackpressure(spark, schema, dir, maxFilesPerTrigger,
+      checkpoint, waves = 0)(_ => ())
 
   /** [[drainWithBackpressure]] under SUSTAINED load (r13 VERDICT #8):
     * the producer keeps appending while the query drains. `pump(w)` is
@@ -378,6 +362,7 @@ object Streams {
     batches.synchronized(batches.toSeq.sortBy(_._1))
   }
 
+  /** Convenience: run a memory-sink query to completion for tests. */
   def runToMemory(df: DataFrame, name: String, mode: String = "append"): StreamingQuery =
     df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 }

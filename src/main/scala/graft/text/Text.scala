@@ -79,31 +79,6 @@ object Text {
       }
     }
 
-  /** Full k-permutation MinHash signature in ONE compiled pass over the
-    * shingle set: element p is MIN over shingles of md5("p:" + shingle)
-    * as lowercase hex — the engine-portable permutation hash (identical
-    * to SQL `MIN(md5(p || ':' || shingle))` in Spark and DuckDB, since
-    * hex strings compare bytewise in both). Computing all k minima per
-    * row removes the explode + k-way aggregate (and its shuffle)
-    * entirely from the signature stage. */
-  def md5MinhashSigUdf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (shingles: Seq[String]) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val minima = new Array[String](k)
-      val buf = new Array[Char](32) // reused across k * |shingles| digests
-      shingles.foreach { sh =>
-        var p = 0
-        while (p < k) {
-          md.reset()
-          val h = graft.functions.Hex.bytesToHex(
-            md.digest((p.toString + ":" + sh).getBytes("UTF-8")), 16, buf)
-          if (minima(p) == null || h < minima(p)) minima(p) = h
-          p += 1
-        }
-      }
-      minima
-    }
-
   /** Intra-document repeated-span excision in ONE compiled pass (the
     * q_text_repeat_excise kernel): scanning word n-gram shingles left
     * to right, every occurrence after a shingle's first marks its n

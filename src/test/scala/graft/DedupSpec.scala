@@ -28,21 +28,33 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  /** docShingles as the MinHash operator's (doc_id, shs) input. */
+  private lazy val minhashDocs = docShingles
+    .select(col("doc_id"), col("sh").as("shs"))
+    .filter(size(col("shs")) > 0)
+
   test("MinHash LSH candidates recover all Jaccard>=0.9 pairs (recall)") {
     assert(truePairs.nonEmpty, "testdata should contain planted near-dups")
-    val cand = MinHash.candidatePairs(docShingles.toDF(), "doc_id", "sh",
-      k = 16, numBands = 8)
+    val cand = MinHash.candidates(MinHash.bands(MinHash.signatures(minhashDocs)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = truePairs -- cand
     assert(missed.isEmpty, s"LSH missed high-sim pairs: $missed")
   }
 
   test("MinHash signature is deterministic and length-k") {
-    val sig = docShingles.limit(1)
-      .select(MinHash.signature(col("sh"), 16)).head.getSeq[Long](0)
-    val sig2 = docShingles.limit(1)
-      .select(MinHash.signature(col("sh"), 16)).head.getSeq[Long](0)
-    assert(sig.length == 16 && sig == sig2)
+    val doc = minhashDocs.orderBy("doc_id").limit(1)
+    def sig(): Seq[String] =
+      MinHash.signatures(doc).head.getSeq[String](1)
+    val s1 = sig()
+    assert(s1.length == 8 && s1 == sig())
+    // element p is min over the shingle set of md5("p:" + shingle) as
+    // lowercase hex — the definition the DuckDB oracles replay
+    val shs = doc.head.getSeq[String](1)
+    def md5Hex(x: String): String = String.format("%032x",
+      new java.math.BigInteger(1, java.security.MessageDigest.getInstance("MD5")
+        .digest(x.getBytes("UTF-8"))))
+    val expected = (0 until 8).map(p => shs.map(sh => md5Hex(s"$p:$sh")).min)
+    assert(s1 == expected)
   }
 
   test("SimHash: identical inputs collide, near inputs are close, far inputs far") {

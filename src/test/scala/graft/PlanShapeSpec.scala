@@ -603,6 +603,68 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(s.contains("ReusedExchange"), s.take(1500))
   }
 
+  test("q_dedup_minhash: the signature UDF sits directly on the doc " +
+    "repartition, candidates are a (band, bkey) equi-join, verify " +
+    "intersects shingle arrays (no shingle explode), no broadcast hint") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+    val plan = staticPlan("q_dedup_minhash")
+    val s = plan.toString
+    // nearest exchanges under a node (a reused exchange stands for the
+    // exchange it reuses)
+    def exchangesBelow(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+      case e: Exchange => Seq(e)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case c => exchangesBelow(c)
+    }
+    // the signature UDF is the one ScalaUDF over a shingle ARRAY (the
+    // shingler takes the text string)
+    val sigNodes = plan.collectWithSubqueries {
+      case n if n.expressions.exists(_.exists {
+        case u: ScalaUDF => u.children.exists(_.dataType == ArrayType(StringType))
+        case _ => false
+      }) => n
+    }
+    assert(sigNodes.nonEmpty, s"no signature UDF found:\n${s.take(2000)}")
+    sigNodes.foreach { n =>
+      val below = exchangesBelow(n)
+      assert(below.nonEmpty && below.forall {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }, s"an exchange sits between the doc repartition and the " +
+        s"signature UDF:\n${s.take(2000)}")
+    }
+    val joinKeys = plan.collectWithSubqueries {
+      case j: BaseJoinExec => j.leftKeys.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(joinKeys.contains(Set("band", "bkey")),
+      s"no (band, bkey) equi-join: $joinKeys")
+    // the only explodes are the band rows (array<struct>); verification
+    // intersects the joined shingle arrays instead of exploding them
+    val generators = plan.collectWithSubqueries {
+      case g: GenerateExec => g.generator.children.head.dataType
+    }
+    assert(generators.nonEmpty && generators.forall {
+      case ArrayType(_: StructType, _) => true
+      case _ => false
+    }, s"a non-band explode in the plan: $generators")
+    assert(plan.collectWithSubqueries {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[ArrayIntersect])) => n
+    }.nonEmpty, s.take(2000))
+    val broadcastHints = SparkEntry.queries("q_dedup_minhash")(
+      spark, SharedSpark.sf001).queryExecution.analyzed
+      .collectWithSubqueries {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+      }
+    assert(broadcastHints.isEmpty, broadcastHints.mkString("\n"))
+  }
+
   test("registry-wide: no broadcast hint pins a data-sized base-table " +
     "scan (a dim that scales with SF must be free to degrade to a " +
     "shuffle join at cluster scale instead of hard-failing Spark's 8GB " +
