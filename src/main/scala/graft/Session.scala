@@ -29,10 +29,11 @@ object Session {
     // advisoryPartitionSizeInBytes. Explicit repartition(n, key) caches
     // are exempt by AQE's user-specified-repartition rule.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // testdata timestamps: orders/lineitem are TIMESTAMP(MILLIS) -> read
-    // as session-UTC TIMESTAMP (not NTZ); events.ts is TIMESTAMP(NANOS),
-    // which Spark can only surface as a nanos long (Tables.load converts
-    // it back to a timestamp column)
+    // table timestamps (o_orderdate, l_shipdate, events.ts) are parquet
+    // INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false): with NTZ inference
+    // off they read as session-UTC TIMESTAMP, the type Tables declares.
+    // No table stores TIMESTAMP(NANOS); nanosAsLong stays because
+    // perfbench's session mirrors this contract (RegistrySpec pins both)
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")

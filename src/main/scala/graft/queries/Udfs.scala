@@ -206,7 +206,7 @@ object Udfs {
           .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
       }
     }
-    val blocks = s.read.parquet(GoldenBlocksPath)
+    val blocks = s.read.schema(graft.ingest.Bitcoin.blockSchema).parquet(GoldenBlocksPath)
     def fld(c: Column): Column = coalesce(c.cast("string"), lit("~"))
     def rowFmt(e: Column, fields: Seq[(String, Boolean)]): Column =
       concat_ws(":", fields.map { case (f, isHex) =>

@@ -355,10 +355,10 @@ class ScaleOpsSpec extends AnyFunSuite {
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    // Baseline: loading the two inputs alone fires N parquet
-    // schema-inference jobs (not data actions). Building the full
-    // query must fire exactly the same N — a reintroduced driver-side
-    // count() would add data-scan jobs on top.
+    // Baseline: the jobs loading the two inputs alone fire (none, as
+    // Tables declares their schemas). Building the full query must fire
+    // exactly the same number — a reintroduced driver-side count()
+    // would add data-scan jobs on top.
     spark.sparkContext.addSparkListener(listener)
     try {
       Tables.load(spark, SharedSpark.sf001, "lineitem")
