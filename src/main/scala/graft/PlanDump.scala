@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: formatted physical plans for the queries whose
-  * shape matters at 100TB, so plan regressions are reviewable in git.
+/** Writes PLANS.md in the working directory (where `RegistrySpec` reads
+  * it): formatted physical plans for the queries whose shape matters at
+  * 100TB, so plan regressions are reviewable in git.
   * Usage: runMain graft.PlanDump [sfDir]
   */
 object PlanDump {
@@ -586,7 +587,7 @@ object PlanDump {
     sb.append("  paths). Accepted: the query runs in well under a second in-suite\n")
     sb.append("  and has never appeared in the top-75 cost list; revisit only if\n")
     sb.append("  it does.\n")
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plandump] wrote PLANS.md (${interesting.size} plans)")
     spark.stop()
   }

@@ -2,8 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.File
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, StandardOpenOption}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, udf}
+import org.scalacheck.{Gen, Test => SCTest}
+import org.scalacheck.Prop.forAllNoShrink
 import graft.ingest.{AvroSink, Bitcoin, BlockEtl}
 
 /** Golden-fixture spec (FIXTURES.md §1): every reference quirk on the
@@ -196,4 +203,216 @@ class BitcoinSpec extends AnyFunSuite {
     assert(running.isEmpty)
     assert(!new File(s"$work/transactions").exists()) // nothing folded
   }
+
+  private def blockEtlThreads(): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(_.getName.startsWith("blocketl-"))
+
+  test("BlockEtl: a failing fold fails the call and leaves no blocketl thread; " +
+      "the next call labels its three actions' jobs") {
+    val work = newWork()
+    val destFile = new File(work, "transactions")
+    Files.write(destFile.toPath, Array[Byte](1))
+    intercept[Exception] {
+      BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    }
+    assert(blockEtlThreads().isEmpty)
+    assert(destFile.isFile) // left as the call found it
+    Files.delete(destFile.toPath)
+
+    val sc = spark.sparkContext
+    val JobDescription = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
+    val labels = new ConcurrentLinkedQueue[String]()
+    val barrier = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(JobDescription)))
+          .foreach(d => if (d == "listener barrier") barrier.countDown() else labels.add(d))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("caller")
+      // the failed call's warehouse append landed; the clean call folds it
+      val r = BlockEtl.run(spark, frame(secondHalf), work, rotationSeconds = 600)
+      assert(sc.getLocalProperty(JobDescription) == "caller")
+      assertFolded(work, r, firstHalf ++ secondHalf)
+      sc.setJobDescription("listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      assert(barrier.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    val seen = labels.toArray(Array.empty[String]).toSet
+    assert(Set("blocketl.warehouse_append", "blocketl.avro_sink", "blocketl.fold").subsetOf(seen), seen)
+  }
+
+  test("BlockEtl: a held workdir lock fails the call before it writes anything") {
+    val work = newWork()
+    val channel = FileChannel.open(new File(work, BlockEtl.LockName).toPath,
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      channel.lock()
+      val e = intercept[IllegalStateException] {
+        BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+      }
+      assert(e.getMessage.contains(work))
+      assert(new File(work).list().toSeq == Seq(BlockEtl.LockName))
+    } finally channel.close()
+  }
+
+  test("BlockEtl: a second call on a workdir fails while the first runs; the first completes") {
+    val work = newWork()
+    import BitcoinSpec.{entered, release}
+    val gate = udf { (_: String) =>
+      entered.countDown(); release.await(120, TimeUnit.SECONDS)
+    }
+    val gated = frame(firstHalf).filter(gate(col("block_id")))
+    val first = new java.util.concurrent.FutureTask(() =>
+      BlockEtl.run(spark, gated, work, rotationSeconds = 600))
+    new Thread(first).start()
+    try {
+      assert(entered.await(120, TimeUnit.SECONDS)) // the first call is inside its actions
+      val e = intercept[IllegalStateException] {
+        BlockEtl.run(spark, frame(secondHalf), work, rotationSeconds = 600)
+      }
+      assert(e.getMessage.contains(work))
+    } finally release.countDown()
+    assertFolded(work, first.get(120, TimeUnit.SECONDS), firstHalf)
+  }
+
+  test("BlockEtl: a leftover _commit directory is rolled forward without duplicates") {
+    val work = newWork()
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    // a call that crashed inside its commit: its warehouse file landed,
+    // one of its staged files moved in, the log was not replaced
+    frame(secondHalf).write.mode("append").parquet(s"$work/warehouse")
+    val commit = new File(s"$work/transactions/_commit-crashed")
+    // its anti-join dropped b1, which the destination already holds
+    Bitcoin.etl(frame(secondHalf)).filter("block_id != 'b1'").repartition(3)
+      .write.parquet(commit.getPath)
+    val staged = commit.listFiles().filter(_.getName.startsWith("part-")).toSeq
+    assert(staged.size >= 2)
+    Files.move(staged.head.toPath, new File(s"$work/transactions", staged.head.getName).toPath)
+    val r = BlockEtl.run(spark, frame(Seq.empty), work, rotationSeconds = 600)
+    assertFolded(work, r, firstHalf ++ secondHalf)
+    assert(!commit.exists())
+    assert(staged.forall(f => new File(s"$work/transactions", f.getName).isFile))
+  }
+
+  test("BlockEtl: a leftover _staging directory is deleted, never folded") {
+    val work = newWork()
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    // a call that crashed before its commit, after its fold was staged
+    val staging = new File(s"$work/transactions/_staging-crashed")
+    Bitcoin.etl(frame(secondHalf)).write.parquet(staging.getPath)
+    val r = BlockEtl.run(spark, frame(Seq.empty), work, rotationSeconds = 600)
+    assertFolded(work, r, firstHalf)
+    assert(!staging.exists())
+  }
+
+  // -- the ingest contract under random batch cuts, retries and failures --
+
+  /** One call of a case: its arrivals, and the failure injected into it. */
+  private case class Call(rows: Seq[Row], fault: Option[String])
+
+  /** Distinct golden blocks, one of each quirk: b1 normal, b2 empty, b3
+    * decode error + null satoshis, b4 work overflow, b5 two transactions. */
+  private lazy val quirks = arrivals.groupBy(_.getString(0)).values.map(_.head).toSeq
+    .sortBy(_.getString(0))
+
+  private val Faults = Seq("warehouse", "avro", "transactions", "log")
+
+  private lazy val cases: Gen[Seq[Call]] = for {
+    n <- Gen.choose(1, 8)
+    picks <- Gen.listOfN(n, Gen.oneOf(quirks))
+    blocks = picks.zipWithIndex.map { case (b, i) => Row.fromSeq(s"c$i" +: b.toSeq.tail) }
+    cuts <- Gen.listOfN(2, Gen.choose(0, n)).map(_.sorted)
+    batches = Seq(blocks.take(cuts(0)), blocks.slice(cuts(0), cuts(1)), blocks.drop(cuts(1)))
+    // exact-copy retries of blocks already sent, or of the batch's own
+    withRetries <- Gen.sequence[Seq[Seq[Row]], Seq[Row]](batches.zipWithIndex.map { case (b, k) =>
+      Gen.someOf(batches.take(k + 1).flatten).flatMap(rs => Gen.pick(b.size + rs.size, b ++ rs))
+        .map(_.toSeq)
+    })
+    // a failure hits a call with arrivals: an empty batch opens no Avro file
+    sent = withRetries.indices.filter(withRetries(_).nonEmpty)
+    fault <- if (sent.isEmpty) Gen.const(None)
+      else Gen.frequency(1 -> Gen.const(None),
+        4 -> Gen.zip(Gen.oneOf(sent), Gen.oneOf(Faults)).map(Some(_)))
+  } yield {
+    val calls = withRetries.zipWithIndex.map { case (rows, k) =>
+      Call(rows, fault.collect { case (`k`, f) => f })
+    }
+    // the failed batch is not retried; a clean call follows the failure
+    if (calls.last.fault.isDefined) calls :+ Call(Seq.empty, None) else calls
+  }
+
+  /** Run `body` with the work directory's `name` entry swapped for a
+    * regular file, then put the entry back. */
+  private def withFileAt[A](work: String, name: String)(body: => A): A = {
+    val entry = new File(work, name).toPath
+    val aside = new File(work, s"$name.aside").toPath
+    if (Files.exists(entry)) Files.move(entry, aside)
+    Files.write(entry, Array[Byte](1))
+    try body
+    finally {
+      Files.delete(entry)
+      if (Files.exists(aside)) Files.move(aside, entry)
+    }
+  }
+
+  private val transactionsAt = Bitcoin.blockSchema.fieldIndex("transactions")
+
+  test("property: the destination equals Bitcoin.etl over every warehouse row, " +
+      "under random batch cuts, retries and one injected failure") {
+    val injected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val prop = forAllNoShrink(cases) { calls =>
+      val work = newWork()
+      var landed = Seq.empty[Row]
+      // the cumulative counts of every landed arrival: one etl row per
+      // transaction of each distinct block
+      def assertCounts(r: BlockEtl.Result) = {
+        val etlRows = landed.groupBy(_.getString(0)).values
+          .map(_.head.getSeq[Row](transactionsAt).size).sum
+        assert((r.warehouseRows, r.etlRows) == ((landed.size.toLong, etlRows.toLong)))
+      }
+      for (call <- calls) {
+        def run() = BlockEtl.run(spark, frame(call.rows), work, rotationSeconds = 600)
+        call.fault match {
+          case Some("log") =>
+            val log = new File(s"$work/transactions/${BlockEtl.LogName}").toPath
+            val before = if (Files.exists(log)) Some(Files.readAllBytes(log)) else None
+            val r = run()
+            landed ++= call.rows
+            assertCounts(r)
+            // the log as it was before the call
+            before.fold(Files.delete(log))(b => Files.write(log, b))
+            injected("log") += 1
+          case Some(dir) =>
+            intercept[Exception](withFileAt(work, dir)(run()))
+            injected(dir) += 1
+            if (dir != "warehouse") landed ++= call.rows
+          case None =>
+            val r = run()
+            landed ++= call.rows
+            assertCounts(r)
+        }
+      }
+      val warehouse = spark.read.schema(Bitcoin.blockSchema).parquet(s"$work/warehouse")
+      assert(warehouse.count() == landed.size)
+      assert(content(dest(work)) == content(Bitcoin.etl(warehouse)))
+      true
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(39L), prop)
+    assert(r.passed, r.status.toString)
+    // every kind of failure happened several times
+    assert(Faults.forall(injected(_) >= 3), injected)
+  }
+}
+
+object BitcoinSpec {
+  /** Gate of the concurrent-call test: its first call's tasks wait here. */
+  private val entered = new CountDownLatch(1)
+  private val release = new CountDownLatch(1)
 }
