@@ -37,4 +37,13 @@ object Session {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+
+  /** The width of every explicit `repartition(n)` in the program: the
+    * session's live `spark.sql.shuffle.partitions`. `builder` sets it to
+    * the core count, and a caller that changes it with `spark.conf.set`
+    * gets its own value. There is no literal fallback: one would be a
+    * second width decision that disagrees with the contract; a session
+    * built elsewhere gets Spark's own default. */
+  def partitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.Session
 import graft.text.Text
 
 /** MinHash + LSH near-duplicate detection (shingle -> minhash signature
@@ -47,8 +48,7 @@ object MinHash {
     * be all-null): filter on `size(shs) > 0` before [[signatures]]. */
   def shingled(docs: DataFrame): DataFrame =
     docs
-      .repartition(docs.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(docs.sparkSession))
       .select(col("doc_id"), col("text"),
         Text.shingleSetUdf(3)(col("text")).as("shs"))
 

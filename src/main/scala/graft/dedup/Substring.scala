@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Exact cross-document substring dedup at ARBITRARY alignment — the
   * "Deduplicating Training Data Makes Language Models Better"
@@ -52,12 +53,11 @@ object Substring {
       dfCap: Int = 64,
       minSupport: Int = 2,
       minLen: Int = 25): DataFrame = {
-    val spark = docs.sparkSession
     val d = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // compiled anchor kernel behind repartition: a single-file input
     // would otherwise run the whole pass on one core
     val anch = d
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(docs.sparkSession))
       .select(col("doc_id"),
         explode(graft.text.Winnow.anchorUdf(k, w)(col("text"))).as("a"))
       .select(col("doc_id"), col("a._1").as("p"), col("a._2").as("h"))

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Lloyd's k-means in exact fixed-point arithmetic, engine-replayable
   * bit-for-bit: coordinates become `floor(x * 1e6)` BIGINTs (the
@@ -141,8 +142,7 @@ object KMeansFx {
     * lifecycle if that matters. */
   private def prepare(ptsRaw: DataFrame): DataFrame =
     ptsRaw
-      .repartition(ptsRaw.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt, col("pid"))
+      .repartition(Session.partitions(ptsRaw.sparkSession), col("pid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Argmin of the fx squared distance over `cents` (sorted by cid

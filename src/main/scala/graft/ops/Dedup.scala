@@ -29,9 +29,4 @@ object Dedup {
     * etl.sh:12 has no ORDER BY). */
   def anySurvivor(df: DataFrame, keys: Seq[String]): DataFrame =
     df.dropDuplicates(keys)
-
-  /** Exact content dedup by fingerprint of `contentCol` (hash-groupBy). */
-  def byFingerprint(df: DataFrame, contentCol: Column, keep: Seq[Column]): DataFrame =
-    keepFirst(df.withColumn("__fp", md5(contentCol)), Seq(col("__fp")), keep)
-      .drop("__fp")
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.ops.SharedFrames
 import graft.text.Bpe
 
@@ -86,7 +86,7 @@ object BpeQueries {
     val (merges, _) = trained(s, d)
     val enc = Bpe.encodeUdf(merges.map(m => (m.x, m.y)))
     Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), enc(col("text")).as("e"))
       .select(col("doc_id"), col("e._1").as("n_words"),
         col("e._2").as("n_tokens"), col("e._3").as("toks"))
@@ -112,7 +112,7 @@ object BpeQueries {
     val (merges, _) = trained(s, d)
     val enc = Bpe.encodeUdf(merges.map(m => (m.x, m.y)))
     val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
     val words = docs
       .select(col("doc_id"), col("lang"),
         explode(split(lower(col("text")), " ")).as("w"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.dedup.MinHash
 import graft.text.Text
 
@@ -337,7 +337,7 @@ object DedupSim {
       |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
     val docs = Tables.load(s, d, "documents")
       // single-file input: spread the CPU-bound md5 kernel across cores
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
     val sim = graft.dedup.SimHash.withSimhash(s, docs, "doc_id", "toks")
@@ -711,7 +711,7 @@ object DedupSim {
       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin) { (s, d) =>
     val sh4 = Text.shingleSetUdf(4) // per-doc DISTINCT shingles, compiled
     val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
     val bench = docs.filter(col("doc_id") % 97 === 0)
       .select(explode(sh4(col("text"))).as("sh")).distinct()
     val train = docs.filter(col("doc_id") % 97 =!= 0)
@@ -751,7 +751,7 @@ object DedupSim {
       |ORDER BY passage""".stripMargin) { (s, d) =>
     val sh8 = Text.shingleListUdf(8) // repeats kept: n_occ counts them
     Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), explode(sh8(col("text"))).as("passage"))
       .groupBy("passage")
       .agg(countDistinct(col("doc_id")).as("n_docs"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ops.SharedFrames
 
 /** The co-purchase graph's shared edge build, materialized once per
@@ -35,7 +35,7 @@ object GraphShared {
     * the one big self-join is an SMJ over one exchange pair. */
   def pairs(s: SparkSession, d: String): DataFrame =
     SharedFrames.frame(d, "graph_pairs_ge2") {
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val li = Tables.load(s, d, "lineitem")
         .select("l_orderkey", "l_partkey").distinct()
       // a-priori prefilter: parts on >= 2 order lines. Part-grain

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ops.{BoundedWindow, SharedFrames, TopK}
 
 /** The retrieval-eval family's shared subplans, materialized once per
@@ -34,9 +34,6 @@ import graft.ops.{BoundedWindow, SharedFrames, TopK}
   */
 object RetrievalShared {
 
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
   /** Vocabulary size (distinct terms) — driver scalar, dictionary-
     * bounded. Reads the materialized [[tfFrame]], not its own corpus
     * pass (r14: vsize + the two tf references inside docvecs were
@@ -54,7 +51,7 @@ object RetrievalShared {
   private def tfFrame(s: SparkSession, d: String): DataFrame =
     SharedFrames.frame(d, "tf") {
       Tables.load(s, d, "documents")
-        .repartition(parts(s))
+        .repartition(Session.partitions(s))
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("term"))
         .filter(col("term") =!= "")
@@ -157,7 +154,7 @@ object RetrievalShared {
     SharedFrames.frame(d, "dense_top20") {
       import graft.ml.Embeddings.fxDot
       val withNorm = Tables.load(s, d, "embeddings")
-        .repartition(parts(s))
+        .repartition(Session.partitions(s))
         .withColumn("nrm",
           sqrt(fxDot(col("embedding"), col("embedding")).cast(DoubleType) / 1e15))
       val probes = withNorm.filter(col("vec_id") % 100 === 0)

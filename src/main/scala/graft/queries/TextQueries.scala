@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 4a — text analysis over `documents`: tokenization + counts,
@@ -265,7 +265,7 @@ object TextQueries {
     // single-file input: repartition FIRST so the compiled shingle UDF
     // runs on all cores, not one (the q_dedup_minhash lesson)
     val counts = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), explode(Text.shingleListUdf(3)(col("text"))).as("tri"))
       .groupBy("doc_id", "tri")
       .agg(count(lit(1)).as("n"))
@@ -498,7 +498,7 @@ object TextQueries {
       |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
     val bb = docs
       .select(col("doc_id"), col("lang"),
         explode(Text.shingleListUdf(2)(col("text"))).as("bg"))
@@ -551,7 +551,7 @@ object TextQueries {
       |FROM c2 JOIN c1 USING (w1)
       |WHERE n2 >= 5 ORDER BY w1, w2""".stripMargin) { (s, d) =>
     val bg = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(explode(Text.shingleListUdf(2)(col("text"))).as("bg"))
     val c2 = bg.groupBy("bg").agg(count(lit(1)).as("n2"))
       .select(
@@ -659,7 +659,7 @@ object TextQueries {
       |WHERE d.doc_id % 10 = 0
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
     val big = docs
       .select(col("doc_id"), explode(Text.shingleListUdf(2)(col("text"))).as("bg"))
       .select(col("doc_id"),
@@ -716,7 +716,7 @@ object TextQueries {
       |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
     val sh = docs.select(col("doc_id"),
       explode(Text.shingleSetUdf(3)(col("text"))).as("shingle"))
     val per = sh
@@ -791,7 +791,7 @@ object TextQueries {
       |ORDER BY tot.doc_id""".stripMargin) { (s, d) =>
     val excise = Text.repeatExciseUdf(RepW)
     Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), excise(col("text")).as("e"))
       .select(col("doc_id"), col("e._1").as("n_words"),
         col("e._2").as("n_kept"), col("e._3").as("n_excised"),
@@ -852,7 +852,7 @@ object TextQueries {
          |FROM lab l LEFT JOIN sc ON l.doc_id = sc.doc_id
          |ORDER BY l.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
-        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        .repartition(Session.partitions(s))
       val lab = docs.select(col("doc_id"),
         col("source").isin("src0", "src1", "src2").cast(LongType).as("label"),
         (md5(col("doc_id").cast("string").cast("binary")) < "cc")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.functions.Exact.ms
 import graft.ops.SharedFrames
 
@@ -77,7 +77,7 @@ object Wave10 {
     val v = Tables.load(s, d, "orders")
       // single-file input + the 7x multi-distinct Expand: spread across
       // cores before the aggregate (the q_dedup_minhash repartition lore)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(
       col("o_orderkey").as("k"), col("o_custkey").as("ck"),
       col("o_orderstatus").as("st"),
@@ -257,7 +257,7 @@ object Wave10 {
       |ORDER BY w1, w2""".stripMargin) { (s, d) =>
     val bg = Tables.load(s, d, "documents")
       // single-file input: spread the compiled shingle kernel across cores
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(explode(graft.text.Text.shingleListUdf(2)(col("text"))).as("bg"))
     val c2 = bg.groupBy("bg").agg(count(lit(1)).as("c12"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
@@ -485,7 +485,7 @@ object Wave10 {
          |WHERE $hamming <= 3
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       import graft.multimodal.Multimodal
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val decoded = Multimodal.decode(s,
         Multimodal.ppmAssetsFromDocuments(s, d).repartition(np))
       import s.implicits._
@@ -564,7 +564,7 @@ object Wave10 {
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val e = GraphShared.pairs(s, d).select("u", "v")
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     // load-bearing partitioning: every round joins labels against eu on
     // v, and the checkpointed LogicalRDD preserves the repartition's
     // hashpartitioning(v), so rounds shuffle only the node-sized labels

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 11 — link-analysis scoring, community quality, and the audio
   * half of the multimodal surface. Same determinism contract: integer
@@ -59,7 +59,7 @@ object Wave11 {
          |  UNION ALL
          |  SELECT 'hub' AS role, c AS id, score FROM h$HitsRounds)
          |ORDER BY role, id""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       // r15 (guide §2.4, two operations keyed the same way share one
       // exchange): repartition(c) FIRST, then dedup — hashpartitioning
       // on c satisfies the (c, s) clustered distribution, so the
@@ -210,7 +210,7 @@ object Wave11 {
       |FROM b GROUP BY 1, 2
       |ORDER BY asset_id, frame_no""".stripMargin) { (s, d) =>
     import graft.multimodal.Multimodal
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     import s.implicits._
     Multimodal.assetsFromDocuments(s, d).repartition(np)
       .flatMap { a =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 12 — causal inference, IR-quality evaluation, and keyphrase
   * extraction. Determinism: common-denominator exact divisions
@@ -244,7 +244,7 @@ object Wave12 {
       |FROM occ o JOIN osc sc ON sc.doc_id = o.doc_id AND sc.pid = o.pid
       |GROUP BY o.phrase HAVING COUNT(*) >= 2
       |ORDER BY phrase""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val stops = Seq("the", "and", "of", "to", "in", "is", "a")
     val pos = Tables.load(s, d, "documents")
       .repartition(np)

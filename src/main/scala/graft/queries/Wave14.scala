@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 14 — forecast-accuracy evaluation and behavioral entropy.
   * Both share machinery with their producers (the Holt chain, the
@@ -189,7 +189,7 @@ object Wave14 {
        |ORDER BY l_partkey""".stripMargin) { (s, d) =>
     def fxlog(c: org.apache.spark.sql.Column) =
       call_function("graft_fxlog2", c)
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val xy = Tables.load(s, d, "lineitem")
       .repartition(np)
       .select(col("l_partkey"),

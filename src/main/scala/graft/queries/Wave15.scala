@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 15 — corpus statistics and behavioral mining: PMI collocations
@@ -65,7 +65,7 @@ object Wave15 {
        |ORDER BY w1, w2""".stripMargin) { (s, d) =>
     def fxlog(c: org.apache.spark.sql.Column) =
       call_function("graft_fxlog2", c)
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val docs = Tables.load(s, d, "documents").repartition(np)
     val c1 = docs.select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n1"))
@@ -388,7 +388,7 @@ object Wave15 {
       |  UNION ALL SELECT eu.v, d3.dist + eu.w FROM d3
       |    JOIN eu ON eu.u = d3.node) GROUP BY 1)
       |SELECT node, dist FROM d4 ORDER BY node""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val e = GraphShared.pairs(s, d)
       .select(col("u"), col("v"), expr("1000000 div n").as("w"))
     val eu = e.select("u", "v", "w")

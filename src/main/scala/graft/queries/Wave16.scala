@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 16 — supervised-ML building blocks and series mining, all in
@@ -78,7 +78,7 @@ object Wave16 {
       |      ORDER BY score_ppm DESC, bin) = 1 THEN 1 ELSE 0 END
       |    AS BIGINT) AS is_best
       |FROM sc ORDER BY feature, bin""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val li = Tables.load(s, d, "lineitem").repartition(np)
       .select(col("l_quantity").cast("long").as("qty"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("pc"),
@@ -251,7 +251,7 @@ object Wave16 {
        |    AS r2_ppm
        |FROM m WHERE nr * sxx - CAST(sx AS HUGEINT) * sx > 0
        |ORDER BY source""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val cnt = Tables.load(s, d, "documents").repartition(np)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("n"))

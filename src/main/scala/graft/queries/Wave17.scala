@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 17 — the model-adjacent quartet: multiclass Naive Bayes
@@ -83,7 +83,7 @@ object Wave17 {
        |  CAST(CASE WHEN lang = true_lang THEN 1 ELSE 0 END AS BIGINT)
        |    AS correct
        |FROM best WHERE rk = 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val lab = Tables.load(s, d, "documents").repartition(np)
       .select(col("doc_id"), col("lang"), col("text"),
         (md5(col("doc_id").cast("string")) < "cc").cast("long")
@@ -181,7 +181,7 @@ object Wave17 {
          |$rounds
          |SELECT node, pr FROM p$PprRounds ORDER BY node""".stripMargin) {
       (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       // Suite-shared edge build (GraphShared); degrees checkpoint
       // lazily off it and BROADCAST back, so each round is one narrow
       // scan of cached edges + two broadcast joins + the v-keyed
@@ -357,7 +357,7 @@ object Wave17 {
        |  ROW_NUMBER() OVER (ORDER BY mi_n_fx DESC, w) AS rnk
        |FROM mi ORDER BY w""".stripMargin) { (s, d) =>
     import graft.ops.BoundedWindow
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val lab = Tables.load(s, d, "documents").repartition(np)
       .filter(md5(col("doc_id").cast("string")) < "cc")
       .select(col("doc_id"), col("text"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 18 — pipeline-infrastructure operators: TextRank-style
   * extractive chunk selection (context compression for LLM corpora)
@@ -76,7 +76,7 @@ object Wave18 {
          |  md5(chunk) AS chunk_fp
          |FROM rk WHERE rnk <= 2 ORDER BY doc_id, rnk""".stripMargin) {
       (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val tk = Tables.load(s, d, "documents").repartition(np)
         .select(col("doc_id"), graft.text.Text.tokens(col("text")).as("toks"))
       val ch = tk
@@ -208,7 +208,7 @@ object Wave18 {
       |FROM merged m JOIN rebuilt r ON r.o_custkey = m.o_custkey
       |ORDER BY m.o_custkey""".stripMargin) { (s, d) =>
     import graft.functions.Exact
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val o = Tables.load(s, d, "orders").repartition(np)
       .select(col("o_custkey"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 19 — multi-source graph sampling and boosted-stump training:
   * the Eppstein–Wang closeness-sampling posture (k seeds, one shared
@@ -58,7 +58,7 @@ object Wave19 {
          |SELECT d.seed, d.node, d.dist, cl.reached, cl.closeness_ppm
          |FROM d$ClosenessHops d JOIN cl ON cl.seed = d.seed
          |ORDER BY d.seed, d.node""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val eu = GraphShared.symmetric(s, d).select("u", "v")
         .repartition(np, col("u"))
         .persist()
@@ -189,7 +189,7 @@ object Wave19 {
       |  UNION ALL
       |  SELECT CAST(2 AS BIGINT), b.*, s2.sse_e6 FROM best2 b, s2)
       |ORDER BY rnd""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val li = Tables.load(s, d, "lineitem").repartition(np)
       .select(col("l_quantity").cast("long").as("qty"),
         round(col("l_discount") * 100, 0).cast("long").as("dc"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 20 — governance operators: the k-anonymity / l-diversity
   * privacy audit (Sweeney 2002; Machanavajjhala et al. 2007) and
@@ -54,7 +54,7 @@ object Wave20 {
       |FROM eq, tot
       |ORDER BY segment, nation, bal_band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val byCust = Window.partitionBy("o_custkey")
       .orderBy(col("cnt").desc, col("o_orderpriority").asc)
     val sens = Tables.load(s, d, "orders").repartition(np)
@@ -116,7 +116,7 @@ object Wave20 {
       |  CAST(CASE WHEN as_is > 0 THEN (as_is - as_was) * 1000000 // as_is
       |    END AS BIGINT) AS restate_ppm
       |FROM m ORDER BY month""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     Tables.load(s, d, "orders").repartition(np)
       .select(
         (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))

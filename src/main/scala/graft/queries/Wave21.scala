@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 21 — sequence decoding and factorization: per-user HMM Viterbi
   * MAP decoding (Viterbi 1967; the Forney 1973 trellis form) over each
@@ -108,7 +108,7 @@ object Wave21 {
          |  CASE WHEN s6 = 0 THEN 'C' ELSE 'I' END AS final_state
          |FROM bt5 ORDER BY user_id""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val w = Window.partitionBy("user_id")
         .orderBy(graft.functions.Exact.ms(col("ts")).desc, col("event_id").desc)
       val ranked = Tables.load(s, d, "events").repartition(np, col("user_id"))
@@ -182,7 +182,7 @@ object Wave21 {
          |  CAST(FLOOR(SQRT(CAST(SUM(err * err) AS BIGINT) // COUNT(*)))
          |    AS BIGINT) AS rmse_c
          |FROM e GROUP BY 1, 2 ORDER BY custkey""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val li = Tables.load(s, d, "lineitem").repartition(np)
       val ord = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 23 — closed-form estimation: per-group two-feature OLS via
   * Cramer's rule over exact central moments, and empirical-Bayes
@@ -81,7 +81,7 @@ object Wave23 {
          |  FROM base GROUP BY 1)
          |${tail("//", a => s"CAST($a AS HUGEINT)")}""".stripMargin) {
       (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val li = Tables.load(s, d, "lineitem").repartition(np)
       val part = Tables.load(s, d, "part")
         .select(col("p_partkey").as("l_partkey"),
@@ -141,7 +141,7 @@ object Wave23 {
       |      (r.conv * 1000000 + k.m * k.kk) // (r.n + k.kk)
       |    ELSE r.raw_ppm END AS BIGINT) AS smoothed_ppm
       |FROM r, k ORDER BY r.user_id""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val r = Tables.load(s, d, "events").repartition(np, col("user_id"))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"),

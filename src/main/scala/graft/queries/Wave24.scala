@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 24 — similarity beyond pointwise metrics: dynamic-time-warping
   * distance between nation revenue curves (Sakoe & Chiba 1978), and
@@ -74,7 +74,7 @@ object Wave24 {
          |$cellSql
          |SELECT na, nb, c_${DtwLen}_$DtwLen AS dtw
          |FROM d_${DtwLen}_$DtwLen ORDER BY na, nb""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val cust = Tables.load(s, d, "customer")
         .select(col("c_custkey").as("o_custkey"), col("c_nationkey").as("nk"))
       val nm = Tables.load(s, d, "orders").repartition(np)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 25 — distributed graph construction and game-theoretic
   * attribution: Boruvka minimum spanning forest over the shared
@@ -80,7 +80,7 @@ object Wave25 {
          |SELECT DISTINCT u, v, w FROM (
          |  $sels) sel
          |ORDER BY u, v""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       // EAGER checkpoint + a FRESH LogicalRDD leaf per carried frame.
       // localCheckpoint alone is NOT enough here: LogicalRDD.fromDataset
       // SNAPSHOTS the origin plan's stats into the leaf, and sizeInBytes
@@ -240,7 +240,7 @@ object Wave25 {
          |  UNION ALL
          |  SELECT 'view', CAST(${phi('v')} AS BIGINT), nv FROM piv) z
          |ORDER BY channel""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val t = Tables.load(s, d, "events").repartition(np, col("user_id"))
         .groupBy("user_id")
         .agg(

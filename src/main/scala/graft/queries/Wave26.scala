@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 26 — graph centrality and density clustering: sampled Brandes
   * betweenness (Brandes 2001; the k-source radius-bounded form every
@@ -89,7 +89,7 @@ object Wave26 {
          |SELECT node, CAST(SUM(delta) AS BIGINT) AS bc_fx
          |FROM (SELECT * FROM out_s1 UNION ALL SELECT * FROM out_s2) o
          |GROUP BY node ORDER BY node""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val e = GraphShared.pairs(s, d).select("u", "v")
       val eu = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(np, col("u"))
@@ -204,7 +204,7 @@ object Wave26 {
          |       ELSE 'noise' END AS role
          |FROM cls c LEFT JOIN bord ON bord.vec_id = c.vec_id
          |ORDER BY c.vec_id""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val pt = Tables.load(s, d, "embeddings").repartition(np)
         .select(col("vec_id"),
           expr("CAST(FLOOR(CAST(embedding[0] AS DOUBLE) * 1000) AS BIGINT)")

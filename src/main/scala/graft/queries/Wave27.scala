@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 27 — product-surface operators: the autocomplete suggestion
   * index (prefix -> top-k completions by revenue), a density-ratio
@@ -40,7 +40,7 @@ object Wave27 {
       |SELECT prefix, rank, name, rev_c FROM rk WHERE rank <= 3
       |ORDER BY prefix, rank""".stripMargin) { (s, d) =>
     import graft.ops.TopK
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val part = Tables.load(s, d, "part")
       .select(col("p_partkey").as("l_partkey"), col("p_name").as("name"))
     val rev = Tables.load(s, d, "lineitem").repartition(np)
@@ -104,7 +104,7 @@ object Wave27 {
          |FROM pt LEFT JOIN nn ON nn.p = pt.vec_id
          |        LEFT JOIN ms ON ms.p = pt.vec_id
          |ORDER BY pt.vec_id""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val pt = Tables.load(s, d, "embeddings").repartition(np)
         .select(col("vec_id"),
           expr("CAST(FLOOR(CAST(embedding[0] AS DOUBLE) * 1000) AS BIGINT)")
@@ -178,7 +178,7 @@ object Wave27 {
       |WHERE c.cum >= (t.n - 1) * d.decile // 10 + 1
       |GROUP BY 1, 2, 4 ORDER BY d.decile""".stripMargin) { (s, d) =>
     import graft.ops.BoundedWindow
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val ms = graft.functions.Exact.ms _
     val u = Tables.load(s, d, "events").repartition(np, col("user_id"))
       .groupBy("user_id")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 28 — assignment and apportionment: parallel greedy bipartite
   * matching by the local-max rule (Hoepman 2004; the MapReduce
@@ -61,7 +61,7 @@ object Wave28 {
          |SELECT e0.s, e0.p, e0.a FROM mm JOIN e0 ON e0.s = mm.s
          |  AND e0.p = mm.p
          |ORDER BY e0.s, e0.p""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       // PLAIN localCheckpoint (r13, the q_graph_scc lesson): the
       // fresh-leaf rebuild's per-read Row round-trip taxes the
       // edge-sized frame once per matching round; per-round refs are

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 29 — econometrics and survey statistics: instrumental-variable
   * estimation (Wald 1940; the 2SLS single-instrument closed form) and
@@ -58,7 +58,7 @@ object Wave29 {
          |  FROM base GROUP BY 1)
          |${tail("//", a => s"CAST($a AS HUGEINT)")}""".stripMargin) {
       (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val part = Tables.load(s, d, "part")
         .select(col("p_partkey").as("l_partkey"),
           col("p_size").cast("long").as("z"))

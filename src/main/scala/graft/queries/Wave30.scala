@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 30 — audit and alignment: the duplicate-payment detector
   * (same payer, same amount, near-in-time — the accounts-payable
@@ -34,7 +34,7 @@ object Wave30 {
       |FROM o a JOIN o b ON b.ck = a.ck AND b.band = a.band
       |  AND a.ok < b.ok AND ABS(a.day - b.day) <= 365
       |ORDER BY a.ck, ok_a, ok_b""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val o = Tables.load(s, d, "orders").repartition(np)
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"),
         expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) div 100000")
@@ -116,7 +116,7 @@ object Wave30 {
          |  CAST(c_${AlnLen}_$AlnLen AS BIGINT) AS score
          |FROM d_${AlnLen}_$AlnLen""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val ev = Tables.load(s, d, "events").repartition(np, col("user_id"))
       val cnt = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
       val top2 = cnt.withColumn("rk", row_number().over(

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 31 — curation signals and featurization: integer Flesch-style
   * readability scoring (Flesch 1948; the education-value filter in
@@ -50,7 +50,7 @@ object Wave31 {
       |         - (84600 * sylls) // words >= 30000 THEN 'standard'
       |       ELSE 'hard' END AS band
       |FROM s ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     Tables.load(s, d, "documents").repartition(np)
       .select(col("doc_id"),
         lower(coalesce(col("text"), lit(""))).as("t"))
@@ -111,7 +111,7 @@ object Wave31 {
        |  CAST((g.v - g.occupied) * 1000000 // g.v AS BIGINT)
        |    AS collision_ppm
        |FROM bk, g ORDER BY bk.bucket""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val tf = Tables.load(s, d, "documents").repartition(np)
       .select(explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
         .as("term"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 32 — cohort economics: cumulative lifetime-value curves per
   * signup cohort (the revenue companion to q_cohort_retention's
@@ -46,7 +46,7 @@ object Wave32 {
       |  CAST(w.cum_rev_c // cs.cohort_n AS BIGINT) AS ltv_per_user_c
       |FROM w JOIN cs ON cs.cohort_wk = w.cohort_wk
       |ORDER BY w.cohort_wk, w.week_offset""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val e = Tables.load(s, d, "events").repartition(np, col("user_id"))
       .select(col("user_id"),
         expr("CAST(unix_millis(CAST(ts AS TIMESTAMP)) div 604800000 AS BIGINT)")

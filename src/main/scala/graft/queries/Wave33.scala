@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 33 — the canonical TPC-H decision-support shapes on this
   * schema: Q3 (shipping-priority top-10 behind a 3-way join) and Q5
@@ -42,7 +42,7 @@ object Wave33 {
        |GROUP BY 1, 3, 4
        |ORDER BY rev_micros DESC, odate_ms, l.l_orderkey
        |LIMIT 10""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val cust = Tables.load(s, d, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey").as("o_custkey"))
@@ -96,7 +96,7 @@ object Wave33 {
       |  AND EXTRACT(YEAR FROM o.o_orderdate) = 1997
       |GROUP BY 1 ORDER BY rev_micros DESC, n.n_name""".stripMargin) {
     (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val nations = Tables.load(s, d, "nation")
       .join(broadcast(Tables.load(s, d, "region")
         .filter(col("r_name") === "ASIA")

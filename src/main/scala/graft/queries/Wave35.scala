@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 35 — local graph structure and inequality curves: per-node
   * clustering coefficients (Watts & Strogatz 1998) over the shared
@@ -45,7 +45,7 @@ object Wave35 {
       |    END AS BIGINT) AS cc_ppm
       |FROM deg d LEFT JOIN tri t ON t.u = d.u
       |ORDER BY node""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val e = GraphShared.pairs(s, d).select("u", "v")
     val eu = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .repartition(np, col("u"))
@@ -98,7 +98,7 @@ object Wave35 {
       |    AS cum_rev_ppm
       |FROM c, t ORDER BY c.band""".stripMargin) { (s, d) =>
     import graft.ops.BoundedWindow
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val cu = Tables.load(s, d, "orders").repartition(np)
       .groupBy("o_custkey")
       .agg(sum(expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 36 — traffic shape: the Fano factor (index of dispersion,
   * variance over mean of per-hour arrival counts) per event type —
@@ -38,7 +38,7 @@ object Wave36 {
       |  CAST((s2 - CAST(total AS HUGEINT) * total // n_hours) * 1000000
       |    // total AS BIGINT) AS fano_ppm
       |FROM m ORDER BY event_type""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val h = Tables.load(s, d, "events").repartition(np)
       .groupBy(col("event_type"),
         expr("CAST(unix_millis(CAST(ts AS TIMESTAMP)) div 3600000 AS BIGINT)")

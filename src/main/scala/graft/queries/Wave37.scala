@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 37 — the pricing lane's analytic consumer: a cross-exchange
   * end-of-day as-of spread (arbitrage) report over the reference's
@@ -76,7 +76,7 @@ object Wave37 {
        |FROM f h JOIN f l ON l.day_ms = h.day_ms AND l.rlo = 1
        |WHERE h.rhi = 1 AND h.n_priced = 5
        |ORDER BY spread_cents DESC, day LIMIT 20""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val q = Tables.load(s, d, "orders").repartition(np)
       .select((col("o_orderkey") % 5).cast("long").as("ei"),
         graft.functions.Exact.ms(col("o_orderdate")).as("day_ms"),

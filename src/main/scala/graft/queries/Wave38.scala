@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 38 — training-data curation economics: coreset selection
   * (which K points summarize the embedding corpus?) and data
@@ -63,7 +63,7 @@ object Wave38 {
          |$rounds
          |SELECT CAST(round AS BIGINT) AS round, vec_id, d2 FROM (
          |$readout) t ORDER BY round""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val pts = Tables.load(s, d, "embeddings").repartition(np)
         .select(col("vec_id"), col("embedding"))
       // the same float->double->*1e6->floor chain as KMeansFx/pts CTE
@@ -156,7 +156,7 @@ object Wave38 {
        |GROUP BY 1, 2 ORDER BY shap_nano_total DESC, s.vec_id
        |LIMIT 20""".stripMargin) { (s, d) =>
     import graft.ml.Embeddings.fxDot
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val emb = Tables.load(s, d, "embeddings")
     val probes = emb.filter(col("vec_id") % 100 === 7)
       .select(col("vec_id").as("probe_id"), col("label").as("plabel"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 39 — experiment readouts and distribution drift: CUPED
   * variance reduction (Deng et al., WSDM 2013 — the pre-period
@@ -97,7 +97,7 @@ object Wave39 {
          |    CAST(SUM(CASE WHEN arm = 'b' THEN post ELSE 0 END) AS BIGINT) AS ssb
          |  FROM u)
          |${tail("//", a => s"CAST($a AS HUGEINT)")}""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val u = Tables.load(s, d, "orders").repartition(np, col("o_custkey"))
         .select(col("o_custkey").as("ck"),
           graft.functions.Exact.ms(col("o_orderdate")).as("ems"),
@@ -161,7 +161,7 @@ object Wave39 {
          |cnt AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n
          |  FROM embeddings GROUP BY 1)
          |${tail("//", a => s"CAST($a AS HUGEINT)")}""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val emb = Tables.load(s, d, "embeddings").repartition(np)
       val dim = emb.select(col("label"),
           posexplode(transform(col("embedding"),

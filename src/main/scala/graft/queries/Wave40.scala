@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 40 — ranking agreement and observational causal effect:
   * rank-biased overlap between the suite's sparse and dense rankings
@@ -134,7 +134,7 @@ object Wave40 {
          |    CAST(SUM(CASE WHEN t = 0 THEN w ELSE 0 END) AS BIGINT) AS swc
          |  FROM w)
          |${tail("//", a => s"CAST($a AS HUGEINT)")}""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val cust = Tables.load(s, d, "customer")
         .select(col("c_custkey").as("o_custkey"),
           col("c_mktsegment").as("bin"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 41 — exact sliding-window distincts and label-noise auditing:
   * trailing-7-day active users per day via the island/difference-array
@@ -59,7 +59,7 @@ object Wave41 {
        |FROM spine sp LEFT JOIN dd ON dd.day = sp.day
        |LEFT JOIN daily ON daily.day = sp.day
        |ORDER BY sp.day""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val ud = Tables.load(s, d, "events").repartition(np, col("user_id"))
       .select(col("user_id"),
         expr("unix_millis(CAST(ts AS TIMESTAMP)) div 86400000").as("day"))
@@ -131,7 +131,7 @@ object Wave41 {
        |    // SUM(n) OVER (PARTITION BY given) AS BIGINT) AS noise_ppm
        |FROM cm ORDER BY given, knn""".stripMargin) { (s, d) =>
     import graft.ml.Embeddings.fxDot
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val emb = Tables.load(s, d, "embeddings")
     val au = emb.filter(col("vec_id") % 20 === 3)
       .select(col("vec_id").as("probe_id"), col("label").as("given"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 42 — leaderboard dynamics and absorption analysis: the daily
   * trending top-k over a rolling shipment window (rank + rank delta),
@@ -50,7 +50,7 @@ object Wave42 {
        |SELECT day, rnk, pk AS partkey, trail7, n AS n_today, prev_rank
        |FROM dl WHERE rnk <= $TrendK ORDER BY day, rnk""".stripMargin) {
     (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val pc = Tables.load(s, d, "lineitem").repartition(np, col("l_partkey"))
       .select(col("l_partkey").as("pk"),
         expr("unix_millis(CAST(l_shipdate AS TIMESTAMP)) div 86400000")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 46 — directed-graph structure: strongly connected components
   * of the linenumber-oriented co-purchase flow digraph (fixed-round
@@ -87,7 +87,7 @@ object Wave46 {
          |    AS scc_size
          |FROM allv a LEFT JOIN sz s ON s.scc = a.scc
          |ORDER BY a.v""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       // LAZY checkpoints: compute-once persist semantics per frame,
       // but the materializations fold into the final action's DAG
       // instead of eagerly scheduled jobs (the q_graph_labelprop
@@ -277,7 +277,7 @@ object Wave46 {
       |FROM e JOIN deg du ON du.x = e.u JOIN deg dv ON dv.x = e.v
       |LEFT JOIN tri t ON t.u = e.u AND t.v = e.v
       |ORDER BY e.u, e.v""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val e = GraphShared.pairs(s, d)
     val sym = e.select(col("u"), col("v"))
       .unionAll(e.select(col("v").as("u"), col("u").as("v")))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 58 — two classics the registry lacked: the top principal
   * component of the embedding corpus by integer power iteration (the
@@ -92,7 +92,7 @@ object Wave58 {
          |  ray.lam_c, CAST(nn.n AS BIGINT) AS n_vec
          |FROM v$Rounds a JOIN v${Rounds - 1} b ON b.i = a.i, ray, nn
          |ORDER BY dim""".stripMargin) { (s, d) =>
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val pts = Tables.load(s, d, "embeddings").repartition(np)
         .select(col("vec_id"), col("embedding"))
       // upper-triangle pair products in one compiled pass: 2080 cells,

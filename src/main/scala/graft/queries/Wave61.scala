@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 61 — TPC-H Q10 (returned-item reporting, the third canonical
   * decision-support shape after Wave33's Q3/Q5) and Neyman-allocated
@@ -46,7 +46,7 @@ object Wave61 {
        |GROUP BY 1, 2, 4, 5
        |ORDER BY rev_micros DESC, c.c_custkey
        |LIMIT 20""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val cust = Tables.load(s, d, "customer")
       .join(broadcast(Tables.load(s, d, "nation")
         .select(col("n_nationkey").as("c_nationkey"), col("n_name"))),

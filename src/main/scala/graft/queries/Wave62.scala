@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 62 — embedding-space isotropy (is the representation space
   * collapsed onto a few directions? Ethayarajh EMNLP'19 made this the
@@ -64,7 +64,7 @@ object Wave62 {
        |  CAST(CAST(h.h_q30 AS HUGEINT) * 1000000 // 6442450944 AS BIGINT)
        |    AS iso_ppm
        |FROM vr, tr, h ORDER BY dim""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val fxUdf = udf { v: Seq[Float] =>
       v.map(x => math.floor(x.toDouble * 1e6).toLong)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 65 — prefix-filtered EXACT set-similarity join (PPJoin-lite:
@@ -97,7 +97,7 @@ object Wave65 {
        |        JOIN sz sb ON cm.doc_b = sb.doc_id
        |WHERE $TDenom * cm.common >= $TNumer * (sa.n + sb.n - cm.common)
        |ORDER BY cm.doc_a, cm.doc_b""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val docs = Tables.load(s, d, "documents")
       .repartition(np)
       .select(col("doc_id"), Text.shingleSetUdf(3)(col("text")).as("shs"))

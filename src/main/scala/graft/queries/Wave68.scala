@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 68 — per-document duplicated-passage COVERAGE: the
@@ -51,7 +51,7 @@ object Wave68 {
       |ORDER BY tot.doc_id""".stripMargin) { (s, d) =>
     val sh8 = Text.shingleListUdf(8) // positions kept (repeats count)
     val sh = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), explode(sh8(col("text"))).as("passage"))
     val dupg = sh.select("passage", "doc_id").distinct()
       .groupBy("passage").agg(count(lit(1)).as("nd"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.text.Text
 
 /** Wave 70 — LLM-evaluation aggregation primitives, part 2: the
@@ -74,7 +74,7 @@ object Wave70 {
     * all-pairs, nothing data-sized on the driver. */
   private def pairStats(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(s, dir, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), col("lang"),
         expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
     val byLang = Window.partitionBy("lang").orderBy("doc_id")
@@ -86,7 +86,7 @@ object Wave70 {
       d.select(col("doc_id").as("rid"),
         size(col("toks")).cast("long").as("r_len")), "rid")
     def grams(n: Int): DataFrame = Tables.load(s, dir, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"),
         explode(Text.shingleListUdf(n)(col("text"))).as("gram"))
       .groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))

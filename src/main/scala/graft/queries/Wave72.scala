@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 72 — retrieval/curation scoring, part 3: Mean Reciprocal Rank
   * (Voorhees TREC-8 1999; the first-relevant-hit metric next to the
@@ -94,7 +94,7 @@ object Wave72 {
        |JOIN lg lb ON lb.n = cc.c_cw * ns.n_s
        |GROUP BY cs.source ORDER BY cs.source""".stripMargin) { (s, d) =>
     val tok = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("source"),
         explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
           .as("w"))

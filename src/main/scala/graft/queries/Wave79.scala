@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 
 /** Wave 79 — LLM-text provenance: green-list watermark detection
   * (Kirchenbauer et al. 2023 "A Watermark for Large Language Models";
@@ -54,7 +54,7 @@ object Wave79 {
       |  CAST(SUM(g) * 1000000 // SUM(n) AS BIGINT) AS green_ppm
       |FROM fl GROUP BY 1 ORDER BY lang""".stripMargin) { (s, d) =>
     val tok = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), col("lang"),
         explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
           .as("w"))

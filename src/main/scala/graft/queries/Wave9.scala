@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Session, Tables}
 import graft.functions.Exact._
 
 /** Wave 9 — exact-integer time-series smoothing, sequential change
@@ -242,7 +242,7 @@ object Wave9 {
       |FROM pb p LEFT JOIN nb n ON n.bucket = p.bucket
       |ORDER BY p.bucket""".stripMargin) { (s, d) =>
     val bg = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"),
         explode(graft.text.Text.shingleListUdf(2)(col("text"))).as("bg"))
     val pb = bg.groupBy(expr("doc_id div 16").as("bucket"))
@@ -398,7 +398,7 @@ object Wave9 {
       |       COUNT(DISTINCT url) AS n_raw_variants
       |FROM canon GROUP BY curl ORDER BY curl""".stripMargin) { (s, d) =>
     val raw = Tables.load(s, d, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(col("doc_id"), concat(
         expr("CASE doc_id % 3 WHEN 0 THEN 'http' WHEN 1 THEN 'HTTP' ELSE 'hTTp' END"),
         lit("://"),
@@ -479,7 +479,7 @@ object Wave9 {
       // sidesteps the statless-LogicalRDD trap where a localCheckpoint
       // frame can't auto-broadcast and each semi-join re-shuffled the
       // edge cache: 4.0s -> ~1.5s isolated sf0.1).
-      val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val np = Session.partitions(s)
       val eu = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(np, col("u"))
         .persist() // load-bearing: 2R+2 semi-joins reuse one edge build
@@ -868,7 +868,7 @@ object Wave9 {
       |  ON ed.doc_id = q.doc_id
       |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
     import graft.text.Text
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val docs = Tables.load(s, d, "documents").select("doc_id", "text")
     val base = docs
       .unionAll(docs.filter(col("doc_id") % 83 === 5)
@@ -986,7 +986,7 @@ object Wave9 {
         // single-file scan: without this the 200x replica fan-out runs
         // as ONE narrow chain on one core (138s at sf0.1 — the
         // CLAUDE.md trap)
-        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        .repartition(Session.partitions(s))
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
           // ONE md5 per ROW (48 bits), then per-replica mixing by an
@@ -1232,7 +1232,7 @@ object Wave9 {
       |       n.j AS neg_slot, g.w AS negative
       |FROM negs n JOIN negc g ON n.u >= g.lo AND n.u < g.hi
       |ORDER BY n.doc_id, pos, n.off, neg_slot""".stripMargin) { (s, d) =>
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val np = Session.partitions(s)
     val tok = Tables.load(s, d, "documents")
       .repartition(np)
       .select(col("doc_id"),

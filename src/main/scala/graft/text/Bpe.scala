@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Distributed BPE tokenizer training (merge learning).
   *
@@ -79,7 +79,7 @@ object Bpe {
   /** `documents` -> (w, freq): the single corpus-wide shuffle. */
   def wordFreq(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(s))
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= MaxWordLen)
       .groupBy("w")

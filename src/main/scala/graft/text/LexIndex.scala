@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Persisted inverted text index — build once, serve many: the lexical
   * counterpart of [[graft.ml.Pq.writeIvfPqIndex]]. The postings table
@@ -25,9 +26,8 @@ object LexIndex {
 
   private def postings(docs: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
     val tf = docs
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(Session.partitions(docs.sparkSession))
       .select(col(idCol).as("doc_id"),
         explode(split(lower(col(textCol)), " ")).as("term"))
       .filter(col("term") =!= "")

@@ -32,6 +32,27 @@ class RegistrySpec extends AnyFunSuite {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
   }
 
+  test("the shuffle width is decided once: only graft/Session.scala " +
+    "names spark.sql.shuffle.partitions, and Session.partitions reads " +
+    "the session's live value") {
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val readers = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains(key))
+      .map(p => root.relativize(p).toString).toList
+    assert(readers == List("graft/Session.scala"),
+      s"files naming $key outside graft.Session: $readers")
+    val conf = SharedSpark.spark.conf
+    assert(Session.partitions(SharedSpark.spark) == conf.get(key).toInt)
+    val configured = conf.get(key)
+    try {
+      conf.set(key, "3")
+      assert(Session.partitions(SharedSpark.spark) == 3)
+    } finally conf.set(key, configured)
+  }
+
   test("entry (flagship) smoke: rows > 0 on sf0.001") {
     assert(SparkEntry.entry(SharedSpark.spark).count() > 0)
   }
