@@ -321,10 +321,8 @@ object KMeansFx {
 
   /** The same chain over a SUBSPACE slice `embedding[offset+1 ..
     * offset+dim]` with every CTE name suffixed — product quantization
-    * ([[Pq]]) runs one chain per subspace in a single WITH. Emits
-    * byte-identical SQL to the historical generator when offset=0 and
-    * sfx="" (the q_kmeans_fx / q_dedup_semantic / q_ann_ivf oracles
-    * are unchanged). */
+    * ([[Pq]]) runs one chain per subspace in a single WITH; offset=0
+    * and sfx="" give the plain [[oracleCtes]] chain. */
   def oracleCtesSlice(
       kExpr: String, iters: Int, dim: Int, offset: Int, sfx: String): String = {
     val idx = if (offset == 0) "i" else s"i + $offset"
@@ -339,20 +337,22 @@ object KMeansFx {
     * residual quantization ([[Pq.ivfAdcTopK]]'s oracle) runs
     * per-subspace chains over integer residuals rather than embedding
     * slices. `srcSql` must yield one row per (vec_id, i in 1..dim)
-    * with v already in fx longs. */
+    * with v already in fx longs. Every CTE is AS MATERIALIZED: DuckDB
+    * otherwise inlines each reference and re-plans the whole chain per
+    * round (q_ann_pq's oracle took minutes at sf0.01). */
   def oracleCtesFromSrc(
       srcSql: String, kExpr: String, iters: Int, sfx: String): String = {
     val head =
-      s"""pts$sfx AS ($srcSql),
-         |c0$sfx AS (SELECT vec_id AS cid, i, v FROM pts$sfx WHERE vec_id < $kExpr)""".stripMargin
+      s"""pts$sfx AS MATERIALIZED ($srcSql),
+         |c0$sfx AS MATERIALIZED (SELECT vec_id AS cid, i, v FROM pts$sfx WHERE vec_id < $kExpr)""".stripMargin
     val its = (1 to iters).map { j =>
-      s"""a$j$sfx AS (SELECT p.vec_id, c.cid, SUM((p.v - c.v) * (p.v - c.v)) AS dist
+      s"""a$j$sfx AS MATERIALIZED (SELECT p.vec_id, c.cid, SUM((p.v - c.v) * (p.v - c.v)) AS dist
          |  FROM pts$sfx p JOIN c${j - 1}$sfx c ON p.i = c.i GROUP BY p.vec_id, c.cid),
-         |s$j$sfx AS (SELECT vec_id, cid, dist FROM (
+         |s$j$sfx AS MATERIALIZED (SELECT vec_id, cid, dist FROM (
          |    SELECT vec_id, cid, dist,
          |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
          |    FROM a$j$sfx) WHERE rn = 1),
-         |c$j$sfx AS (SELECT s.cid, p.i,
+         |c$j$sfx AS MATERIALIZED (SELECT s.cid, p.i,
          |    CAST(((SUM(p.v) + 2000000 * COUNT(*)) // COUNT(*)) - 2000000 AS BIGINT) AS v
          |  FROM s$j$sfx s JOIN pts$sfx p ON s.vec_id = p.vec_id GROUP BY s.cid, p.i)""".stripMargin
     }

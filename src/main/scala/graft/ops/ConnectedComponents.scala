@@ -21,34 +21,35 @@ import org.apache.spark.sql.functions._
   * per round instead of edge rewrites. One round = two shuffle joins +
   * one aggregate — all-scalable primitives, no driver-side graph.
   *
-  * Each round ends in `localCheckpoint` — iterative plans otherwise
-  * accumulate lineage and replan the whole history every action.
+  * The rounds run through [[Iterate]] with `SUM(component)` as the
+  * fixed-point witness: labels only decrease and the node set is fixed,
+  * so the sum is unchanged exactly when no label moved.
   */
 object ConnectedComponents {
 
-  /** Labels every node of `edges` (cols `src`, `dst`; direction
+  /** Round cap; pointer doubling converges in O(log n) rounds. */
+  private val MaxIter = 64
+
+  /** Labels every node of `edges` (long cols `src`, `dst`; direction
     * ignored) plus every node of `nodes` with its component's minimum
     * node id. Returns (node, component). */
   def labels(
       nodes: DataFrame, // single long col "node" (includes isolated nodes)
-      edges: DataFrame, // long cols "src", "dst"
-      maxIter: Int = 64): DataFrame = {
+      edges: DataFrame): DataFrame = {
     // symmetric closure once, checkpointed: reused every round
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = nodes.select(col("node"), col("node").as("component"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val init = nodes.select(col("node"), col("node").as("component"))
+    val witness = sum(col("component").cast("decimal(38,0)"))
+    val (labels, converged) = Iterate(init, MaxIter, Some(witness)) { lab =>
       // min label over the closed neighborhood (self + neighbors)
       val fromNeighbors = sym
-        .join(labels, sym("src") === labels("node"))
+        .join(lab, sym("src") === lab("node"))
         .groupBy(col("dst").as("node"))
         .agg(min(col("component")).as("nc"))
-      val hop = labels
+      val hop = lab
         .join(fromNeighbors, Seq("node"), "left")
         .select(col("node"),
           least(col("component"), coalesce(col("nc"), col("component")))
@@ -56,19 +57,12 @@ object ConnectedComponents {
       // pointer doubling: follow the label one more hop (labels are node
       // ids, monotonically decreasing, so the lookup always resolves and
       // only ever lowers the label further)
-      val next = hop
+      hop
         .join(hop.select(col("node").as("component"),
           col("component").as("cc")), Seq("component"))
         .select(col("node"), col("cc").as("component"))
-        .localCheckpoint()
-      // converged when no label moved this round (labels only decrease)
-      converged = next.join(labels.withColumnRenamed("component", "prev"), "node")
-        .filter(col("component") < col("prev"))
-        .isEmpty
-      labels = next
-      iter += 1
     }
-    require(converged, s"not converged after $maxIter rounds (pointer " +
+    require(converged, s"not converged after $MaxIter rounds (pointer " +
       "doubling bounds this at O(log n) — a graph needing more is a bug)")
     labels
   }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.ops.Iterate
 import graft.text.Text
 
 /** Wave 15 — corpus statistics and behavioral mining: PMI collocations
@@ -351,12 +352,11 @@ object Wave15 {
     * Shape at 100TB: the a-priori-pruned merge-hinted self-join builds
     * the edge list ONCE and persists it pre-partitioned on the source
     * endpoint, so every round's relax join reuses the cached
-    * partitioning; the distance frontier is localCheckpointed per
-    * round (it is referenced twice per round — carried forward AND
-    * relaxed — the q_graph_kcore plan-doubling lesson) and joins back
-    * as an explicit broadcast while node-sized (shuffle once it
-    * isn't). The ORACLE unrolls the same four rounds as MATERIALIZED
-    * CTEs (per-round inlining otherwise doubles the plan per round).
+    * partitioning; the distance frontier is carried by
+    * [[graft.ops.Iterate]] and joins back as an explicit broadcast
+    * while node-sized (shuffle once it isn't). The ORACLE unrolls the
+    * same four rounds as MATERIALIZED CTEs (per-round inlining
+    * otherwise doubles the plan per round).
     */
   val graphSssp: Q = Q(
     "q_graph_sssp",
@@ -396,20 +396,18 @@ object Wave15 {
       .repartition(np, col("u"))
       .persist()
     val deg = eu.groupBy("u").agg(count(lit(1)).as("deg"))
-    var dist = deg.orderBy(col("deg").desc, col("u")).limit(1)
+    val source = deg.orderBy(col("deg").desc, col("u")).limit(1)
       .select(col("u").as("node"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    for (_ <- 1 to 4) {
+    val (dist, _) = Iterate(source, 4) { dist =>
       val relaxed = eu
         .join(broadcast(dist.toDF("u", "du")), "u")
         .select(col("v").as("node"), (col("du") + col("w")).as("dist"))
-      dist = dist.unionAll(relaxed)
+      dist.unionAll(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(false)
     }
-    // No in-body unpersist: the round checkpoints are LAZY, so the
-    // edge cache must stay marked through the consumer's action (the
-    // bench harness reclaims per-query persists between queries).
+    // No in-body unpersist: the rounds run in the consumer's action, so
+    // the edge cache must stay marked through it (the bench harness
+    // reclaims per-query persists between queries).
     dist.orderBy("node")
   }
 

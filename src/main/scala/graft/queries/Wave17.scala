@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.ops.Iterate
 import graft.text.Text
 
 /** Wave 17 — the model-adjacent quartet: multiclass Naive Bayes
@@ -149,8 +150,8 @@ object Wave17 {
     * Shape at 100TB: the a-priori-pruned edge build runs once
     * (merge-hinted self-join, the q_graph_sssp shape), degrees join
     * the edges once up front, and each round is ONE shuffled join +
-    * aggregate over the node-sized mass vector with lazy per-round
-    * checkpoints keeping the plan linear.
+    * aggregate over the node-sized mass vector, the rounds run by
+    * [[graft.ops.Iterate]].
     */
   val graphPpr: Q = {
     val rounds = (1 to PprRounds).map { i =>
@@ -196,8 +197,7 @@ object Wave17 {
       val seed = deg.orderBy(col("deg").desc, col("u")).limit(1)
         .select(col("u").as("node"))
         .localCheckpoint(false)
-      var pr = seed.withColumn("pr", lit(PprS)).localCheckpoint(false)
-      for (_ <- 1 to PprRounds) {
+      val (pr, _) = Iterate(seed.withColumn("pr", lit(PprS)), PprRounds) { pr =>
         val flow = eu
           .join(broadcast(deg), "u")
           .join(broadcast(pr.toDF("u", "pru")), "u")
@@ -206,10 +206,9 @@ object Wave17 {
           .select(col("node"), expr("(85 * fl) div 100").as("pr"))
         val teleport = seed
           .select(col("node"), lit(15L * PprS / 100L).as("pr"))
-        pr = flow.unionAll(teleport)
+        flow.unionAll(teleport)
           .groupBy("node").agg(sum("pr").as("pr"))
           .filter(col("pr") > 0)
-          .localCheckpoint(false)
       }
       pr.orderBy("node")
     }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.ops.Iterate
 
 /** Wave 19 — multi-source graph sampling and boosted-stump training:
   * the Eppstein–Wang closeness-sampling posture (k seeds, one shared
@@ -24,8 +25,7 @@ object Wave19 {
     * Shape at 100TB: the frontier carries a seed DIMENSION instead of
     * running k separate BFS jobs — one edge-join per hop total, with
     * the suite-shared [[GraphShared]] edge frame on the build side and
-    * lazy per-hop checkpoints keeping the plan linear (the q_graph_bfs
-    * per-hop persist lesson).
+    * the hops run by [[graft.ops.Iterate]].
     */
   val graphCloseness: Q = {
     val hops = (1 to ClosenessHops).map { i =>
@@ -67,16 +67,14 @@ object Wave19 {
         .limit(ClosenessSeeds)
         .select(col("u").as("seed"))
         .localCheckpoint(false)
-      var dist = seeds.select(col("seed"), col("seed").as("node"),
-        lit(0L).as("dist")).localCheckpoint(false)
-      for (_ <- 1 to ClosenessHops) {
+      val (dist, _) = Iterate(seeds.select(col("seed"), col("seed").as("node"),
+          lit(0L).as("dist")), ClosenessHops) { dist =>
         val relaxed = eu
           .join(broadcast(dist.toDF("seed", "u", "du")), "u")
           .select(col("seed"), col("v").as("node"),
             (col("du") + 1).as("dist"))
-        dist = dist.unionAll(relaxed)
+        dist.unionAll(relaxed)
           .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(false)
       }
       val cl = dist.groupBy("seed").agg(
         count(lit(1)).as("reached"), sum("dist").as("sum_dist"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.ops.Iterate
 
 /** Wave 46 — directed-graph structure: strongly connected components
   * of the linenumber-oriented co-purchase flow digraph (fixed-round
@@ -20,6 +21,7 @@ object Wave46 {
     * (it certifies v and m mutually reachable within R hops).
     */
   private val SccRounds = 6
+  require(SccRounds % 2 == 0, "q_graph_scc fuses rounds in pairs")
 
   /** SCC of the directed co-purchase graph: edge u -> v when u ships
     * at an earlier MIN(linenumber) than v within a shared order (part
@@ -103,12 +105,6 @@ object Wave46 {
       // carried frame once (digit growth is additive per round, not
       // the ~50-ref multiplicative blowup that wedged Boruvka).
       def ckptLeaf(df: DataFrame): DataFrame = df.localCheckpoint(false)
-      // EAGER variant for the round loop: the early-exit test below
-      // needs each round's labels materialized anyway (it reads one
-      // aggregate off them), and eager checkpoints let the loop STOP
-      // scheduling rounds at the fixed point instead of folding all
-      // R rounds into the final DAG unconditionally.
-      def eagerLeaf(df: DataFrame): DataFrame = df.localCheckpoint(true)
       val inc = Tables.load(s, d, "lineitem")
         .groupBy(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .agg(min("l_linenumber").as("ln"))
@@ -134,18 +130,11 @@ object Wave46 {
       // the cached template instead of two edge joins and a 3-way
       // union (isolated sf0.1: 7.9s -> see PLANS.md pin).
       //
-      // EARLY EXIT (r12 VERDICT #3, the sf1 7.1x scaler): min-label
-      // propagation is monotone — every f(v)/b(v) is non-increasing
-      // per round (the self-message re-offers the old label) — so the
-      // per-round SUM(f)+SUM(b) is unchanged iff NO label changed,
-      // and once a round changes nothing every later round is the
-      // identity. The loop therefore stops at the fixed point: the
-      // output is bit-identical to the oracle's full R-round unroll
-      // (rounds k..R of a converged chain are no-ops there too), but
-      // the engine skips the dead rounds — on this corpus peel 1
-      // converges in ~4 of 6 rounds and peel 2 never runs at all (one
-      // peel settles the whole graph; the empty-remainder short-
-      // circuit below skips its template build + 6 rounds).
+      // Min-label propagation is monotone: the self-message re-offers
+      // the old label, so f(v) and b(v) never rise, and SUM(f)+SUM(b)
+      // is an exact fixed-point witness. On this corpus peel 1
+      // converges in ~4 of 6 rounds and peel 2 never runs (the
+      // empty-remainder short-circuit below).
       def peel(edges: DataFrame, verts: DataFrame): DataFrame = {
         val tmpl = ckptLeaf(
           edges.select(col("dst").as("from"), col("src").as("to"),
@@ -154,52 +143,28 @@ object Wave46 {
               col("dst").as("to"), lit("b").as("dir")))
             .unionByName(verts.select(col("v").as("from"),
               col("v").as("to"), lit("s").as("dir"))))
-        // 38-digit sums: id * |V| products outgrow BIGINT long before
-        // they outgrow the corpus (restrided sf1 ids are ~1e10 already)
-        def labSum(l: DataFrame): java.math.BigDecimal = l
-          .agg(sum(col("f").cast("decimal(38,0)"))
-            + sum(col("b").cast("decimal(38,0)")))
-          .head().getDecimal(0)
-        def step(l: DataFrame): DataFrame =
+        val step: DataFrame => DataFrame = l =>
           tmpl.join(broadcast(l), col("from") === col("v"))
             .groupBy(col("to").as("v"))
             .agg(
               min(when(col("dir") =!= "b", col("f"))).as("f"),
               min(when(col("dir") =!= "f", col("b"))).as("b"))
-        // r15 (guide §2, halve the sequential barrier count): TWO
-        // propagation rounds fuse into ONE materialization — the round
-        // references the carried frame once, so the fused plan stays
-        // linear (no 2^R blowup; the inner round rides the outer's
-        // broadcast build), and the convergence probe doubles as the
-        // materializing action: the checkpoint is LAZY and labSum's
-        // aggregate is the first (and only) full pass, so each fused
-        // step is ONE scheduled job instead of r14's two-per-round
-        // (eager checkpoint + separate sum). Early exit stays sound
-        // under fusion: labels are monotone non-increasing, so the
-        // two-round sum is unchanged iff BOTH rounds changed nothing,
-        // and a converged chain's remaining rounds are no-ops in the
-        // oracle's full unroll too — output bit-identical.
-        var lab = verts.select(col("v"), col("v").as("f"),
-          col("v").as("b")).localCheckpoint(false)
-        var prevSum = labSum(lab)
-        var converged = false
-        var k = 0
-        while (k < SccRounds && !converged) {
-          val fuse = math.min(2, SccRounds - k)
-          var nxt = lab
-          (1 to fuse).foreach(_ => nxt = step(nxt))
-          lab = nxt.localCheckpoint(false)
-          val s = labSum(lab)
-          converged = s.compareTo(prevSum) == 0
-          prevSum = s
-          k += fuse
-        }
-        lab
+        // r15: TWO propagation rounds fuse into one materialization (the
+        // round reads the carried frame once, so the fused plan stays
+        // linear and the inner round rides the outer's broadcast build).
+        // The two-round sum is unchanged iff both rounds changed nothing.
+        // 38-digit sums: id * |V| products outgrow BIGINT long before
+        // they outgrow the corpus (restrided sf1 ids are ~1e10 already).
+        val labSum = sum(col("f").cast("decimal(38,0)")) +
+          sum(col("b").cast("decimal(38,0)"))
+        Iterate(verts.select(col("v"), col("v").as("f"), col("v").as("b")),
+          SccRounds / 2, Some(labSum))(step andThen step)._1
       }
       val l1 = peel(e1, vx)
       val s1 = l1.filter(col("f") === col("b"))
         .select(col("v"), col("f").as("scc"))
-      val u1 = eagerLeaf(l1.filter(col("f") =!= col("b")).select("v"))
+      val u1 = l1.filter(col("f") =!= col("b")).select("v")
+        .localCheckpoint(true)
       // Empty-remainder short-circuit: when peel 1 settled every
       // vertex (the common case — FW-BW peels remove at least the SCC
       // of the min vertex per peel), peel 2's template build, 6

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.ops.Iterate
 import graft.functions.Exact._
 
 /** Wave 9 — exact-integer time-series smoothing, sequential change
@@ -438,8 +439,8 @@ object Wave9 {
     * Shape at 100TB: the edge list builds once (merge-hinted pair
     * self-join, one reused exchange) and persists; each round is two
     * semi-joins of the shrinking alive set against the edge cache plus
-    * one count — the BFS per-round persist discipline (superseded
-    * rounds released eagerly) keeps lineage shallow.
+    * one count, run by [[graft.ops.Iterate]] with the alive count as
+    * its fixed-point witness.
     */
   // R=12: the sf0.01 corpus's 3-core fixpoint lands at round 11 (935
   // nodes), sf0.001 at ~3 (200) and sf0.1 at 3 (empty core) — all
@@ -483,36 +484,18 @@ object Wave9 {
       val eu = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(np, col("u"))
         .persist() // load-bearing: 2R+2 semi-joins reuse one edge build
-      // Each round references `alive` TWICE (once per endpoint), so a
-      // bare persist leaves a logical plan that DOUBLES per round —
-      // 2^R growth wedged the analyzer at R=8 with a 2GB plan string.
-      // localCheckpoint truncates the lineage to a LogicalRDD each
-      // round; the frames are node-set-sized, so the cut is free (the
-      // PageRank localCheckpoint caveat is about splitting a big reused
-      // exchange, which this is not).
-      var alive = eu.select(col("u").as("node")).distinct()
-        .localCheckpoint(true)
-      var prevCount = alive.count()
-      var converged = false
-      var round = 1
-      // Early exit is result-identical to running all R rounds: peeling
-      // is monotone decreasing, so alive(i) ⊆ alive(i-1) and equal
-      // counts imply equal SETS — every later round is a no-op. At
-      // sf0.1 the 3-core empties by round 3, so this cuts 12 fixed
-      // rounds to 4 (4.8s -> ~1.7s in the isolated bench).
-      while (round <= KcoreRounds && !converged) {
-        val next = eu
-          .join(broadcast(alive.select(col("node").as("u"))), Seq("u"), "left_semi")
-          .join(broadcast(alive.select(col("node").as("v"))), Seq("v"), "left_semi")
+      // Peeling only removes nodes, so the alive count is a monotone
+      // witness: equal counts imply equal sets (at sf0.1 the 3-core
+      // empties by round 3, 4 of 12 rounds run).
+      val (alive, converged) = Iterate(
+        eu.select(col("u").as("node")).distinct(), KcoreRounds,
+        Some(count(lit(1)))) { live =>
+        eu
+          .join(broadcast(live.select(col("node").as("u"))), Seq("u"), "left_semi")
+          .join(broadcast(live.select(col("node").as("v"))), Seq("v"), "left_semi")
           .groupBy("u").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= KcoreK)
           .select(col("u").as("node"))
-          .localCheckpoint(true)
-        val c = next.count()
-        converged = c == prevCount
-        prevCount = c
-        alive = next
-        round += 1
       }
       eu.join(broadcast(alive.select(col("node").as("u"))), Seq("u"), "left_semi")
         .join(broadcast(alive.select(col("node").as("v"))), Seq("v"), "left_semi")
