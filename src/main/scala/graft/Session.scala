@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session contract, defined once. Every engine entry point
-  * (Bench, Verify, PlanDump, Explain, IngestDemo, ScaleGen,
-  * ingest.BlockEtl) and the test session build from here, so the hash
-  * gates, the bench and the suite run one physical configuration.
+  * (Verify, PlanDump, Explain, IngestDemo, ScaleGen, ingest.BlockEtl)
+  * and the test session build from here, so the hash gates and the
+  * suite run one physical configuration.
   * Callers add only deployment settings (`spark.sql.warehouse.dir`);
   * runtime variations go through `spark.conf.set` after creation, as
   * PlanDump and Explain do to turn AQE off. SmokeDefault alone keeps a

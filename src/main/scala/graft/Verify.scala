@@ -13,8 +13,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional subset for local iteration (same contract as Bench's
-    // SPARK_GRAFT_ONLY); the driver sets no env, so it always runs all.
+    // Optional subset for local iteration and the sf0.1 sketch-collision
+    // gate: SPARK_GRAFT_ONLY=q_a,q_b; unset, every query runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))

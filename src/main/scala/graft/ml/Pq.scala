@@ -45,7 +45,7 @@ object Pq {
     * (dir, params) when callers pass memoKey — q_embed_pq and
     * q_ann_pq train the identical codebooks (r11, the ivfParts
     * pattern): assignment and codebook checkpoint through
-    * SharedFrames so they survive Bench's inter-query cache clear. */
+    * SharedFrames so they survive perfbench's `Harness.hygiene`. */
   private def rawFit(
       emb: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int, k: Int, iters: Int,
@@ -285,7 +285,7 @@ object Pq {
     // the memo each consumer re-ran both Lloyd fits (~1.5-2s apiece at
     // sf0.1). The codebooks are driver-held LocalRelations (safe to
     // share as-is); the corpus-sized code table checkpoints through
-    // SharedFrames so it survives Bench's inter-query cache clear.
+    // SharedFrames so it survives perfbench's `Harness.hygiene`.
     // Hash-invariant: the fits are deterministic fixed-point Lloyd.
     case Some(dir) =>
       // input identity in the key — see rawFit (r11 ADVICE)

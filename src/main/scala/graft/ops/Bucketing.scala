@@ -13,8 +13,8 @@ object Bucketing {
 
   /** Tables already bucketed this JVM, keyed table -> source token.
     * Bucketing is a once-per-warehouse cost at scale, not a per-query
-    * one; this cache gives the same economics locally (Verify/Bench
-    * re-invoke each query body in one JVM). */
+    * one; this cache gives the same economics locally (Verify and
+    * perfbench re-invoke each query body in one JVM). */
   private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** [[writeBucketed]] but only if `table` wasn't already written from

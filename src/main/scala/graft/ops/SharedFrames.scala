@@ -20,13 +20,13 @@ import org.apache.spark.sql.DataFrame
   *    top-k frames grow with the probe count, which is a corpus
   *    fraction, not a constant);
   *  - the backing RDD ids are tracked so harness-level cache hygiene
-  *    (Bench's inter-query blocking unpersist) can exempt them — a
+  *    (perfbench's `Harness.hygiene` unpersist) can exempt them — a
   *    localCheckpointed RDD is UNRECOVERABLE once unpersisted, and the
   *    whole point is surviving across queries;
   *  - [[releaseAll]] unpersists everything and clears the registry —
-  *    Verify/Bench call it after the suite (the "released after the
-  *    family runs" contract; a library user embedding these queries
-  *    calls it whenever the family is done).
+  *    Verify, Explain and perfbench call it after their runs (the
+  *    "released after the family runs" contract; a library user
+  *    embedding these queries calls it whenever the family is done).
   */
 object SharedFrames {
   private val memo =
@@ -34,7 +34,7 @@ object SharedFrames {
   private val scalarMemo =
     scala.collection.mutable.Map.empty[(String, String), Long]
   private val sharedIds = scala.collection.mutable.Set.empty[Int]
-  // Build attribution for the bench side file: which query was running
+  // Build attribution for perfbench's metrics: which query was running
   // when each shared frame actually materialized. An isolated re-measure
   // of the FIRST consumer (e.g. q_retrieval_rbo at 4.7s) otherwise reads
   // as a regression when it is really paying the family's build.
@@ -42,7 +42,7 @@ object SharedFrames {
     scala.collection.mutable.ArrayBuffer.empty[(String, String, String, Double)]
   @volatile private var payerName: String = ""
 
-  /** Harness hook (Bench/Verify): name the query about to run so frame
+  /** Harness hook (perfbench): name the query about to run so frame
     * builds it triggers are attributed to it in [[paidBuilds]]. */
   def setPayer(name: String): Unit = payerName = name
 
@@ -81,8 +81,8 @@ object SharedFrames {
     * SF's frame names in [[paidBuilds]] (r11 ADVICE). */
   def clearBuildLog(): Unit = synchronized(buildLog.clear())
 
-  /** Is this RDD id one of the shared materializations? (Bench's
-    * inter-query unpersist exempts these.) */
+  /** Is this RDD id one of the shared materializations? (perfbench's
+    * `Harness.hygiene` unpersist exempts these.) */
   def isShared(rddId: Int): Boolean = synchronized(sharedIds.contains(rddId))
 
   /** Attribution wrapper: the (payer, dir, name) entry is appended
@@ -126,8 +126,8 @@ object SharedFrames {
     * table, a collected vocabulary aggregate) computed once per suite —
     * the [[frame]] pattern for results that live on the driver rather
     * than in executor storage. The build must leave no persisted RDDs
-    * behind (release its own caches): Bench's inter-query cleanup only
-    * exempts [[frame]] checkpoints.
+    * behind (release its own caches): perfbench's `Harness.hygiene`
+    * only exempts [[frame]] checkpoints.
     *
     * The builder's payer name and runtime class are recorded so a
     * (dir, name) key collision between two call sites expecting

@@ -188,7 +188,7 @@ object Udfs {
     // Write-once, atomically published: the fixture bytes are a pure
     // function of the (deterministic) golden decoder, so any published
     // copy is equivalent. Writing to a temp dir and renaming means a
-    // concurrent session (Bench + tests + Verify share /tmp) can never
+    // concurrent session (perfbench + tests + Verify share /tmp) can never
     // race a partial overwrite against the oracle's read of the same
     // glob — and the repeated-run fixture write stays OUT of the timed
     // bench region.

@@ -557,7 +557,7 @@ object Wave10 {
     * built it fresh — the suite ran its most expensive iterative job
     * twice to score its own output (modularity was the #1 driver bench
     * cost). Now the first consumer pays one build (eager executor-local
-    * checkpoints, exempt from Bench's inter-query cache clear) and the
+    * checkpoints, exempt from perfbench's `Harness.hygiene`) and the
     * second reads materialized RDDs; rows are identical by
     * construction, so hashes are unchanged. */
   def lpaLabels(s: org.apache.spark.sql.SparkSession, d: String)

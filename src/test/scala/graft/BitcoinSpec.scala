@@ -300,6 +300,38 @@ class BitcoinSpec extends AnyFunSuite {
     assert(staged.forall(f => new File(s"$work/transactions", f.getName).isFile))
   }
 
+  test("BlockEtl: a call that fails inside its commit releases the lock; " +
+      "the next call rolls its commit forward without duplicates") {
+    val work = newWork()
+    val destDir = new File(s"$work/transactions")
+    def leftovers() = destDir.list().toSeq
+      .filter(n => n.startsWith("_commit-") || n.startsWith("_staging-"))
+    BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    // a directory where the log's temp file goes: the call fails after
+    // its files moved in, before the log is replaced
+    val tmp = new File(destDir, s"${BlockEtl.LogName}.tmp")
+    assert(tmp.mkdir())
+    intercept[Exception] {
+      BlockEtl.run(spark, frame(secondHalf), work, rotationSeconds = 600)
+    }
+    val commits = leftovers()
+    assert(commits.size == 1 && commits.head.startsWith("_commit-"), commits)
+    // every data file moved in; only Spark's markers and checksums stay
+    assert(new File(destDir, commits.head).list().forall(n => n.startsWith("_") || n.startsWith(".")))
+    val channel = FileChannel.open(new File(work, BlockEtl.LockName).toPath,
+      StandardOpenOption.WRITE)
+    try assert(channel.tryLock() != null) finally channel.close()
+    assert(tmp.delete())
+
+    val r = BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)
+    val warehouse = spark.read.schema(Bitcoin.blockSchema).parquet(s"$work/warehouse")
+    assert(content(dest(work)) == content(Bitcoin.etl(warehouse)))
+    assert(leftovers().isEmpty)
+    assert(r.warehouseRows == warehouse.count())
+    assert(r.etlRows == dest(work).count())
+    assert(r.warehouseRows == firstHalf.size * 2 + secondHalf.size)
+  }
+
   test("BlockEtl: a leftover _staging directory is deleted, never folded") {
     val work = newWork()
     BlockEtl.run(spark, frame(firstHalf), work, rotationSeconds = 600)

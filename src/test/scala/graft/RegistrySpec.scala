@@ -21,7 +21,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("the test session runs the engine contract of graft.Session " +
-    "(the configuration Verify and Bench run)") {
+    "(the configuration Verify runs)") {
     val conf = SharedSpark.spark.conf
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.ansi.enabled") == "false")
@@ -51,6 +51,24 @@ class RegistrySpec extends AnyFunSuite {
       conf.set(key, "3")
       assert(Session.partitions(SharedSpark.spark) == 3)
     } finally conf.set(key, configured)
+  }
+
+  test("the program's env vars are exactly SPARK_GRAFT_CPUS and " +
+    "SPARK_GRAFT_ONLY: every sys.env / System.getenv read in src/main " +
+    "names one of them by a literal key") {
+    import scala.jdk.CollectionConverters._
+    // the key group is null where a read names no literal key
+    val read = """(?:sys\.env|System\.getenv)(?:\.getOrElse|\.get|\.contains)?(?:\(\s*"([^"]+)")?""".r
+    val root = java.nio.file.Paths.get("src/main")
+    val reads = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+      .flatMap(p => read.findAllMatchIn(java.nio.file.Files.readString(p))
+        .map(m => root.relativize(p).toString -> Option(m.group(1))))
+      .toList
+    val unkeyed = reads.collect { case (file, None) => file }
+    assert(unkeyed.isEmpty, s"env reads without a literal key: $unkeyed")
+    assert(reads.flatMap(_._2).toSet == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY"),
+      s"env keys read by src/main: ${reads.groupBy(_._2).map { case (k, fs) => k -> fs.map(_._1).distinct }}")
   }
 
   test("entry (flagship) smoke: rows > 0 on sf0.001") {
