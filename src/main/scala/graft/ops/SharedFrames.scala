@@ -31,8 +31,8 @@ import org.apache.spark.sql.DataFrame
 object SharedFrames {
   private val memo =
     scala.collection.mutable.Map.empty[(String, String), DataFrame]
-  private val scalarMemo =
-    scala.collection.mutable.Map.empty[(String, String), Long]
+  private val valueMemo =
+    scala.collection.mutable.Map.empty[(String, String), (Any, String)]
   private val sharedIds = scala.collection.mutable.Set.empty[Int]
   // Build attribution for perfbench's metrics: which query was running
   // when each shared frame actually materialized. An isolated re-measure
@@ -46,7 +46,7 @@ object SharedFrames {
     * builds it triggers are attributed to it in [[paidBuilds]]. */
   def setPayer(name: String): Unit = payerName = name
 
-  /** payer query -> shared frame/scalar names whose build it triggered
+  /** payer query -> shared frame/value names whose build it triggered
     * (in build order), across every dir built since the last
     * [[clearBuildLog]]. Survives [[releaseAll]] within the process so
     * the harness can read it after suite cleanup. */
@@ -57,7 +57,7 @@ object SharedFrames {
   /** payer query -> total wall seconds its timed region spent inside
     * shared builds (r12 VERDICT #8): lets round-over-round comparisons
     * subtract build cost mechanically instead of by lore. Caveat: a
-    * build that calls [[frame]]/[[scalar]]/[[value]] INSIDE its body
+    * build that calls [[frame]]/[[value]] INSIDE its body
     * (e.g. sparse_top20 building docvecs) is timed by both the inner
     * and the outer entry, so the per-payer sum can exceed the query's
     * own wall seconds — read it as "build involvement", not exclusive
@@ -113,19 +113,10 @@ object SharedFrames {
       })
     }
 
-  /** Memoized driver scalar (e.g. a vocabulary size) computed next to
-    * a shared frame. */
-  def scalar(dir: String, name: String)(build: => Long): Long =
-    synchronized(scalarMemo.getOrElseUpdate((dir, name),
-      logged(dir, name)(build)))
-
-  private val valueMemo =
-    scala.collection.mutable.Map.empty[(String, String), (Any, String)]
-
   /** Memoized driver-side value of bounded size (e.g. a learned merge
-    * table, a collected vocabulary aggregate) computed once per suite —
-    * the [[frame]] pattern for results that live on the driver rather
-    * than in executor storage. The build must leave no persisted RDDs
+    * table, a vocabulary size) computed once per suite — the [[frame]]
+    * pattern for results that live on the driver rather than in
+    * executor storage. The build must leave no persisted RDDs
     * behind (release its own caches): perfbench's `Harness.hygiene`
     * only exempts [[frame]] checkpoints.
     *
@@ -174,7 +165,6 @@ object SharedFrames {
       catch { case _: Throwable => () }
     }
     memo.clear()
-    scalarMemo.clear()
     valueMemo.clear()
     sharedIds.clear()
   }

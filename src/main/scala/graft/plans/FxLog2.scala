@@ -1,8 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Fixed-point base-2 logarithm of a positive BIGINT: the classic
@@ -15,7 +17,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * with error < 2^-29 per the per-step mantissa truncation. Crucially
   * the value is DETERMINISTIC and replayable bit-for-bit in any engine
   * with 64-bit integers (the DuckDB oracle replays it as a 30-step
-  * recursive CTE over `length(bin(n))-1` + the same square/shift),
+  * recursive CTE over `length(bin(n))-1` + the same square/shift,
+  * [[FxLog2.oracleCte]]),
   * which makes log-space scoring — BM25 idf, importance-resampling
   * log-ratios, entropy — hash-matchable cross-engine where IEEE
   * `ln`/`log` never is (CLAUDE.md: pow/ln/exp differ across libms).
@@ -74,4 +77,26 @@ object FxLog2 {
     }
     r
   }
+
+  /** `graft_fxlog2(n)`, the name `GraftExtensions` registers, as a Column. */
+  def column(n: Column): Column = call_function("graft_fxlog2", n)
+
+  /** [[fxlog2]] as a DuckDB recursive CTE, parameterized on the CTE
+    * that supplies the distinct `n` arguments. Emits `base`/`fxl`/`lg`;
+    * join `lg` on n and read `r`. */
+  def oracleCte(argsCte: String): String =
+    s"""base AS (SELECT n, length(bin(n)) - 1 AS e FROM $argsCte),
+       |fxl(n, i, x, r) AS (
+       |  SELECT n, 0,
+       |    CASE WHEN e <= 30 THEN n << (30 - e) ELSE n >> (e - 30) END,
+       |    CAST(e AS BIGINT) << 30
+       |  FROM base
+       |  UNION ALL
+       |  SELECT n, i + 1,
+       |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
+       |         THEN ((x * x) >> 30) >> 1 ELSE (x * x) >> 30 END,
+       |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
+       |         THEN r | (1::BIGINT << (29 - i)) ELSE r END
+       |  FROM fxl WHERE i < 30),
+       |lg AS (SELECT n, r FROM fxl WHERE i = 30)""".stripMargin
 }

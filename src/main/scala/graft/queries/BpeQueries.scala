@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
 import graft.ops.SharedFrames
-import graft.text.Bpe
+import graft.text.{Bpe, Text}
 
 /** Tokenizer training AND application over `documents` — the BPE steps
   * of an LLM data pipeline (see [[graft.text.Bpe]] for the scale
@@ -113,9 +113,7 @@ object BpeQueries {
     val enc = Bpe.encodeUdf(merges.map(m => (m.x, m.y)))
     val docs = Tables.load(s, d, "documents")
       .repartition(Session.partitions(s))
-    val words = docs
-      .select(col("doc_id"), col("lang"),
-        explode(split(lower(col("text")), " ")).as("w"))
+    val words = Text.tokenRows(docs, col("text"), "w", col("doc_id"), col("lang"))
       .filter(col("w").rlike("^[a-z]+$") &&
         length(col("w")) <= Bpe.MaxWordLen)
     val wt = words.select("w").distinct()

@@ -43,7 +43,7 @@ object DedupSim {
       .filter(size(col("shs")) > 0)
 
   private[queries] val shingleSql =
-    """t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""t AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks
       |      FROM documents),
       |pos AS (SELECT unnest(range(1,
       |  (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM t))) AS i),
@@ -209,7 +209,7 @@ object DedupSim {
     * interpolate this one def so their oracles cannot drift apart. */
   private[queries] def sparseDenseTopSql: String =
     s"""tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
+       |    unnest(${Text.tokensSql("text")}) AS term
        |  FROM documents),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -311,8 +311,8 @@ object DedupSim {
     * signature). */
   val simhashPairs: Q = Q(
     "q_dedup_simhash",
-    """WITH toks AS (SELECT doc_id,
-      |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS tok
+    s"""WITH toks AS (SELECT doc_id,
+      |    unnest(${Text.tokensSql("text")}) AS tok
       |  FROM documents),
       |tc AS (SELECT doc_id, tok, COUNT(*) AS n FROM toks GROUP BY 1, 2),
       |th AS (SELECT doc_id, n, md5(tok) AS h FROM tc),
@@ -693,8 +693,8 @@ object DedupSim {
     * on shingles. */
   val decontamOverlap: Q = Q(
     "q_decontam_overlap",
-    """WITH d AS (SELECT doc_id,
-      |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH d AS (SELECT doc_id,
+      |    ${Text.tokensSql("text")} AS toks
       |  FROM documents),
       |bsh AS (SELECT DISTINCT toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
       |                 || ' ' || toks[i+3] AS sh
@@ -735,8 +735,8 @@ object DedupSim {
     * aggregate. Skewed mega-passages split by AQE. */
   val dupPassages: Q = Q(
     "q_dup_passages",
-    """WITH d AS (SELECT doc_id,
-      |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH d AS (SELECT doc_id,
+      |    ${Text.tokensSql("text")} AS toks
       |  FROM documents),
       |sh AS (SELECT doc_id,
       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]

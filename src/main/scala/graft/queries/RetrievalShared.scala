@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.{Session, Tables}
 import graft.ops.{BoundedWindow, SharedFrames, TopK}
+import graft.text.Text
 
 /** The retrieval-eval family's shared subplans, materialized once per
   * suite run via [[graft.ops.SharedFrames]].
@@ -39,7 +40,7 @@ object RetrievalShared {
     * pass (r14: vsize + the two tf references inside docvecs were
     * three full explode+aggregate passes over the corpus; now one). */
   def vsize(s: SparkSession, d: String): Int =
-    SharedFrames.scalar(d, "vsize") {
+    SharedFrames.value[Long](d, "vsize") {
       tfFrame(s, d).select("term").distinct().count()
     }.toInt
 
@@ -50,11 +51,9 @@ object RetrievalShared {
     * aggregate (guide §1.2: don't recompute what you already have). */
   private def tfFrame(s: SparkSession, d: String): DataFrame =
     SharedFrames.frame(d, "tf") {
-      Tables.load(s, d, "documents")
-        .repartition(Session.partitions(s))
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("term"))
-        .filter(col("term") =!= "")
+      Text.tokenRows(
+          Tables.load(s, d, "documents").repartition(Session.partitions(s)),
+          col("text"), "term", col("doc_id"))
         .groupBy("doc_id", "term")
         .agg(count(lit(1)).as("tf"))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact._
 import graft.ops.{Bucketing, Skew}
+import graft.text.Text
 
 /** Wave 5 — scale patterns exercised as first-class queries: the
   * results must equal their unsalted/unbucketed formulations (that IS
@@ -115,8 +116,8 @@ object ScaleOps {
     * plans differ: parallel per-bucket windows vs one global sort). */
   val packChunks: Q = Q(
     "q_pack_chunks",
-    """WITH t AS (SELECT doc_id,
-      |    len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tokens
+    s"""WITH t AS (SELECT doc_id,
+      |    len(${Text.tokensSql("text")}) AS n_tokens
       |  FROM documents),
       |o AS (SELECT doc_id, n_tokens,
       |        CAST(SUM(n_tokens) OVER (ORDER BY doc_id
@@ -144,8 +145,8 @@ object ScaleOps {
     * shape): one generator row per (doc, chunk), integer spans only. */
   val slideChunks: Q = Q(
     "q_doc_slide_chunks",
-    """WITH t AS (SELECT doc_id,
-      |    len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tokens
+    s"""WITH t AS (SELECT doc_id,
+      |    len(${Text.tokensSql("text")}) AS n_tokens
       |  FROM documents),
       |c AS (SELECT doc_id, n_tokens, i AS chunk_no, CAST(i * 48 AS BIGINT) AS tok_start
       |      FROM t, (SELECT unnest(range(0, 100000)) AS i) p

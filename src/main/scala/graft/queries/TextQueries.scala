@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
 import graft.text.Text
 
 /** Wave 4a — text analysis over `documents`: tokenization + counts,
@@ -14,16 +15,12 @@ object TextQueries {
 
   val textTokens: Q = Q(
     "q_text_tokens",
-    """WITH tok AS (
-      |  SELECT unnest(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS token
+    s"""WITH tok AS (
+      |  SELECT unnest(${Text.tokensSql("text")}) AS token
       |  FROM documents)
       |SELECT token, COUNT(*) AS n FROM tok
       |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin) { (s, d) =>
-    // split+explode then a codegen'd filter — NOT filter() inside the
-    // array (HOF lambdas run interpreted; see Text.shingleSetUdf note)
-    Tables.load(s, d, "documents")
-      .select(explode(split(lower(col("text")), " ")).as("token"))
-      .filter(col("token") =!= "")
+    Text.tokenRows(Tables.load(s, d, "documents"), col("text"), "token")
       .groupBy("token")
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token").asc)
@@ -36,8 +33,8 @@ object TextQueries {
     * runs, the deterministic stand-in for a model-specific BPE table). */
   val textTokenCounts: Q = Q(
     "q_text_token_counts",
-    """SELECT doc_id,
-      |  len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n_ws_tokens,
+    s"""SELECT doc_id,
+      |  len(${Text.tokensSql("text")}) AS n_ws_tokens,
       |  len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS n_subword_tokens
       |FROM documents ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
     Tables.load(s, d, "documents")
@@ -50,8 +47,8 @@ object TextQueries {
 
   val textQuality: Q = Q(
     "q_text_quality",
-    """WITH t AS (SELECT doc_id, text,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id, text,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents)
       |SELECT doc_id,
       |  LENGTH(text) AS n_chars,
@@ -85,7 +82,7 @@ object TextQueries {
             s"CASE WHEN s_$lang > $accScore THEN s_$lang ELSE $accScore END")
       }._1
       s"""WITH t AS (SELECT doc_id, lang,
-         |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+         |             ${Text.tokensSql("text")} AS toks
          |           FROM documents),
          |sc AS (SELECT doc_id, lang AS labeled_lang,
          |  $markerSql
@@ -113,8 +110,8 @@ object TextQueries {
     * of duplicated spans). */
   val docFingerprint: Q = Q(
     "q_doc_fingerprint",
-    """WITH t AS (SELECT doc_id, text,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id, text,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents)
       |SELECT doc_id,
       |  md5(text) AS fp_exact,
@@ -148,8 +145,8 @@ object TextQueries {
     * via a typed flatMap on the Dataset. */
   val explodeTokensTyped: Q = Q(
     "q_udtf_explode_tokens",
-    """WITH t AS (SELECT doc_id,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents)
       |SELECT doc_id, i AS pos, toks[i] AS token
       |FROM t, (SELECT unnest(range(1,
@@ -245,8 +242,8 @@ object TextQueries {
     * never an all-pairs or per-doc collect. */
   val textRepetition: Q = Q(
     "q_text_repetition",
-    """WITH t AS (SELECT doc_id,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents),
       |tri AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS tri
       |        FROM t, (SELECT unnest(range(1,
@@ -338,8 +335,8 @@ object TextQueries {
     * (partial before the doc shuffle, final after). */
   val tfidfTerms: Q = Q(
     "q_tfidf_terms",
-    """WITH tok AS (SELECT doc_id,
-      |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
+    s"""WITH tok AS (SELECT doc_id,
+      |    unnest(${Text.tokensSql("text")}) AS term
       |  FROM documents),
       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
       |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -349,9 +346,8 @@ object TextQueries {
       |      FROM tf t JOIN df d ON t.term = d.term)
       |SELECT doc_id, term, tf, df, rn FROM r WHERE rn <= 5
       |ORDER BY doc_id, rn""".stripMargin) { (s, d) =>
-    val tf = Tables.load(s, d, "documents")
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
-      .filter(col("term") =!= "")
+    val tf = Text.tokenRows(Tables.load(s, d, "documents"), col("text"), "term",
+        col("doc_id"))
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -386,9 +382,8 @@ object TextQueries {
     * no-oracle tail attributed to libm ln() into the hash gate. */
   val bm25Fx: Q = Q(
     "q_bm25_fx",
-    """WITH RECURSIVE
-      |tk AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |         x -> x <> '') AS toks FROM documents),
+    s"""WITH RECURSIVE
+      |tk AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
       |dld AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, toks FROM tk),
       |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dld),
       |tf AS (SELECT doc_id, dl, t.term AS term, COUNT(*) AS tf
@@ -452,9 +447,8 @@ object TextQueries {
     * row-scale shuffle — the log never runs per-document. */
   val dsirWeight: Q = Q(
     "q_dsir_weight",
-    """WITH RECURSIVE
-      |tk AS (SELECT doc_id, lang, list_filter(string_split(lower(text), ' '),
-      |         x -> x <> '') AS toks FROM documents),
+    s"""WITH RECURSIVE
+      |tk AS (SELECT doc_id, lang, ${Text.tokensSql("text")} AS toks FROM documents),
       |bb AS (SELECT doc_id, lang,
       |         CAST(('0x' || substr(md5(toks[i] || ' ' || toks[i+1]), 1, 8))
       |              AS BIGINT) % 1024 AS b
@@ -512,10 +506,8 @@ object TextQueries {
       sum(col("n_r")).as("r_tot"), sum(col("n_t")).as("t_tot"))
     val wfx = cr.crossJoin(broadcast(tot))
       .select(col("b"),
-        (call_function("graft_fxlog2",
-          (col("n_t") + 1L) * (col("r_tot") + 1024L)) -
-          call_function("graft_fxlog2",
-            (col("n_r") + 1L) * (col("t_tot") + 1024L))).as("w_fx"))
+        (FxLog2.column((col("n_t") + 1L) * (col("r_tot") + 1024L)) -
+          FxLog2.column((col("n_r") + 1L) * (col("t_tot") + 1024L))).as("w_fx"))
     val sc = bb.join(broadcast(wfx), "b")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_feats"), sum(col("w_fx")).as("weight_fx"))
@@ -539,8 +531,7 @@ object TextQueries {
     */
   val ngramLm: Q = Q(
     "q_ngram_lm",
-    """WITH tk AS (SELECT list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH tk AS (SELECT ${Text.tokensSql("text")} AS toks FROM documents),
       |big AS (SELECT toks[i] AS w1, toks[i+1] AS w2
       |        FROM tk, (SELECT unnest(range(1,
       |          (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM tk))) AS i) p
@@ -578,8 +569,8 @@ object TextQueries {
     * the (tiny) source key. */
   val qualityGate: Q = Q(
     "q_quality_gate",
-    """WITH t AS (SELECT doc_id, source,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id, source,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents),
       |r AS (SELECT source,
       |  CASE WHEN len(toks) < 20 THEN 'too_short'
@@ -634,8 +625,7 @@ object TextQueries {
     * per-doc LM scan, nothing quadratic. */
   val lmScore: Q = Q(
     "q_lm_score",
-    """WITH tk AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH tk AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
       |big AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
       |        FROM tk, (SELECT unnest(range(1,
       |          (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM tk))) AS i) p
@@ -696,8 +686,7 @@ object TextQueries {
     * shingle shuffle), then one per-doc aggregate. */
   val textNovelty: Q = Q(
     "q_text_novelty",
-    """WITH t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
       |pos AS (SELECT unnest(range(1,
       |  (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM t))) AS i),
       |sh AS (SELECT DISTINCT doc_id,
@@ -762,8 +751,7 @@ object TextQueries {
     * exchanges to replay the same rule relationally. */
   val textRepeatExcise: Q = Q(
     "q_text_repeat_excise",
-    s"""WITH t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
       |pos AS (SELECT unnest(range(1,
       |  (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM t))) AS i),
       |w AS (SELECT doc_id, i AS p, toks[i] AS w FROM t, pos WHERE i <= len(toks)),
@@ -830,8 +818,7 @@ object TextQueries {
          |    text FROM documents),
          |db AS (SELECT DISTINCT doc_id, label, is_train,
          |    CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % $B AS b
-         |  FROM lab, UNNEST(list_distinct(list_filter(
-         |      string_split(lower(text), ' '), x -> x <> ''))) AS u(tok)),
+         |  FROM lab, UNNEST(list_distinct(${Text.tokensSql("text")})) AS u(tok)),
          |n AS (SELECT SUM(label) AS n_pos, SUM(1 - label) AS n_neg
          |  FROM lab WHERE is_train = 1),
          |df AS (SELECT b, SUM(label) AS df_pos, SUM(1 - label) AS df_neg
@@ -957,8 +944,8 @@ object TextQueries {
     */
   val phraseProximity: Q = Q(
     "q_phrase_proximity",
-    """WITH t AS (SELECT doc_id,
-      |             list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id,
+      |             ${Text.tokensSql("text")} AS toks
       |           FROM documents),
       |tok AS (SELECT doc_id, i AS pos, toks[i] AS w
       |        FROM t, (SELECT unnest(range(1,
@@ -1015,8 +1002,8 @@ object TextQueries {
     * plays in production lexical engines. */
   val sparseCosine: Q = Q(
     "q_sparse_cosine",
-    """WITH tok AS (SELECT doc_id,
-      |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
+    s"""WITH tok AS (SELECT doc_id,
+      |    unnest(${Text.tokensSql("text")}) AS term
       |  FROM documents),
       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
       |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),

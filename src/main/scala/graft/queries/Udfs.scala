@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.{Q, Tables}
 import graft.functions.{Base58, FreqItems, WeightedAvg}
+import graft.text.Text
 
 /** Wave 4c — user-defined function surface: typed UDAF and the base58
   * address UDF (SURVEY.md §2.B `u_udaf_weighted` / `u_udf_base58`).
@@ -271,9 +272,7 @@ object Udfs {
     * FreqItemsSpec. Output explodes the sketch map to scalar rows. */
   val freqItems: Q = Q.noOracle("q_freq_items") { (s, d) =>
     val fi = udaf(FreqItems(16), Encoders.STRING)
-    Tables.load(s, d, "documents")
-      .select(col("lang"), explode(split(lower(col("text")), " ")).as("term"))
-      .filter(col("term") =!= "")
+    Text.tokenRows(Tables.load(s, d, "documents"), col("text"), "term", col("lang"))
       .groupBy("lang")
       .agg(fi(col("term")).as("sketch"))
       .select(col("lang"), explode(col("sketch")).as(Seq("term", "est_count")))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.LongType
 import graft.{Q, Session, Tables}
 import graft.functions.Exact.ms
 import graft.ops.SharedFrames
+import graft.plans.FxLog2
+import graft.text.Text
 
 /** Wave 10 — profiling, multi-touch attribution, smoothed LM
   * estimation, survival analysis, spatial joins, perceptual-hash image
@@ -236,8 +238,7 @@ object Wave10 {
     */
   val lmKneserNey: Q = Q(
     "q_lm_kneserney",
-    """WITH tk AS (SELECT list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH tk AS (SELECT ${Text.tokensSql("text")} AS toks FROM documents),
       |big AS (SELECT toks[i] AS w1, toks[i+1] AS w2
       |        FROM tk, (SELECT unnest(range(1,
       |          (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM tk))) AS i) p
@@ -624,25 +625,6 @@ object Wave10 {
     }
   }
 
-  /** The fxlog2 square-and-shift recurrence as a DuckDB recursive CTE
-    * (the q_bm25_fx replay), parameterized on the CTE that supplies the
-    * distinct `n` arguments. Emits `base`/`fxl`/`lg`; join `lg` on n. */
-  private[queries] def fxlogCte(argsCte: String): String =
-    s"""base AS (SELECT n, length(bin(n)) - 1 AS e FROM $argsCte),
-       |fxl(n, i, x, r) AS (
-       |  SELECT n, 0,
-       |    CASE WHEN e <= 30 THEN n << (30 - e) ELSE n >> (e - 30) END,
-       |    CAST(e AS BIGINT) << 30
-       |  FROM base
-       |  UNION ALL
-       |  SELECT n, i + 1,
-       |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-       |         THEN ((x * x) >> 30) >> 1 ELSE (x * x) >> 30 END,
-       |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-       |         THEN r | (1::BIGINT << (29 - i)) ELSE r END
-       |  FROM fxl WHERE i < 30),
-       |lg AS (SELECT n, r FROM fxl WHERE i = 30)""".stripMargin
-
   /** Mutual information + marginal entropies between customer market
     * segment and order priority — the information-theoretic
     * feature-selection primitive (which categorical features carry
@@ -673,7 +655,7 @@ object Wave10 {
        |  UNION ALL SELECT n_s FROM ms
        |  UNION ALL SELECT n_p FROM mp
        |  UNION ALL SELECT n FROM tot)),
-       |${fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |cm AS (SELECT c.seg, c.pri, c.n_sp, ms.n_s, mp.n_p,
        |    c.n_sp * (la.r - lb.r) AS cell_mi_fx
        |  FROM cells c JOIN ms ON ms.seg = c.seg JOIN mp ON mp.pri = c.pri
@@ -692,8 +674,6 @@ object Wave10 {
        |  mi.mi_fx, hs.h_seg_fx, hp.h_pri_fx
        |FROM cm, mi, hs, hp
        |ORDER BY seg, pri""".stripMargin) { (s, d) =>
-    def fxlog(c: org.apache.spark.sql.Column) =
-      call_function("graft_fxlog2", c)
     val cust = Tables.load(s, d, "customer")
       .select(col("c_custkey"), col("c_mktsegment").as("seg"))
     val cells = Tables.load(s, d, "orders")
@@ -707,14 +687,14 @@ object Wave10 {
       .join(broadcast(ms), "seg").join(broadcast(mp), "pri")
       .crossJoin(broadcast(tot))
       .withColumn("cell_mi_fx",
-        col("n_sp") * (fxlog(col("n_sp") * col("n")) -
-          fxlog(col("n_s") * col("n_p"))))
+        col("n_sp") * (FxLog2.column(col("n_sp") * col("n")) -
+          FxLog2.column(col("n_s") * col("n_p"))))
     val mi = cm.agg(sum(col("cell_mi_fx")).as("mi_fx"))
     val hs = ms.crossJoin(broadcast(tot))
-      .agg(sum(col("n_s") * (fxlog(col("n")) - fxlog(col("n_s"))))
+      .agg(sum(col("n_s") * (FxLog2.column(col("n")) - FxLog2.column(col("n_s"))))
         .as("h_seg_fx"))
     val hp = mp.crossJoin(broadcast(tot))
-      .agg(sum(col("n_p") * (fxlog(col("n")) - fxlog(col("n_p"))))
+      .agg(sum(col("n_p") * (FxLog2.column(col("n")) - FxLog2.column(col("n_p"))))
         .as("h_pri_fx"))
     cm.crossJoin(broadcast(mi)).crossJoin(broadcast(hs))
       .crossJoin(broadcast(hp))

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
+import graft.text.Text
 
 /** Wave 12 — causal inference, IR-quality evaluation, and keyphrase
   * extraction. Determinism: common-denominator exact divisions
@@ -119,7 +121,7 @@ object Wave12 {
     "q_retrieval_ndcg",
     s"""WITH RECURSIVE
        |tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
+       |    unnest(${Text.tokensSql("text")}) AS term
        |  FROM documents),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -158,7 +160,7 @@ object Wave12 {
        |                    JOIN norms np ON d.probe_id = np.vec_id),
        |d10 AS (SELECT probe_id, vec_id FROM drk WHERE rd <= 10),
        |args AS (SELECT unnest(range(2, 12)) AS n),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |wt AS (SELECT n - 1 AS rnk, 1152921504606846976 // r AS w FROM lg),
        |sc AS (SELECT s.probe_id,
        |    COUNT(*) AS n_ret,
@@ -216,8 +218,7 @@ object Wave12 {
     */
   val textRake: Q = Q(
     "q_text_rake",
-    """WITH tk AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |              x -> x <> '') AS toks FROM documents),
+    s"""WITH tk AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
       |pos AS (SELECT doc_id, i, toks[i] AS tok,
       |    CASE WHEN toks[i] IN ('the','and','of','to','in','is','a')
       |         THEN 1 ELSE 0 END AS stop

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact.ms
+import graft.text.Text
 
 /** Wave 13 — time-series diagnostics, network structure metrics, and
   * lexicon scoring. All exact-integer: mean-centering multiplied
@@ -146,8 +147,7 @@ object Wave13 {
     def inList(ws: Seq[String]) = ws.map("'" + _ + "'").mkString(", ")
     Q(
       "q_text_sentiment",
-      s"""WITH tk AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-         |              x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents),
          |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          |    CAST(len(list_filter(toks, x -> x IN (${inList(pos)})))
          |      AS BIGINT) AS n_pos,

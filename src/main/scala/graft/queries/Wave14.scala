@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
 
 /** Wave 14 — forecast-accuracy evaluation and behavioral entropy.
   * Both share machinery with their producers (the Holt chain, the
@@ -102,7 +103,7 @@ object Wave14 {
        |  SELECT n FROM c
        |  UNION ALL SELECT total FROM tot
        |  UNION ALL SELECT k_next FROM tot)),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |h AS (SELECT c.from_type,
        |        CAST(SUM(c.n * (lt.r - ln.r)) AS BIGINT) AS h_fx
        |      FROM c JOIN tot ON tot.from_type = c.from_type
@@ -118,8 +119,6 @@ object Wave14 {
        |JOIN lg lk ON lk.n = t.k_next
        |ORDER BY t.from_type""".stripMargin) { (s, d) =>
     import graft.functions.Exact.ms
-    def fxlog(c: org.apache.spark.sql.Column) =
-      call_function("graft_fxlog2", c)
     val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
     val c = Tables.load(s, d, "events")
       .select(col("user_id"), col("event_type"),
@@ -133,7 +132,7 @@ object Wave14 {
       .agg(sum(col("n")).as("total"), count(lit(1)).as("k_next"))
     val h = c.join(broadcast(tot), "from_type")
       .withColumn("term",
-        col("n") * (fxlog(col("total")) - fxlog(col("n"))))
+        col("n") * (FxLog2.column(col("total")) - FxLog2.column(col("n"))))
       .groupBy("from_type").agg(sum(col("term")).as("h_fx"))
     tot.join(h, "from_type")
       .select(col("from_type"), col("total").as("n_transitions"),
@@ -172,7 +171,7 @@ object Wave14 {
        |  FROM lineitem),
        |args AS (SELECT DISTINCT n FROM (
        |  SELECT pc AS n FROM p UNION ALL SELECT qty FROM p)),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |xy AS (SELECT p.l_partkey, lx.r AS x, ly.r AS y
        |  FROM p JOIN lg lx ON lx.n = p.pc JOIN lg ly ON ly.n = p.qty),
        |m AS (SELECT l_partkey, COUNT(*) AS n,
@@ -187,15 +186,13 @@ object Wave14 {
        |FROM m
        |WHERE n * sxx - CAST(sx AS HUGEINT) * sx > 0
        |ORDER BY l_partkey""".stripMargin) { (s, d) =>
-    def fxlog(c: org.apache.spark.sql.Column) =
-      call_function("graft_fxlog2", c)
     val np = Session.partitions(s)
     val xy = Tables.load(s, d, "lineitem")
       .repartition(np)
       .select(col("l_partkey"),
-        fxlog(round(col("l_extendedprice") / col("l_quantity")
+        FxLog2.column(round(col("l_extendedprice") / col("l_quantity")
           * (lit(1) - col("l_discount")) * 100, 0).cast("long")).as("x"),
-        fxlog(col("l_quantity").cast("long")).as("y"))
+        FxLog2.column(col("l_quantity").cast("long")).as("y"))
     val m = xy.groupBy("l_partkey").agg(
       count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),

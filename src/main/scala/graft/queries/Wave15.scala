@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
 import graft.ops.Iterate
+import graft.plans.FxLog2
 import graft.text.Text
 
 /** Wave 15 — corpus statistics and behavioral mining: PMI collocations
@@ -34,8 +35,7 @@ object Wave15 {
   val textCollocations: Q = Q(
     "q_text_collocations",
     s"""WITH RECURSIVE
-       |tk AS (SELECT list_filter(string_split(lower(text), ' '),
-       |         x -> x <> '') AS toks FROM documents),
+       |tk AS (SELECT ${Text.tokensSql("text")} AS toks FROM documents),
        |uni AS (SELECT unnest(toks) AS w FROM tk),
        |c1 AS (SELECT w, COUNT(*) AS n1 FROM uni GROUP BY 1),
        |nt AS (SELECT CAST(SUM(n1) AS BIGINT) AS n_tok FROM c1),
@@ -51,7 +51,7 @@ object Wave15 {
        |  UNION ALL SELECT n1 FROM c1
        |  UNION ALL SELECT n_tok FROM nt
        |  UNION ALL SELECT n_big FROM nb)),
-       |${Wave10.fxlogCte("args")}
+       |${FxLog2.oracleCte("args")}
        |SELECT f.w1, f.w2, f.n2, ca.n1 AS n1_w1, cb.n1 AS n1_w2,
        |  l2.r + 2 * ln_.r - lb_.r - la.r - lbw.r AS pmi_fx
        |FROM f
@@ -64,8 +64,6 @@ object Wave15 {
        |JOIN lg la ON la.n = ca.n1
        |JOIN lg lbw ON lbw.n = cb.n1
        |ORDER BY w1, w2""".stripMargin) { (s, d) =>
-    def fxlog(c: org.apache.spark.sql.Column) =
-      call_function("graft_fxlog2", c)
     val np = Session.partitions(s)
     val docs = Tables.load(s, d, "documents").repartition(np)
     val c1 = docs.select(explode(Text.tokens(col("text"))).as("w"))
@@ -85,9 +83,9 @@ object Wave15 {
       .join(c1.toDF("w2", "n1_w2"), "w2")
       .crossJoin(broadcast(nt)).crossJoin(broadcast(nb))
       .select(col("w1"), col("w2"), col("n2"), col("n1_w1"), col("n1_w2"),
-        (fxlog(col("n2")) + lit(2) * fxlog(col("n_tok"))
-          - fxlog(col("n_big")) - fxlog(col("n1_w1"))
-          - fxlog(col("n1_w2"))).as("pmi_fx"))
+        (FxLog2.column(col("n2")) + lit(2) * FxLog2.column(col("n_tok"))
+          - FxLog2.column(col("n_big")) - FxLog2.column(col("n1_w1"))
+          - FxLog2.column(col("n1_w2"))).as("pmi_fx"))
       .orderBy("w1", "w2")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
 import graft.text.Text
 
 /** Wave 16 — supervised-ML building blocks and series mining, all in
@@ -220,8 +221,7 @@ object Wave16 {
   val textZipf: Q = Q(
     "q_text_zipf",
     s"""WITH RECURSIVE
-       |tk AS (SELECT source, unnest(list_filter(
-       |    string_split(lower(text), ' '), z -> z <> '')) AS w
+       |tk AS (SELECT source, unnest(${Text.tokensSql("text")}) AS w
        |  FROM documents),
        |c1 AS (SELECT source, w, COUNT(*) AS n FROM tk GROUP BY 1, 2),
        |f AS (SELECT * FROM (SELECT source, w, n,
@@ -230,7 +230,7 @@ object Wave16 {
        |  FROM c1) WHERE rnk <= 256),
        |args AS (SELECT DISTINCT n FROM (
        |  SELECT rnk AS n FROM f UNION ALL SELECT n FROM f)),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |xy AS (SELECT f.source, lx.r >> 18 AS x, ly.r >> 18 AS y
        |  FROM f JOIN lg lx ON lx.n = f.rnk JOIN lg ly ON ly.n = f.n),
        |m AS (SELECT source, COUNT(*) AS nr,

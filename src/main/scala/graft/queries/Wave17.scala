@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
 import graft.ops.Iterate
+import graft.plans.FxLog2
 import graft.text.Text
 
 /** Wave 17 — the model-adjacent quartet: multiclass Naive Bayes
@@ -15,7 +16,6 @@ import graft.text.Text
   */
 object Wave17 {
 
-  private def fxlog(c: Column): Column = call_function("graft_fxlog2", c)
 
   /** Multinomial Naive Bayes language identification, trained and
     * scored in one plan (McCallum & Nigam 1998's event model): the
@@ -40,8 +40,7 @@ object Wave17 {
        |    CASE WHEN md5(CAST(doc_id AS VARCHAR)) < 'cc' THEN 1 ELSE 0 END
        |      AS is_train
        |  FROM documents),
-       |tk AS (SELECT lang, unnest(list_filter(
-       |    string_split(lower(text), ' '), z -> z <> '')) AS w
+       |tk AS (SELECT lang, unnest(${Text.tokensSql("text")}) AS w
        |  FROM lab WHERE is_train = 1),
        |cw AS (SELECT lang, w, COUNT(*) AS n_cw FROM tk GROUP BY 1, 2),
        |ct AS (SELECT lang, CAST(SUM(n_cw) AS BIGINT) AS n_c
@@ -52,8 +51,7 @@ object Wave17 {
        |nds AS (SELECT COUNT(*) AS nd FROM lab WHERE is_train = 1),
        |cls AS (SELECT ndc.lang, ndc.n_dc, ct.n_c + vs.v AS denom
        |  FROM ndc JOIN ct ON ct.lang = ndc.lang, vs),
-       |tt AS (SELECT doc_id, lang AS true_lang, unnest(list_filter(
-       |    string_split(lower(text), ' '), z -> z <> '')) AS w
+       |tt AS (SELECT doc_id, lang AS true_lang, unnest(${Text.tokensSql("text")}) AS w
        |  FROM lab WHERE is_train = 0),
        |args AS (SELECT DISTINCT n FROM (
        |  SELECT n_cw + 1 AS n FROM cw
@@ -61,7 +59,7 @@ object Wave17 {
        |  UNION ALL SELECT n_dc FROM cls
        |  UNION ALL SELECT nd FROM nds
        |  UNION ALL SELECT 1) WHERE n >= 1),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |terms AS (SELECT t.doc_id, t.true_lang, c.lang,
        |    CAST(SUM(ln_.r - ld.r) AS BIGINT) AS tok_fx
        |  FROM tt t CROSS JOIN cls c
@@ -111,8 +109,8 @@ object Wave17 {
       .join(cw.withColumnRenamed("lang", "clang"),
         Seq("clang", "w"), "left")
       .select(col("doc_id"), col("true_lang"), col("clang"),
-        (fxlog(coalesce(col("n_cw"), lit(0L)) + 1)
-          - fxlog(col("denom"))).as("term_fx"))
+        (FxLog2.column(coalesce(col("n_cw"), lit(0L)) + 1)
+          - FxLog2.column(col("denom"))).as("term_fx"))
       .groupBy("doc_id", "true_lang", "clang")
       .agg(sum("term_fx").as("tok_fx"))
     val grid = lab.filter(col("is_train") === 0)
@@ -122,7 +120,7 @@ object Wave17 {
       .join(terms, Seq("doc_id", "true_lang", "clang"), "left")
       .select(col("doc_id"), col("true_lang"), col("clang"),
         (coalesce(col("tok_fx"), lit(0L))
-          + fxlog(col("n_dc")) - fxlog(col("nd"))).as("score_fx"))
+          + FxLog2.column(col("n_dc")) - FxLog2.column(col("nd"))).as("score_fx"))
     val byDoc = Window.partitionBy("doc_id")
       .orderBy(col("score_fx").desc, col("clang").asc)
     grid.withColumn("rk", row_number().over(byDoc)).filter(col("rk") === 1)
@@ -308,8 +306,7 @@ object Wave17 {
        |  FROM documents
        |  WHERE md5(CAST(doc_id AS VARCHAR)) < 'cc'),
        |pres AS (SELECT DISTINCT doc_id, y, w FROM (
-       |  SELECT doc_id, y, unnest(list_filter(
-       |    string_split(lower(text), ' '), z -> z <> '')) AS w
+       |  SELECT doc_id, y, unnest(${Text.tokensSql("text")}) AS w
        |  FROM lab)),
        |tot AS (SELECT CAST(SUM(y) AS BIGINT) AS p,
        |    CAST(COUNT(*) - SUM(y) AS BIGINT) AS nn FROM lab),
@@ -326,7 +323,7 @@ object Wave17 {
        |  UNION ALL SELECT p FROM tot
        |  UNION ALL SELECT nn FROM tot
        |  UNION ALL SELECT p + nn FROM tot) WHERE n >= 1),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |flat AS (SELECT c.w, c.a, c.b, t.p, t.nn,
        |    t.p - c.a AS pa, t.nn - c.b AS nb,
        |    c.a + c.b AS r1, t.p + t.nn - c.a - c.b AS r0,

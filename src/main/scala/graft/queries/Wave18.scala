@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.text.Text
 
 /** Wave 18 — pipeline-infrastructure operators: TextRank-style
   * extractive chunk selection (context compression for LLM corpora)
@@ -45,8 +46,7 @@ object Wave18 {
     }.mkString(",\n")
     Q(
       "q_textrank_chunks",
-      s"""WITH tk AS (SELECT doc_id, list_filter(
-         |    string_split(lower(text), ' '), z -> z <> '') AS toks
+      s"""WITH tk AS (SELECT doc_id, ${Text.tokensSql("text")} AS toks
          |  FROM documents),
          |ch AS (SELECT doc_id, g,
          |    array_to_string(toks[g * 8 + 1 : g * 8 + 8], ' ') AS chunk

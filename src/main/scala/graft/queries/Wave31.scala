@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.text.Text
 
 /** Wave 31 — curation signals and featurization: integer Flesch-style
   * readability scoring (Flesch 1948; the education-value filter in
@@ -92,8 +93,7 @@ object Wave31 {
     */
   val featureHashing: Q = Q(
     "q_feature_hashing",
-    s"""WITH tok AS (SELECT unnest(list_filter(string_split(lower(text), ' '),
-       |      x -> x <> '')) AS term
+    s"""WITH tok AS (SELECT unnest(${Text.tokensSql("text")}) AS term
        |  FROM documents),
        |tf AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf
        |  FROM tok GROUP BY 1),
@@ -113,7 +113,7 @@ object Wave31 {
        |FROM bk, g ORDER BY bk.bucket""".stripMargin) { (s, d) =>
     val np = Session.partitions(s)
     val tf = Tables.load(s, d, "documents").repartition(np)
-      .select(explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
+      .select(explode(Text.tokens(col("text")))
         .as("term"))
       .groupBy("term").agg(count(lit(1)).as("tf"))
     val hb = tf.withColumn("bucket",

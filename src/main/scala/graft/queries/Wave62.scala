@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
 
 /** Wave 62 — embedding-space isotropy (is the representation space
   * collapsed onto a few directions? Ethayarajh EMNLP'19 made this the
@@ -50,7 +51,7 @@ object Wave62 {
        |args AS (SELECT DISTINCT n FROM (
        |  SELECT var_d AS n FROM vr WHERE var_d > 0
        |  UNION ALL SELECT trace_d AS n FROM tr) ua),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |h AS MATERIALIZED (SELECT CAST(SUM(CASE WHEN vr.var_d > 0
        |      THEN CAST(vr.var_d AS HUGEINT) * (lt.r - lv.r) ELSE 0 END)
        |      // MAX(tr.trace_d) AS BIGINT) AS h_q30

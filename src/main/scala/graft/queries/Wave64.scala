@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.FxLog2
 
 /** Wave 64 — the two standard model-monitoring / feature-screening
   * scores next to the registry's drift detectors: the Population
@@ -67,7 +68,7 @@ object Wave64 {
          |  FROM cp JOIN cnq ON cnq.bin = cp.bin, tt),
          |args AS (SELECT DISTINCT n FROM (
          |  SELECT ap AS n FROM pre UNION ALL SELECT aq AS n FROM pre) ua),
-         |${Wave10.fxlogCte("args")},
+         |${FxLog2.oracleCte("args")},
          |te AS (SELECT pre.bin, pre.c_p, pre.c_q, pre.pp_ppm, pre.pq_ppm,
          |    CAST((pre.pp_ppm - pre.pq_ppm) * (la.r - lb.r) AS BIGINT)
          |      AS term_fx
@@ -182,7 +183,7 @@ object Wave64 {
          |  FROM fb JOIN gt ON gt.feature = fb.feature),
          |args AS (SELECT DISTINCT n FROM (
          |  SELECT ag AS n FROM pre UNION ALL SELECT ab AS n FROM pre) ua),
-         |${Wave10.fxlogCte("args")},
+         |${FxLog2.oracleCte("args")},
          |te AS (SELECT pre.feature, pre.bin,
          |    CAST(pre.good AS BIGINT) AS good, CAST(pre.bad AS BIGINT) AS bad,
          |    CAST(la.r - lb.r AS BIGINT) AS woe_fx,

@@ -66,7 +66,7 @@ object Wave65 {
   val dedupPrefixFilter: Q = Q(
     "q_dedup_prefixfilter",
     s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+       |    ${Text.tokensSql("text")} AS toks
        |  FROM documents),
        |pos AS (SELECT unnest(range(1,
        |  (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM t))) AS i),

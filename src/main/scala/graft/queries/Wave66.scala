@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.ops.BoundedWindow
+import graft.plans.FxLog2
 
 /** Wave 66 — degree-distribution power-law tail fit over the shared
   * co-purchase graph: the scale-free-ness audit (Clauset/Shalizi/
@@ -52,7 +53,7 @@ object Wave66 {
        |hist AS (SELECT deg, CAST(COUNT(*) AS BIGINT) AS n_nodes
        |  FROM deg GROUP BY 1),
        |args AS (SELECT DISTINCT deg AS n FROM hist),
-       |${Wave10.fxlogCte("args")},
+       |${FxLog2.oracleCte("args")},
        |tail AS (SELECT CAST(SUM(h.n_nodes) AS BIGINT) AS n_tail,
        |    CAST(SUM(h.n_nodes * (lg.r - (1::BIGINT << 30))) AS BIGINT)
        |      AS a_fx
@@ -69,14 +70,12 @@ object Wave66 {
        |SELECT c.deg, c.n_nodes, c.n_ge, f.n_tail,
        |  f.a_fx AS a_fx_sum, f.alpha_micro
        |FROM ccdf c, fit f ORDER BY c.deg""".stripMargin) { (s, d) =>
-    def fxlog(c: org.apache.spark.sql.Column) =
-      call_function("graft_fxlog2", c)
     val eu = GraphShared.symmetric(s, d).select("u", "v")
     val deg = eu.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val hist = deg.groupBy("deg").agg(count(lit(1)).as("n_nodes"))
     val fit = hist.filter(col("deg") >= Dmin)
       .agg(sum(col("n_nodes")).as("n_tail"),
-        sum(col("n_nodes") * (fxlog(col("deg")) - lit(1L << 30)))
+        sum(col("n_nodes") * (FxLog2.column(col("deg")) - lit(1L << 30)))
           .as("a_fx"))
       .select(col("n_tail"), col("a_fx"),
         expr(s"""CASE WHEN a_fx > 0 THEN 1000000 + CAST(

@@ -27,8 +27,8 @@ object Wave68 {
     * combined aggregates. Never a self-join, never all-pairs. */
   val textDupgramCoverage: Q = Q(
     "q_text_dupgram_coverage",
-    """WITH d AS (SELECT doc_id,
-      |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH d AS (SELECT doc_id,
+      |    ${Text.tokensSql("text")} AS toks
       |  FROM documents),
       |sh AS (SELECT doc_id,
       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.text.Text
 
 /** Wave 69 — LLM-evaluation aggregation primitives, part 1: arena-
   * style pairwise-preference ranking (Bradley-Terry 1952; the
@@ -200,13 +201,13 @@ object Wave69 {
     * the kappa arithmetic runs on dictionary-grain rows. */
   val evalKappa: Q = Q(
     "q_eval_kappa",
-    """WITH r AS (
+    s"""WITH r AS (
       |  SELECT lang,
       |    CASE WHEN len(toks) >= 56 THEN 1 ELSE 0 END AS a,
       |    CASE WHEN 2 * len(list_distinct(toks)) >= len(toks)
       |         THEN 1 ELSE 0 END AS b
       |  FROM (SELECT lang,
-      |          list_filter(string_split(lower(text), ' '), x -> x <> '')
+      |          ${Text.tokensSql("text")}
       |            AS toks
       |        FROM documents) t),
       |cm AS (SELECT lang,
@@ -232,7 +233,7 @@ object Wave69 {
       |FROM cm ORDER BY lang""".stripMargin) { (s, d) =>
     val r = Tables.load(s, d, "documents")
       .select(col("lang"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+        Text.tokens(col("text")).as("toks"))
       .select(col("lang"),
         when(size(col("toks")) >= 56, 1L).otherwise(0L).as("a"),
         when(size(array_distinct(col("toks"))) * 2 >= size(col("toks")), 1L)

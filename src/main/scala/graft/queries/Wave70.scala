@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
 import graft.text.Text
 
 /** Wave 70 — LLM-evaluation aggregation primitives, part 2: the
@@ -32,8 +33,8 @@ object Wave70 {
     * tot unigrams = token count and tot bigrams = len−1, so only the
     * clip sums need gram joins. */
   private def pairStatsSql: String =
-    """d AS MATERIALIZED (SELECT doc_id, lang,
-      |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""d AS MATERIALIZED (SELECT doc_id, lang,
+      |    ${Text.tokensSql("text")} AS toks
       |  FROM documents),
       |pr AS (SELECT doc_id AS cid,
       |    LEAD(doc_id) OVER (PARTITION BY lang ORDER BY doc_id) AS rid,
@@ -76,7 +77,7 @@ object Wave70 {
     val d = Tables.load(s, dir, "documents")
       .repartition(Session.partitions(s))
       .select(col("doc_id"), col("lang"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+        Text.tokens(col("text")).as("toks"))
     val byLang = Window.partitionBy("lang").orderBy("doc_id")
     val pr = d.select(col("doc_id").as("cid"),
       lead(col("doc_id"), 1).over(byLang).as("rid"),
@@ -122,7 +123,7 @@ object Wave70 {
        |  SELECT clip2 FROM st UNION ALL
        |  SELECT c_len FROM st UNION ALL
        |  SELECT c_len - 1 FROM st) z WHERE n > 0),
-       |${graft.queries.Wave10.fxlogCte("args")}
+       |${FxLog2.oracleCte("args")}
        |SELECT st.cid AS cand_id, st.rid AS ref_id, st.c_len, st.r_len,
        |  st.clip1, st.clip2,
        |  CASE WHEN st.clip1 > 0 AND st.clip2 > 0 THEN

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.text.Text
 
 /** Wave 71 — corpus-curation forensics: Burrows' Delta authorship/
   * style distance between sources (Burrows 2002 "Delta: a measure of
@@ -37,7 +38,7 @@ object Wave71 {
     Q(
       "q_text_burrows_delta",
       s"""WITH d AS MATERIALIZED (SELECT source,
-         |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+         |    ${Text.tokensSql("text")} AS toks
          |  FROM documents),
          |tot AS MATERIALIZED (SELECT source,
          |    CAST(SUM(len(toks)) AS BIGINT) AS n_toks
@@ -73,7 +74,7 @@ object Wave71 {
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val docs = Tables.load(s, d, "documents")
         .select(col("source"),
-          expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+          Text.tokens(col("text")).as("toks"))
       val tot = docs.groupBy("source")
         .agg(sum(size(col("toks")).cast("long")).as("n_toks"))
       val cnt = docs

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Session, Tables}
+import graft.plans.FxLog2
+import graft.text.Text
 
 /** Wave 72 — retrieval/curation scoring, part 3: Mean Reciprocal Rank
   * (Voorhees TREC-8 1999; the first-relevant-hit metric next to the
@@ -67,7 +69,7 @@ object Wave72 {
     "q_text_source_kl",
     s"""WITH RECURSIVE
        |tok AS (SELECT source,
-       |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
+       |    unnest(${Text.tokensSql("text")}) AS w
        |  FROM documents),
        |cs AS MATERIALIZED (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c_sw
        |  FROM tok GROUP BY 1, 2),
@@ -83,7 +85,7 @@ object Wave72 {
        |  SELECT cc.c_cw * ns.n_s
        |  FROM cs JOIN cc ON cc.w = cs.w JOIN ns ON ns.source = cs.source) z
        |  WHERE n > 0),
-       |${Wave10.fxlogCte("args")}
+       |${FxLog2.oracleCte("args")}
        |SELECT cs.source, MIN(ns.n_s) AS n_toks, MIN(ns.n_types) AS n_types,
        |  CAST(SUM(cs.c_sw * (la.r - lb.r)) AS BIGINT) AS kl_fx
        |FROM cs
@@ -96,7 +98,7 @@ object Wave72 {
     val tok = Tables.load(s, d, "documents")
       .repartition(Session.partitions(s))
       .select(col("source"),
-        explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
+        explode(Text.tokens(col("text")))
           .as("w"))
     val cs = tok.groupBy("source", "w").agg(count(lit(1)).as("c_sw"))
     val cc = cs.groupBy("w").agg(sum(col("c_sw")).as("c_cw"))
@@ -109,8 +111,8 @@ object Wave72 {
       .crossJoin(broadcast(nc))
       .select(col("source"), col("n_s"), col("n_types"),
         (col("c_sw") *
-          (call_function("graft_fxlog2", col("c_sw") * col("n_c")) -
-            call_function("graft_fxlog2", col("c_cw") * col("n_s"))))
+          (FxLog2.column(col("c_sw") * col("n_c")) -
+            FxLog2.column(col("c_cw") * col("n_s"))))
           .as("contrib"))
       .groupBy("source")
       .agg(min(col("n_s")).as("n_toks"), min(col("n_types")).as("n_types"),

@@ -39,7 +39,7 @@ object Wave74 {
     Q(
       "q_eval_f1_langid",
       s"""WITH t AS (SELECT doc_id, lang,
-         |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+         |    ${Text.tokensSql("text")} AS toks
          |  FROM documents),
          |p AS MATERIALIZED (SELECT labeled, $pick AS pred FROM
          |  (SELECT doc_id, lang AS labeled, $markerSql FROM t) sc),

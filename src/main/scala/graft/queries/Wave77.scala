@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.text.Text
 
 /** Wave 77 — eval-reliability auditing, part 2: Krippendorff's alpha
   * (Krippendorff 1970/2004 — the multi-rater generalization of Wave69's
@@ -33,14 +34,14 @@ object Wave77 {
     * the alpha arithmetic runs on dictionary-grain rows. */
   val evalKrippendorff: Q = Q(
     "q_eval_krippendorff",
-    """WITH r AS (
+    s"""WITH r AS (
       |  SELECT lang,
       |    CASE WHEN len(toks) >= 56 THEN 1 ELSE 0 END
       |      + CASE WHEN 2 * len(list_distinct(toks)) >= len(toks)
       |             THEN 1 ELSE 0 END
       |      + CASE WHEN n_chars <= 400 THEN 1 ELSE 0 END AS s
       |  FROM (SELECT lang,
-      |          list_filter(string_split(lower(text), ' '), x -> x <> '')
+      |          ${Text.tokensSql("text")}
       |            AS toks,
       |          len(text) AS n_chars
       |        FROM documents) t),
@@ -68,7 +69,7 @@ object Wave77 {
       |FROM ag ORDER BY lang""".stripMargin) { (s, d) =>
     val r = Tables.load(s, d, "documents")
       .select(col("lang"), length(col("text")).as("n_chars"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+        Text.tokens(col("text")).as("toks"))
       .select(col("lang"),
         (when(size(col("toks")) >= 56, 1L).otherwise(0L)
           + when(size(array_distinct(col("toks"))) * 2 >= size(col("toks")),

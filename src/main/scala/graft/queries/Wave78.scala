@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.text.Text
 
 /** Wave 78 — training-mixture planning: the token-budget allocation a
   * data-curation pass computes before launching a run (Hoffmann et al.
@@ -28,10 +29,9 @@ object Wave78 {
     * grain rows. */
   val tokenBudget: Q = Q(
     "q_token_budget",
-    """WITH tk AS (
+    s"""WITH tk AS (
       |  SELECT source,
-      |    CAST(SUM(len(list_filter(string_split(lower(text), ' '),
-      |                             x -> x <> ''))) AS BIGINT) AS avail
+      |    CAST(SUM(len(${Text.tokensSql("text")})) AS BIGINT) AS avail
       |  FROM documents GROUP BY 1),
       |w AS (SELECT source, avail,
       |    CAST(FLOOR(SQRT(CAST(avail AS DOUBLE))) AS BIGINT) AS wt
@@ -51,7 +51,7 @@ object Wave78 {
       |ORDER BY source""".stripMargin) { (s, d) =>
     val tk = Tables.load(s, d, "documents")
       .select(col("source"),
-        size(expr("filter(split(lower(text), ' '), x -> x <> '')"))
+        size(Text.tokens(col("text")))
           .cast("long").as("ntok"))
       .groupBy("source").agg(sum(col("ntok")).as("avail"))
     val w = tk.withColumn("wt",

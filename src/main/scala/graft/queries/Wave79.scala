@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Session, Tables}
+import graft.text.Text
 
 /** Wave 79 — LLM-text provenance: green-list watermark detection
   * (Kirchenbauer et al. 2023 "A Watermark for Large Language Models";
@@ -29,9 +30,9 @@ object Wave79 {
     * a dictionary-grain language rollup — no joins, no windows. */
   val wmDetect: Q = Q(
     "q_wm_detect",
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id, lang,
-      |    unnest(list_filter(string_split(lower(text), ' '), x -> x <> ''))
+      |    unnest(${Text.tokensSql("text")})
       |      AS w
       |  FROM documents),
       |dg AS (SELECT doc_id, lang,
@@ -56,7 +57,7 @@ object Wave79 {
     val tok = Tables.load(s, d, "documents")
       .repartition(Session.partitions(s))
       .select(col("doc_id"), col("lang"),
-        explode(expr("filter(split(lower(text), ' '), x -> x <> '')"))
+        explode(Text.tokens(col("text")))
           .as("w"))
     val dg = tok
       .select(col("doc_id"), col("lang"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
 import graft.ops.Iterate
 import graft.functions.Exact._
+import graft.text.Text
 
 /** Wave 9 — exact-integer time-series smoothing, sequential change
   * detection, and leakage-safe feature encoding.
@@ -224,8 +225,8 @@ object Wave9 {
     */
   val vocabGrowth: Q = Q(
     "q_vocab_growth",
-    """WITH tk AS (SELECT doc_id,
-      |        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH tk AS (SELECT doc_id,
+      |        ${Text.tokensSql("text")} AS toks
       |      FROM documents),
       |bg AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bg
       |       FROM tk, (SELECT unnest(range(1,
@@ -245,7 +246,7 @@ object Wave9 {
     val bg = Tables.load(s, d, "documents")
       .repartition(Session.partitions(s))
       .select(col("doc_id"),
-        explode(graft.text.Text.shingleListUdf(2)(col("text"))).as("bg"))
+        explode(Text.shingleListUdf(2)(col("text"))).as("bg"))
     val pb = bg.groupBy(expr("doc_id div 16").as("bucket"))
       .agg(count(lit(1)).as("n_bigrams"), countDistinct(col("doc_id")).as("n_docs"))
     val nb = bg.groupBy("bg").agg(min(col("doc_id")).as("first_doc"))
@@ -791,12 +792,12 @@ object Wave9 {
     */
   val curationPipeline: Q = Q(
     "q_curation_pipeline",
-    """WITH base AS (SELECT doc_id, text FROM documents
+    s"""WITH base AS (SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 100000 AS doc_id, text FROM documents
       |  WHERE doc_id % 83 = 5),
       |d AS (SELECT doc_id, text,
-      |        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+      |        ${Text.tokensSql("text")} AS toks
       |      FROM base),
       |q AS (SELECT doc_id, text, toks,
       |        (len(toks) >= 30 AND
@@ -850,7 +851,6 @@ object Wave9 {
       |FROM q LEFT JOIN (SELECT doc_id, keeper FROM ex WHERE doc_id <> keeper) ed
       |  ON ed.doc_id = q.doc_id
       |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
-    import graft.text.Text
     val np = Session.partitions(s)
     val docs = Tables.load(s, d, "documents").select("doc_id", "text")
     val base = docs
@@ -859,7 +859,7 @@ object Wave9 {
       .repartition(np)
     val stop = array(Seq("the", "a", "of", "and", "to").map(lit): _*)
     val q = base.select(col("doc_id"), col("text"),
-      expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+      Text.tokens(col("text")).as("toks"))
       .withColumn("q_ok",
         size(col("toks")) >= 30 && arrays_overlap(col("toks"), stop))
     val fp = q.filter(col("q_ok") && col("doc_id") % 97 =!= 3)
@@ -1177,8 +1177,8 @@ object Wave9 {
     */
   val skipgramPairs: Q = Q(
     "q_skipgram_pairs",
-    """WITH tk AS (SELECT doc_id,
-      |        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    s"""WITH tk AS (SELECT doc_id,
+      |        ${Text.tokensSql("text")} AS toks
       |      FROM documents),
       |tok AS (SELECT doc_id, i, toks[i] AS w
       |        FROM tk, (SELECT unnest(range(1,
@@ -1219,7 +1219,7 @@ object Wave9 {
     val tok = Tables.load(s, d, "documents")
       .repartition(np)
       .select(col("doc_id"),
-        posexplode(expr("filter(split(lower(text), ' '), x -> x <> '')")))
+        posexplode(Text.tokens(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("w"))
     val cnt = tok.groupBy("w").agg(count(lit(1)).as("c"))
     val tot = cnt.agg(sum(col("c")).as("total"))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.FxLog2
 
 /** BM25 lexical retrieval (Robertson/Spärck Jones probabilistic
   * relevance framework; the Okapi BM25 formulation with the standard
@@ -119,8 +120,8 @@ object Bm25 {
       .agg(countDistinct(col(idCol)).as("df"))
       .crossJoin(broadcast(stats))
       .select(col("term"),
-        (call_function("graft_fxlog2", col("n_docs") * 2L + 2L) -
-          call_function("graft_fxlog2", col("df") * 2L + 1L)).as("idf2"))
+        (FxLog2.column(col("n_docs") * 2L + 2L) -
+          FxLog2.column(col("df") * 2L + 1L)).as("idf2"))
 
     tf.join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))

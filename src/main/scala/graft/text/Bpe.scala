@@ -78,9 +78,8 @@ object Bpe {
 
   /** `documents` -> (w, freq): the single corpus-wide shuffle. */
   def wordFreq(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .repartition(Session.partitions(s))
-      .select(explode(split(lower(col("text")), " ")).as("w"))
+    Text.tokenRows(Tables.load(s, dir, "documents").repartition(Session.partitions(s)),
+        col("text"), "w")
       .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= MaxWordLen)
       .groupBy("w")
       .agg(count(lit(1)).as("freq"))
@@ -185,9 +184,8 @@ object Bpe {
   def encodeUdf(merges: Seq[(String, String)]) = udf { (text: String) =>
     if (text == null) (0L, 0L, "")
     else {
-      val words = text.toLowerCase(java.util.Locale.ROOT).split(" ")
-        .filter(w => w.nonEmpty && w.length <= MaxWordLen &&
-          w.forall(c => c >= 'a' && c <= 'z'))
+      val words = Text.tokenize(text)
+        .filter(w => w.length <= MaxWordLen && w.forall(c => c >= 'a' && c <= 'z'))
       val toks = words.flatMap(w => tokenizeWord(w, merges))
       (words.length.toLong, toks.length.toLong, toks.mkString(" "))
     }
@@ -203,7 +201,7 @@ object Bpe {
 
   private def baseSql: String =
     s"""WITH w0 AS MATERIALIZED (SELECT w, COUNT(*) AS freq FROM (
-       |  SELECT unnest(list_filter(string_split(lower(text), ' '),
+       |  SELECT unnest(list_filter(${Text.tokensSql("text")},
        |    x -> regexp_matches(x, '^[a-z]+$$'))) AS w
        |  FROM documents) WHERE len(w) <= $MaxWordLen GROUP BY 1),
        |pos AS (SELECT unnest(range(1, ${MaxWordLen + 2})) AS i),
@@ -276,7 +274,7 @@ object Bpe {
        |wt AS MATERIALIZED (SELECT word,
        |  string_agg(sym, ' ' ORDER BY pos) AS wtoks, COUNT(*) AS ntoks
        |  FROM s$k GROUP BY word),
-       |dt AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
+       |dt AS (SELECT doc_id, list_filter(${Text.tokensSql("text")},
        |    x -> regexp_matches(x, '^[a-z]+$$') AND len(x) <= $MaxWordLen) AS ws
        |  FROM documents),
        |dw AS (SELECT doc_id, i, ws[i] AS w

@@ -26,11 +26,8 @@ object LexIndex {
 
   private def postings(docs: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
-    val tf = docs
-      .repartition(Session.partitions(docs.sparkSession))
-      .select(col(idCol).as("doc_id"),
-        explode(split(lower(col(textCol)), " ")).as("term"))
-      .filter(col("term") =!= "")
+    val tf = Text.tokenRows(docs.repartition(Session.partitions(docs.sparkSession)),
+        col(textCol), "term", col(idCol).as("doc_id"))
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))

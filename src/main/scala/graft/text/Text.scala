@@ -1,18 +1,40 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Text-analysis building blocks for training-data pipelines, all as
-  * codegen-friendly Column expressions (no UDFs in the hot path —
-  * higher-order functions stay inside whole-stage codegen).
+/** Text-analysis building blocks for training-data pipelines.
+  *
+  * The whitespace tokenizer (lowercase, split on `' '`, drop empties)
+  * is one rule that Spark and the DuckDB oracles must apply alike, so
+  * it is spelled only here, once per form: [[tokenize]] in compiled
+  * UDFs, [[tokens]] as an array, [[tokenRows]] as rows, [[tokensSql]]
+  * in oracle SQL. Higher-order function lambdas run interpreted, outside
+  * whole-stage codegen, so hot paths use the compiled UDFs or the row
+  * form, whose filter is codegen'd.
   */
 object Text {
 
-  /** Lowercased whitespace tokens, empties removed. */
+  /** Lowercased whitespace tokens, empties removed, for compiled UDFs.
+    * `Locale.ROOT`: tokens do not depend on the host's default locale. */
+  def tokenize(s: String): Array[String] =
+    s.toLowerCase(java.util.Locale.ROOT).split(" ").filter(_.nonEmpty)
+
+  /** Lowercased whitespace tokens, empties removed, as an array. */
   def tokens(text: Column): Column =
     filter(split(lower(text), " "), t => t =!= "")
+
+  /** [[tokens]] as rows: `keep` plus one `as` column per token. Splits,
+    * explodes, then drops empty tokens with a row filter, which is
+    * codegen'd where a `filter` inside the array is not. */
+  def tokenRows(df: DataFrame, text: Column, as: String, keep: Column*): DataFrame =
+    df.select(keep :+ explode(split(lower(text), " ")).as(as): _*)
+      .filter(col(as) =!= "")
+
+  /** [[tokens]] in DuckDB SQL, over the SQL expression `text`. */
+  def tokensSql(text: String): String =
+    s"list_filter(string_split(lower($text), ' '), x -> x <> '')"
 
   /** Word n-gram shingles: ["a b c", "b c d", ...]; empty when the doc
     * has fewer than n tokens (guard needed: Spark's `sequence(1, 0)`
@@ -38,7 +60,7 @@ object Text {
     udf { (text: String) =>
       if (text == null) Array.empty[String]
       else {
-        val toks = text.toLowerCase.split(" ").filter(_.nonEmpty)
+        val toks = tokenize(text)
         if (toks.length < n) Array.empty[String]
         else {
           val seen = new java.util.LinkedHashSet[String]()
@@ -62,7 +84,7 @@ object Text {
     udf { (text: String) =>
       if (text == null) Array.empty[String]
       else {
-        val toks = text.toLowerCase.split(" ").filter(_.nonEmpty)
+        val toks = tokenize(text)
         if (toks.length < n) Array.empty[String]
         else {
           val out = new Array[String](toks.length - n + 1)
@@ -89,8 +111,7 @@ object Text {
     udf { (text: String) =>
       if (text == null) (0L, 0L, 0L, "")
       else {
-        val ws = text.toLowerCase(java.util.Locale.ROOT).split(" ")
-          .filter(_.nonEmpty)
+        val ws = tokenize(text)
         val len = ws.length
         val covered = new Array[Boolean](len)
         if (len >= n) {
@@ -155,16 +176,15 @@ object Text {
     * text (r14): HOF filter lambdas run interpreted (~10x slower than
     * compiled code in hot paths — CLAUDE.md lore), and the two-step
     * langScores form still walks the token array once per language.
-    * This UDF lowercases, splits and counts every language's markers
-    * in a single token walk. Empty tokens are never markers, so the
-    * usual `x <> ''` filter is unnecessary; counts are multiplicity-
-    * preserving, identical to `size(filter(toks, isin(markers)))`. */
+    * This UDF tokenizes once ([[tokenize]]) and counts every language's
+    * markers in a single token walk; counts are multiplicity-preserving,
+    * identical to `size(filter(toks, isin(markers)))`. */
   val langScoresUdf: org.apache.spark.sql.expressions.UserDefinedFunction = {
     val sets: Array[Set[String]] = langMarkers.map(_._2.toSet).toArray
     udf { (text: String) =>
       val c = new Array[Long](sets.length)
       if (text != null) {
-        val toks = text.toLowerCase(java.util.Locale.ROOT).split(" ")
+        val toks = tokenize(text)
         var j = 0
         while (j < toks.length) {
           var i = 0

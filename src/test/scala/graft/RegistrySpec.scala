@@ -53,6 +53,20 @@ class RegistrySpec extends AnyFunSuite {
     } finally conf.set(key, configured)
   }
 
+  test("the whitespace tokenizer is spelled once: no src/main file but " +
+    "graft/text/Text.scala lowercases and splits on ' '") {
+    import scala.jdk.CollectionConverters._
+    val spelling =
+      """split\(lower\(|toLowerCase(\(java\.util\.Locale\.ROOT\))?\.split\(" "\)""".r
+    val root = java.nio.file.Paths.get("src/main")
+    val spellers = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p))
+      .filter(p => spelling.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toList
+    assert(spellers == List("scala/graft/text/Text.scala"),
+      s"files spelling the tokenizer outside graft.text.Text: $spellers")
+  }
+
   test("the program's env vars are exactly SPARK_GRAFT_CPUS and " +
     "SPARK_GRAFT_ONLY: every sys.env / System.getenv read in src/main " +
     "names one of them by a literal key") {

@@ -14,6 +14,19 @@ class TextSpec extends AnyFunSuite {
     assert(out == Seq("the", "quick", "brown"))
   }
 
+  test("the shingle UDFs tokenize like Text.tokens under a Turkish " +
+    "default locale, where 'I' would lowercase to a dotless 'ı'") {
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      val row = Seq("TITLE").toDF("text")
+        .select(Text.shingleSetUdf(1)(col("text")),
+          Text.shingleListUdf(1)(col("text")), Text.tokens(col("text")))
+        .head
+      assert((0 to 2).map(row.getSeq[String](_)) == Seq.fill(3)(Seq("title")))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("shingles: n-grams with short-doc guard") {
     val df = Seq("a b c d", "a b").toDF("text")
       .select(Text.shingles(Text.tokens(col("text")), 3).as("sh"))
