@@ -1,58 +1,27 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector similarity over an `array<float>` embedding column.
+/** Fixed-point vector kernels over an `array<float>` embedding column —
+  * the forms the registry's ANN and embedding queries run, because each
+  * has an exact SQL replay that the DuckDB oracles hash-match (float
+  * accumulation cannot: summation order differs between engines).
   *
-  * Fast path: dot/cosine as higher-order functions (`zip_with` +
-  * `aggregate`) — stays inside whole-stage codegen, no UDF, no shuffle.
-  *
-  * Scale paths:
-  *  - brute-force top-k: broadcast the (small) probe set against the
-  *    full corpus, rank per probe — one pass, no corpus shuffle;
-  *  - LSH bucketing (random hyperplanes): sign-pattern bucket id turns
-  *    ANN into an equi-join; recall/latency tuned by #planes.
+  *  - [[fxDot]]: the exact dot product, sum of floor(a_i * b_i * 1e15)
+  *    as BIGINT, through the codegen kernel `graft_fxdot`;
+  *  - [[md5Planes]] + [[lshBucketFx]]: sign-LSH bucketing (random-
+  *    hyperplane rounding, Charikar 2002) with md5-derived integer
+  *    planes and the fxDot sign test, so the bucket id is an equi-join
+  *    key that SQL reproduces.
   */
 object Embeddings {
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Codegen'd native kernel ([[graft.plans.CosineSimilarity]]);
-    * requires `spark.sql.extensions=graft.plans.GraftExtensions`.
-    * ~10x faster than the interpreted HOF form above in hot loops. */
-  def cosineNative(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
 
   /** Fixed-point exact dot (sum of floor(ai*bi*1e15) as BIGINT) — the
     * engine-portable kernel ([[graft.plans.FxDotProduct]]): bit-equal
     * to the posexplode+grouped-SUM formulation at array speed. */
   def fxDot(a: Column, b: Column): Column =
     call_function("graft_fxdot", a, b)
-
-  /** Brute-force cosine top-k of `corpus` rows per `probe` row.
-    * Probes must be small enough to broadcast (the 100TB pattern: the
-    * corpus is the big side and is never shuffled). */
-  def knnBrute(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.crossJoin(broadcast(probes))
-      .withColumn("cosine", cosineNative(col("embedding"), col("probe_embedding")))
-    graft.ops.TopK.perGroup(joined,
-      partitionBy = Seq(col("probe_id")),
-      orderBy = Seq(col("cosine").desc, col("vec_id").asc),
-      k = k, rankCol = "rank")
-  }
-
-  /** Deterministic random hyperplanes (seeded) for sign-LSH
-    * (random-hyperplane rounding, Charikar 2002). */
-  def hyperplanes(dim: Int, numPlanes: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(numPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
 
   /** Engine-portable hyperplanes: component (p, i) is the first md5
     * byte of "p:i" minus 128 — a deterministic integer in [-128, 127]
@@ -78,74 +47,4 @@ object Embeddings {
       val planeCol = array(pl.map(v => lit(v)): _*)
       when(fxDot(emb, planeCol) >= 0, lit(1L << ip)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Sign-pattern bucket id of an embedding under the given planes. */
-  def lshBucket(emb: Column, planes: Array[Array[Double]]): Column = {
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(emb, planeCol) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** LSH-bucketed ANN: candidates = same-bucket pairs (equi-join on the
-    * bucket id), then exact cosine rank within candidates. */
-  def knnLsh(corpus: DataFrame, probes: DataFrame, k: Int,
-      planes: Array[Array[Double]]): DataFrame = {
-    val c = corpus.withColumn("bucket", lshBucket(col("embedding"), planes))
-    val p = probes.withColumn("bucket", lshBucket(col("probe_embedding"), planes))
-    val joined = c.join(broadcast(p), Seq("bucket"))
-      .withColumn("cosine", cosineNative(col("embedding"), col("probe_embedding")))
-    graft.ops.TopK.perGroup(joined,
-      partitionBy = Seq(col("probe_id")),
-      orderBy = Seq(col("cosine").desc, col("vec_id").asc),
-      k = k, rankCol = "rank")
-  }
-
-  // ---- IVF (inverted-file) ANN — the other classic scale path ---------
-
-  /** Coarse-quantizer centroids as a deterministic corpus sample (every
-    * `every`-th vector). k-means iterations would refine them; the
-    * partition/probe PLUMBING — the scale-relevant part — is identical
-    * either way. */
-  def centroids(corpus: DataFrame, every: Int): DataFrame =
-    corpus.filter(col("vec_id") % every === 0)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-
-  /** Index build: assign every corpus vector to its nearest centroid.
-    * Centroids broadcast; the argmax is a map-side-combining max_by
-    * aggregate, so the corpus crosses the wire ONCE — at 100TB this is
-    * a write-time cost (like bucketing), not a per-query one. */
-  def assignIvf(corpus: DataFrame, cents: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(cents))
-      .withColumn("__s", cosineNative(col("embedding"), col("centroid")))
-      .groupBy("vec_id")
-      .agg(
-        first(col("embedding")).as("embedding"),
-        // struct order (score, id): ties break to the larger centroid_id
-        max_by(col("centroid_id"), struct(col("__s"), col("centroid_id")))
-          .as("centroid_id"))
-
-  /** IVF search: each probe ranks the centroids (broadcast, tiny),
-    * keeps the `nprobe` nearest lists, and scans ONLY those corpus
-    * partitions via an equi-join on centroid_id — never the full
-    * corpus. Recall is tuned by nprobe/every. */
-  def knnIvf(corpus: DataFrame, probes: DataFrame, k: Int,
-      every: Int, nprobe: Int): DataFrame = {
-    val cents = centroids(corpus, every)
-    val assigned = assignIvf(corpus, cents)
-    val probeLists = graft.ops.TopK.perGroup(
-      probes.crossJoin(broadcast(cents))
-        .withColumn("__s", cosineNative(col("probe_embedding"), col("centroid"))),
-      partitionBy = Seq(col("probe_id")),
-      orderBy = Seq(col("__s").desc, col("centroid_id").asc),
-      k = nprobe, rankCol = "__pr")
-      .select("probe_id", "probe_embedding", "centroid_id")
-    val joined = assigned.join(broadcast(probeLists), Seq("centroid_id"))
-      .withColumn("cosine", cosineNative(col("embedding"), col("probe_embedding")))
-    graft.ops.TopK.perGroup(joined,
-      partitionBy = Seq(col("probe_id")),
-      orderBy = Seq(col("cosine").desc, col("vec_id").asc),
-      k = k, rankCol = "rank")
-  }
 }

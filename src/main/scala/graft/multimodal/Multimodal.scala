@@ -104,25 +104,14 @@ object Multimodal {
     out
   }
 
-  /** Deterministic feature vector from the DECODED raster: fixed-length
-    * maxval-normalized intensity accumulation (a stand-in for a learned
-    * embedding with the same shape contract: dim floats per asset). */
-  def featuresFromPixels(meta: MediaMeta, pixels: Array[Byte],
-      dim: Int = 8): Array[Float] = {
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < pixels.length) {
-      out(i % dim) += (pixels(i) & 0xff).toFloat / meta.maxval
-      i += 1
-    }
-    out
-  }
-
-  /** Engine-portable integer form of [[featuresFromPixels]]: slot j
-    * accumulates floor(pixel/maxval * 1e6) as a BIGINT — each term is
-    * the identical IEEE chain in any engine and the long sum is
-    * order-free, so a SQL replay over the source bytes hash-matches
-    * (float accumulation cannot: += order differs from SUM). */
+  /** Deterministic feature vector from the DECODED raster (a stand-in
+    * for a learned embedding with the same shape contract: `dim` values
+    * per asset): raster byte i folds into slot i mod dim, and each slot
+    * sums floor(byte/maxval * 1e6) as a BIGINT — maxval-normalized
+    * intensity in fixed point. Each term is the identical IEEE chain in
+    * any engine and the long sum is order-free, so a SQL replay over
+    * the source bytes hash-matches (float accumulation cannot: += order
+    * differs from SUM). */
   def featureSumsFx(meta: MediaMeta, pixels: Array[Byte],
       dim: Int = 8): Array[Long] = {
     val out = new Array[Long](dim)
@@ -214,20 +203,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Feature extraction over decoded assets: real pixel features for
-    * decoded rows, (null, error) carried through for failed ones. */
-  def extractFeatures(spark: SparkSession, assets: Dataset[DecodedAsset],
-      dim: Int = 8): DataFrame = {
-    import spark.implicits._
-    assets.mapPartitions { it =>
-      it.map { a =>
-        if (a.error != null) (a.asset_id, null: Array[Float], -1, -1, a.error)
-        else (a.asset_id, featuresFromPixels(a.meta, a.pixels, dim),
-          a.meta.width, a.meta.height, null: String)
-      }
-    }.toDF("asset_id", "features", "width", "height", "error")
   }
 
   /** Resize every decodable asset to (outW, outH) and re-encode; a

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * IEEE-exact and the long sum is order-free, so one fused loop over the
   * arrays produces the SAME value as the posexplode + join + grouped-SUM
   * formulation the DuckDB oracle uses, at a fraction of the cost (no
-  * component explosion, no per-pair shuffle rows).
+  * component explosion, no per-pair shuffle rows). Arrays of unequal
+  * length throw ([[FxSqDist.checkedLen]]): a dimension bug must not
+  * become a plausible-but-wrong dot product.
   */
 case class FxDotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -35,7 +37,7 @@ case class FxDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = FxSqDist.checkedLen(prettyName, x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -51,7 +53,8 @@ case class FxDotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       s"""
-        |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
+        |int $n = graft.plans.FxSqDist.checkedLen("$prettyName",
+        |  $x.numElements(), $y.numElements());
         |long $acc = 0L;
         |for (int $i = 0; $i < $n; $i++) {
         |  $acc += (long) java.lang.Math.floor(

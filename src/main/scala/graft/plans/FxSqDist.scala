@@ -38,7 +38,7 @@ case class FxSqDist(left: Expression, right: Expression)
     // fail loud on dimension mismatch (like the Scala UDF this replaced):
     // a silent min-length loop would turn a caller's dim bug into a
     // plausible-but-wrong distance
-    val n = FxSqDist.checkedLen(x.numElements(), y.numElements())
+    val n = FxSqDist.checkedLen(prettyName, x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -56,7 +56,7 @@ case class FxSqDist(left: Expression, right: Expression)
       val acc = ctx.freshName("acc")
       val dv = ctx.freshName("d")
       s"""
-        |int $n = graft.plans.FxSqDist.checkedLen(
+        |int $n = graft.plans.FxSqDist.checkedLen("$prettyName",
         |  $x.numElements(), $y.numElements());
         |long $acc = 0L;
         |for (int $i = 0; $i < $n; $i++) {
@@ -73,10 +73,13 @@ case class FxSqDist(left: Expression, right: Expression)
 }
 
 object FxSqDist {
-  /** Static forwarder shared by eval and generated code (janino-visible). */
-  def checkedLen(a: Int, b: Int): Int = {
+  /** The one length check of the two-array kernels (`graft_fxsqdist`,
+    * `graft_fxdot`), shared by eval and generated code (a static
+    * forwarder, janino-visible): unequal lengths throw, naming the
+    * kernel, instead of looping over the common prefix. */
+  def checkedLen(kernel: String, a: Int, b: Int): Int = {
     if (a != b) throw new IllegalArgumentException(
-      s"graft_fxsqdist: array length mismatch: $a vs $b")
+      s"$kernel: array length mismatch: $a vs $b")
     a
   }
 }

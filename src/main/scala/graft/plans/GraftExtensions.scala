@@ -10,14 +10,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Kept deliberately small: SURVEY.md §4.3 — every declared operator
   * lowers to built-in plans, so no custom Rule/Strategy is injected;
-  * only scalar kernels that benefit from codegen live here.
+  * only scalar kernels that benefit from codegen live here, and each
+  * is reached by at least one registry query, whose oracle holds it to
+  * its result (a `PlanShapeSpec` tripwire checks this).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
     ext.injectFunction((
       FunctionIdentifier("graft_fxdot"),
       new ExpressionInfo(classOf[FxDotProduct].getName, "graft_fxdot"),

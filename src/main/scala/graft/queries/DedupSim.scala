@@ -358,8 +358,9 @@ object DedupSim {
 
   /** Embedding-cosine near-duplicate pairs, blocked by label (the
     * candidate-blocking pattern; at 100TB the block key would be an LSH
-    * bucket — see [[graft.ml.Embeddings.lshBucket]]). Dot products are
-    * decimal-accumulated: order-free, so Spark and DuckDB agree bitwise. */
+    * bucket — see [[graft.ml.Embeddings.lshBucketFx]]). Dot products are
+    * fixed-point BIGINT sums (`graft_fxdot`): order-free, so Spark and
+    * DuckDB agree bitwise. */
   val embedCosineDup: Q = Q(
     "q_embed_cosine_dup",
     s"""WITH $compSql,
@@ -452,9 +453,7 @@ object DedupSim {
     *
     * Scale shape otherwise unchanged: probe reps broadcast, the
     * distinct corpus computes its 6 plane signs map-side and
-    * equi-joins on the bucket id — never shuffled, never all-paired.
-    * (The gaussian-plane variant [[graft.ml.Embeddings.knnLsh]] stays
-    * the library fast path; recall vs brute force is ScalaTest'd.) */
+    * equi-joins on the bucket id — never shuffled, never all-paired. */
   val annLsh: Q = Q(
     "q_ann_lsh",
     s"""WITH $compSql,
@@ -556,9 +555,7 @@ object DedupSim {
     * so DuckDB replays index build AND search bit-for-bit. Scale shape
     * unchanged: centroids + probe lists broadcast, the corpus crosses
     * the wire once for assignment (a write-time cost), and search
-    * scans ONLY the probed lists via an equi-join on centroid_id.
-    * (The library fast path [[graft.ml.Embeddings.knnIvf]] keeps the
-    * codegen float kernel; recall vs brute force is ScalaTest'd.) */
+    * scans ONLY the probed lists via an equi-join on centroid_id. */
   val annIvf: Q = Q(
     "q_ann_ivf",
     s"""WITH $compSql,

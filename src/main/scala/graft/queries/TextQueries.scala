@@ -69,27 +69,17 @@ object TextQueries {
   }
 
   val textLangId: Q = Q(
-    "q_text_langid", {
-      // mirror Text.langId exactly: per-language marker counts, argmax
-      // with first-listed-language-wins tie-break.
-      val markerSql = Text.langMarkers.map { case (lang, ms) =>
-        s"len(list_filter(toks, t -> t IN (${ms.map(m => s"'$m'").mkString(",")}))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = Text.langMarkers.map(_._1)
-      val pick = langs.tail.foldLeft((s"'${langs.head}'", s"s_${langs.head}")) {
-        case ((accLang, accScore), lang) =>
-          (s"CASE WHEN s_$lang > $accScore THEN '$lang' ELSE $accLang END",
-            s"CASE WHEN s_$lang > $accScore THEN s_$lang ELSE $accScore END")
-      }._1
-      s"""WITH t AS (SELECT doc_id, lang,
-         |             ${Text.tokensSql("text")} AS toks
-         |           FROM documents),
-         |sc AS (SELECT doc_id, lang AS labeled_lang,
-         |  $markerSql
-         |FROM t)
-         |SELECT doc_id, labeled_lang, $pick AS predicted_lang
-         |FROM sc ORDER BY doc_id""".stripMargin
-    }) { (s, d) =>
+    "q_text_langid",
+    // mirror Text.langId exactly: per-language marker counts, argmax
+    // with first-listed-language-wins tie-break.
+    s"""WITH t AS (SELECT doc_id, lang,
+       |             ${Text.tokensSql("text")} AS toks
+       |           FROM documents),
+       |sc AS (SELECT doc_id, lang AS labeled_lang,
+       |  ${Text.langScoresSql}
+       |FROM t)
+       |SELECT doc_id, labeled_lang, ${Text.langIdSql} AS predicted_lang
+       |FROM sc ORDER BY doc_id""".stripMargin) { (s, d) =>
     Tables.load(s, d, "documents")
       .select(col("doc_id"), col("lang").as("labeled_lang"),
         Text.langScoresUdf(col("text")).as("sc"))

@@ -79,8 +79,7 @@ object Udfs {
     * engine walks bytes it parsed back out of the PPM container, the
     * oracle walks the bytes that went in, and the hash match proves the
     * codec round-trip. Feature sums use the order-free fx chain
-    * ([[graft.multimodal.Multimodal.featureSumsFx]]); the float
-    * feature path stays in the library (MultimodalSpec). The oracle's
+    * ([[graft.multimodal.Multimodal.featureSumsFx]]). The oracle's
     * char-based ascii()/length() equal the engine's bytes because the
     * corpus is ASCII — the same contract q_multimodal_frames already
     * asserts (the asset builder raises on non-ASCII docs). */

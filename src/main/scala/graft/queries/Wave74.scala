@@ -19,83 +19,72 @@ object Wave74 {
     * recall / F1 per language for the q_text_langid heuristic against
     * the labeled lang column — F1 = 2·tp·1e6 div (n_true + n_pred)
     * exactly (2tp+fp+fn = n_true+n_pred; no float harmonic mean).
-    * The marker/argmax SQL is GENERATED from Text.langMarkers, the
-    * same generator q_text_langid uses, so scorer and report cannot
-    * drift.
+    * The marker/argmax SQL is Text.langScoresSql / Text.langIdSql,
+    * the same strings q_text_langid interpolates, so scorer and report
+    * cannot drift.
     *
     * Shape at 100TB: one narrow marker-count map over docs, one
     * aggregate to the langs² confusion dictionary; everything after
     * is arithmetic on ≤ |langs| rows. */
-  val evalF1Langid: Q = {
-    val markerSql = Text.langMarkers.map { case (lang, ms) =>
-      s"len(list_filter(toks, t -> t IN (${ms.map(m => s"'$m'").mkString(",")}))) AS s_$lang"
-    }.mkString(",\n  ")
-    val langs = Text.langMarkers.map(_._1)
-    val pick = langs.tail.foldLeft((s"'${langs.head}'", s"s_${langs.head}")) {
-      case ((accLang, accScore), lang) =>
-        (s"CASE WHEN s_$lang > $accScore THEN '$lang' ELSE $accLang END",
-          s"CASE WHEN s_$lang > $accScore THEN s_$lang ELSE $accScore END")
-    }._1
-    Q(
-      "q_eval_f1_langid",
-      s"""WITH t AS (SELECT doc_id, lang,
-         |    ${Text.tokensSql("text")} AS toks
-         |  FROM documents),
-         |p AS MATERIALIZED (SELECT labeled, $pick AS pred FROM
-         |  (SELECT doc_id, lang AS labeled, $markerSql FROM t) sc),
-         |cells AS MATERIALIZED (SELECT labeled, pred,
-         |    CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM p GROUP BY 1, 2),
-         |lt AS (SELECT labeled AS lang, CAST(SUM(n) AS BIGINT) AS n_true
-         |  FROM cells GROUP BY 1),
-         |lp AS (SELECT pred AS lang, CAST(SUM(n) AS BIGINT) AS n_pred
-         |  FROM cells GROUP BY 1),
-         |tp AS (SELECT labeled AS lang, n AS tp FROM cells
-         |  WHERE labeled = pred)
-         |SELECT lt.lang, lt.n_true, COALESCE(lp.n_pred, 0) AS n_pred,
-         |  COALESCE(tp.tp, 0) AS tp,
-         |  CASE WHEN COALESCE(lp.n_pred, 0) > 0
-         |       THEN COALESCE(tp.tp, 0) * 1000000 // lp.n_pred
-         |  END AS prec_ppm,
-         |  COALESCE(tp.tp, 0) * 1000000 // lt.n_true AS rec_ppm,
-         |  2 * COALESCE(tp.tp, 0) * 1000000
-         |    // (lt.n_true + COALESCE(lp.n_pred, 0)) AS f1_ppm
-         |FROM lt LEFT JOIN lp ON lp.lang = lt.lang
-         |LEFT JOIN tp ON tp.lang = lt.lang
-         |ORDER BY lt.lang""".stripMargin) { (s, d) =>
-      // two-step language ID (r14): all marker counts in ONE compiled
-      // UDF pass (the single-expression argmax inlined every score into
-      // every CASE branch — ~46 interpreted size(filter(...)) per row),
-      // then the argmax CASE folds over the projected ATTRIBUTES
-      val scored = Tables.load(s, d, "documents")
-        .select(col("lang").as("labeled"),
-          Text.langScoresUdf(col("text")).as("sc"))
-        .select(col("labeled") +:
-          Text.langMarkers.zipWithIndex.map { case ((l, _), i) =>
-            col("sc").getItem(i).as(s"s_$l") }: _*)
-      val p = scored.select(col("labeled"),
-        Text.langIdFromScores(
-          Text.langMarkers.map { case (l, _) => l -> col(s"s_$l") })
-          .as("pred"))
-      val cells = p.groupBy("labeled", "pred").agg(count(lit(1)).as("n"))
-      val lt = cells.groupBy(col("labeled").as("lang"))
-        .agg(sum("n").as("n_true"))
-      val lp = cells.groupBy(col("pred").as("lang"))
-        .agg(sum("n").as("n_pred"))
-      val tp = cells.filter(col("labeled") === col("pred"))
-        .select(col("labeled").as("lang"), col("n").as("tp"))
-      lt.join(lp, Seq("lang"), "left").join(tp, Seq("lang"), "left")
-        .select(col("lang"), col("n_true"),
-          coalesce(col("n_pred"), lit(0L)).as("n_pred"),
-          coalesce(col("tp"), lit(0L)).as("tp"))
-        .select(col("lang"), col("n_true"), col("n_pred"), col("tp"),
-          expr("""CASE WHEN n_pred > 0
-                 |THEN tp * 1000000 div n_pred END""".stripMargin)
-            .as("prec_ppm"),
-          expr("tp * 1000000 div n_true").as("rec_ppm"),
-          expr("2 * tp * 1000000 div (n_true + n_pred)").as("f1_ppm"))
-        .orderBy("lang")
-    }
+  val evalF1Langid: Q = Q(
+    "q_eval_f1_langid",
+    s"""WITH t AS (SELECT doc_id, lang,
+       |    ${Text.tokensSql("text")} AS toks
+       |  FROM documents),
+       |p AS MATERIALIZED (SELECT labeled, ${Text.langIdSql} AS pred FROM
+       |  (SELECT doc_id, lang AS labeled, ${Text.langScoresSql} FROM t) sc),
+       |cells AS MATERIALIZED (SELECT labeled, pred,
+       |    CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM p GROUP BY 1, 2),
+       |lt AS (SELECT labeled AS lang, CAST(SUM(n) AS BIGINT) AS n_true
+       |  FROM cells GROUP BY 1),
+       |lp AS (SELECT pred AS lang, CAST(SUM(n) AS BIGINT) AS n_pred
+       |  FROM cells GROUP BY 1),
+       |tp AS (SELECT labeled AS lang, n AS tp FROM cells
+       |  WHERE labeled = pred)
+       |SELECT lt.lang, lt.n_true, COALESCE(lp.n_pred, 0) AS n_pred,
+       |  COALESCE(tp.tp, 0) AS tp,
+       |  CASE WHEN COALESCE(lp.n_pred, 0) > 0
+       |       THEN COALESCE(tp.tp, 0) * 1000000 // lp.n_pred
+       |  END AS prec_ppm,
+       |  COALESCE(tp.tp, 0) * 1000000 // lt.n_true AS rec_ppm,
+       |  2 * COALESCE(tp.tp, 0) * 1000000
+       |    // (lt.n_true + COALESCE(lp.n_pred, 0)) AS f1_ppm
+       |FROM lt LEFT JOIN lp ON lp.lang = lt.lang
+       |LEFT JOIN tp ON tp.lang = lt.lang
+       |ORDER BY lt.lang""".stripMargin) { (s, d) =>
+    // two-step language ID (r14): all marker counts in ONE compiled
+    // UDF pass (the single-expression argmax inlined every score into
+    // every CASE branch — ~46 interpreted size(filter(...)) per row),
+    // then the argmax CASE folds over the projected ATTRIBUTES
+    val scored = Tables.load(s, d, "documents")
+      .select(col("lang").as("labeled"),
+        Text.langScoresUdf(col("text")).as("sc"))
+      .select(col("labeled") +:
+        Text.langMarkers.zipWithIndex.map { case ((l, _), i) =>
+          col("sc").getItem(i).as(s"s_$l") }: _*)
+    val p = scored.select(col("labeled"),
+      Text.langIdFromScores(
+        Text.langMarkers.map { case (l, _) => l -> col(s"s_$l") })
+        .as("pred"))
+    val cells = p.groupBy("labeled", "pred").agg(count(lit(1)).as("n"))
+    val lt = cells.groupBy(col("labeled").as("lang"))
+      .agg(sum("n").as("n_true"))
+    val lp = cells.groupBy(col("pred").as("lang"))
+      .agg(sum("n").as("n_pred"))
+    val tp = cells.filter(col("labeled") === col("pred"))
+      .select(col("labeled").as("lang"), col("n").as("tp"))
+    lt.join(lp, Seq("lang"), "left").join(tp, Seq("lang"), "left")
+      .select(col("lang"), col("n_true"),
+        coalesce(col("n_pred"), lit(0L)).as("n_pred"),
+        coalesce(col("tp"), lit(0L)).as("tp"))
+      .select(col("lang"), col("n_true"), col("n_pred"), col("tp"),
+        expr("""CASE WHEN n_pred > 0
+               |THEN tp * 1000000 div n_pred END""".stripMargin)
+          .as("prec_ppm"),
+        expr("tp * 1000000 div n_true").as("rec_ppm"),
+        expr("2 * tp * 1000000 div (n_true + n_pred)").as("f1_ppm"))
+      .orderBy("lang")
   }
 
   /** q_eval_majority: vote stability per brand — for every part with

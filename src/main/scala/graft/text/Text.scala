@@ -215,17 +215,23 @@ object Text {
     * tie-break order (first language listed wins ties). Single-column
     * form — prefer langScores + langIdFromScores over a projection
     * boundary in per-row hot paths (see [[langScores]]). */
-  def langId(toks: Column): Column = {
-    val scores = langMarkers.map { case (lang, ms) => lang -> markerCount(toks, ms) }
-    // fold from the last language to the first: earlier langs win ties
-    // because the comparison is strict `>` on already-chosen best.
-    val (firstLang, firstScore) = scores.head
-    val (bestLang, _) = scores.tail.foldLeft((lit(firstLang), firstScore)) {
-      case ((accLang, accScore), (lang, score)) =>
-        (when(score > accScore, lit(lang)).otherwise(accLang),
-          when(score > accScore, score).otherwise(accScore))
-    }
-    bestLang
+  def langId(toks: Column): Column = langIdFromScores(langScores(toks))
+
+  /** DuckDB form of [[langScores]] over a `toks` list column: one
+    * `s_<lang>` marker-count column per language, comma-separated. */
+  val langScoresSql: String = langMarkers.map { case (lang, ms) =>
+    s"len(list_filter(toks, t -> t IN (${ms.map(m => s"'$m'").mkString(",")}))) AS s_$lang"
+  }.mkString(",\n  ")
+
+  /** DuckDB form of [[langIdFromScores]] over the [[langScoresSql]]
+    * columns: a CASE chain with the same first-listed-wins tie-break. */
+  val langIdSql: String = {
+    val langs = langMarkers.map(_._1)
+    langs.tail.foldLeft((s"'${langs.head}'", s"s_${langs.head}")) {
+      case ((accLang, accScore), lang) =>
+        (s"CASE WHEN s_$lang > $accScore THEN '$lang' ELSE $accLang END",
+          s"CASE WHEN s_$lang > $accScore THEN s_$lang ELSE $accScore END")
+    }._1
   }
 
   /** Quality-scoring feature columns (length / punctuation / stopword

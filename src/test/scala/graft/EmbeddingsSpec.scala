@@ -1,41 +1,31 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ml.Embeddings
 
 class EmbeddingsSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
 
-  private lazy val emb = Tables.load(spark, SharedSpark.sf001, "embeddings").cache()
-
-  test("native codegen cosine agrees with the HOF formulation") {
-    val pairs = emb.limit(50).crossJoin(
-      emb.limit(50).select(col("vec_id").as("vid2"), col("embedding").as("e2")))
-    val diffs = pairs.select(
-      abs(Embeddings.cosine(col("embedding"), col("e2")) -
-        Embeddings.cosineNative(col("embedding"), col("e2"))).as("d"))
-      .agg(max(col("d"))).head.getDouble(0)
-    // HOF zip_with multiplies in FLOAT precision before the double sum;
-    // the native kernel widens each element first, so they agree only to
-    // single-precision epsilon (the native result is the more accurate).
-    assert(diffs < 1e-6, s"max diff $diffs")
-  }
-
-  test("graft_fxsqdist fails loudly on array length mismatch (a dim bug " +
-    "must not become a plausible-but-wrong distance)") {
-    import spark.implicits._
-    val df = Seq((Seq(1L, 2L, 3L), Seq(1L, 2L))).toDF("a", "b")
+  /** Runs `kernel` over one row whose arrays differ in length and
+    * checks that it throws with the kernel's mismatch message. */
+  private def assertLengthMismatch(kernel: String, df: DataFrame): Unit = {
     val e = intercept[Exception] {
-      df.select(call_function("graft_fxsqdist", col("a"), col("b"))).collect()
+      df.select(call_function(kernel, col("a"), col("b"))).collect()
     }
     // Spark wraps the executor-side exception; check the root message
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
     assert(messages(e).exists(m =>
-      m != null && m.contains("array length mismatch")),
+      m != null && m.contains(s"$kernel: array length mismatch")),
       s"unexpected failure: $e")
+  }
+
+  test("graft_fxsqdist fails loudly on array length mismatch (a dim bug " +
+    "must not become a plausible-but-wrong distance)") {
+    assertLengthMismatch("graft_fxsqdist",
+      Seq((Seq(1L, 2L, 3L), Seq(1L, 2L))).toDF("a", "b"))
     // equal lengths still compute exactly
     val ok = Seq((Seq(1L, 2L), Seq(3L, 4L))).toDF("a", "b")
       .select(call_function("graft_fxsqdist", col("a"), col("b")))
@@ -43,81 +33,14 @@ class EmbeddingsSpec extends AnyFunSuite {
     assert(ok == 8L)
   }
 
-  test("native cosine null semantics: null array and zero vector -> null") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(Seq(1.0f, 2.0f)), Some(Seq(1.0f, 2.0f))),
-      (None, Some(Seq(1.0f, 2.0f))),
-      (Some(Seq(0.0f, 0.0f)), Some(Seq(1.0f, 2.0f))))
-      .toDF("a", "b")
-    val out = df.select(Embeddings.cosineNative(col("a"), col("b"))).collect()
-    assert(math.abs(out(0).getDouble(0) - 1.0) < 1e-12)
-    assert(out(1).isNullAt(0))
-    assert(out(2).isNullAt(0)) // zero norm
-  }
-
-  test("cosine of a vector with itself is 1") {
-    val c = emb.limit(5)
-      .select(Embeddings.cosine(col("embedding"), col("embedding")))
-      .collect().map(_.getDouble(0))
-    assert(c.forall(v => math.abs(v - 1.0) < 1e-6))
-  }
-
-  test("knnBrute: probe present in corpus ranks itself first with cosine ~1") {
-    val probes = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_embedding"))
-    val top1 = Embeddings.knnBrute(emb, probes, k = 1)
-      .select("probe_id", "vec_id", "cosine").collect()
-    assert(top1.length == 3)
-    top1.foreach { r =>
-      assert(r.getLong(0) == r.getLong(1))
-      assert(math.abs(r.getDouble(2) - 1.0) < 1e-6)
-    }
-  }
-
-  test("knnIvf: recall vs brute-force top-k, scanning only nprobe lists") {
-    val probes = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_embedding"))
-    def hits(df: org.apache.spark.sql.DataFrame) = df
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select("probe_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = hits(Embeddings.knnBrute(emb, probes, k = 10))
-    val ivf = hits(Embeddings.knnIvf(emb, probes, k = 10, every = 50, nprobe = 4))
-    val recall = (exact & ivf).size.toDouble / exact.size
-    assert(recall >= 0.3, s"IVF recall $recall too low") // nprobe=4 coarse lists
-    // every IVF hit must be a real corpus vector scored correctly:
-    // sanity that IVF is a subset-scan of the same metric, not junk
-    assert(ivf.nonEmpty)
-  }
-
-  test("knnIvf: a probe present in the corpus finds itself (rank 1, cosine ~1)") {
-    val probes = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_embedding"))
-    val top = Embeddings.knnIvf(emb, probes, k = 1, every = 50, nprobe = 1)
-      .select("vec_id", "cosine").head
-    assert(top.getLong(0) == 0L) // vec 0 IS a centroid -> always in its own list
-    assert(math.abs(top.getDouble(1) - 1.0) < 1e-9)
-  }
-
-  test("knnLsh finds exact duplicates (same bucket by construction)") {
-    val planes = Embeddings.hyperplanes(dim = 64, numPlanes = 6, seed = 42L)
-    val probes = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_embedding"))
-    val hits = Embeddings.knnLsh(emb, probes, k = 3, planes)
-      .filter(col("vec_id") === col("probe_id"))
-    assert(hits.count() == 5) // each probe finds its own copy, rank 1
-    assert(hits.filter(col("rank") === 1).count() == 5)
-  }
-
-  test("lshBucket is deterministic across evaluations") {
-    val planes = Embeddings.hyperplanes(64, 6, seed = 42L)
-    val b1 = emb.select(col("vec_id"), Embeddings.lshBucket(col("embedding"), planes))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val b2 = emb.select(col("vec_id"), Embeddings.lshBucket(col("embedding"), planes))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(b1 == b2)
-    assert(b1.values.toSet.size > 1, "buckets should partition the space")
+  test("graft_fxdot fails loudly on array length mismatch") {
+    assertLengthMismatch("graft_fxdot",
+      Seq((Seq(1f, 2f, 3f), Seq(1f, 2f))).toDF("a", "b"))
+    // equal lengths still compute exactly: 1*3 + 2*4 = 11, times 1e15
+    val ok = Seq((Seq(1f, 2f), Seq(3f, 4f))).toDF("a", "b")
+      .select(call_function("graft_fxdot", col("a"), col("b")))
+      .head.getLong(0)
+    assert(ok == 11000000000000000L)
   }
 
   test("fixed-point k-means: every point assigned, >1 cluster, inertia non-increasing") {

@@ -54,23 +54,13 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out(1).error != null && out(1).meta == null && out(1).pixels == null)
   }
 
-  test("feature extraction: real pixel features for decoded rows, " +
-    "error carried for failed rows") {
-    import spark.implicits._
-    val assets = Seq(
-      Multimodal.Asset(1L, golden),
-      Multimodal.Asset(2L, "garbage".getBytes)).toDS()
-    val feats = Multimodal.extractFeatures(
-      spark, Multimodal.decode(spark, assets), dim = 4)
-    assert(feats.schema.fieldNames.toSeq ==
-      Seq("asset_id", "features", "width", "height", "error"))
-    val rows = feats.orderBy("asset_id").collect()
+  test("featureSumsFx: golden P6 raster folds to exact fixed-point slots") {
+    val Right((meta, pixels)) = Multimodal.decodeNetpbm(golden)
     // golden raster [255,0,0, 0,255,0, 0,0,255, 255,255,255] folded
-    // mod 4 at maxval 255: slot0 gets idx 0,4,8 = 255*3 -> 3.0; slots
-    // 1..3 each get exactly one 255 byte -> 1.0
-    assert(rows(0).getSeq[Float](1).toList == List(3.0f, 1.0f, 1.0f, 1.0f))
-    assert(rows(0).getInt(2) == 2 && rows(0).getInt(3) == 2)
-    assert(rows(1).isNullAt(1) && rows(1).getString(4) != null)
+    // mod 4 at maxval 255: slot0 gets idx 0,4,8 = 3 x floor(1e6); slots
+    // 1..3 each get exactly one 255 byte -> 1e6
+    assert(Multimodal.featureSumsFx(meta, pixels, dim = 4).toList ==
+      List(3000000L, 1000000L, 1000000L, 1000000L))
   }
 
   test("frame sampling: one row per chunk, ordered frame numbers") {

@@ -787,4 +787,28 @@ class PlanShapeSpec extends AnyFunSuite {
       s"${bad.size} forced broadcasts of data-sized scans:\n" +
         bad.distinct.mkString("\n"))
   }
+
+  test("registry-wide: every graft_* kernel GraftExtensions registers is " +
+    "reached by the analyzed plan of at least one registry query (a " +
+    "kernel no query runs has no oracle holding it to its result)") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    // the GraftExtensions kernels are the graft_* functions whose class
+    // is a graft.plans expression (a query's own temporary UDF, such as
+    // q_bloom_prune's graft_bloom_agg, is not a kernel)
+    val kernels = registry.listFunction().map(_.funcName)
+      .filter(_.startsWith("graft_")).distinct
+      .map(n => n -> registry.lookupFunction(FunctionIdentifier(n)).get.getClassName)
+      .filter(_._2.startsWith("graft.plans."))
+    assert(kernels.nonEmpty, "no graft_* kernel is registered")
+    val reached = SparkEntry.queries.toSeq.flatMap { case (_, f) =>
+      f(spark, SharedSpark.sf001).queryExecution.analyzed
+        .collectWithSubqueries { case p =>
+          p.expressions.flatMap(_.collect { case e => e.getClass.getName })
+        }.flatten
+    }.toSet
+    val unreached = kernels.collect { case (n, c) if !reached(c) => n }.sorted
+    assert(unreached.isEmpty,
+      s"graft_* kernels no registry query reaches: ${unreached.mkString(", ")}")
+  }
 }
