@@ -22,4 +22,21 @@ object Q {
 
   def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, None)
+
+  /** `text` run over frames: each `name -> frame` binds as a CTE over a
+    * temp view with a fresh unique name, dropped before this returns.
+    * The analyzed frame no longer needs the view, and the session's own
+    * views (even one called `name`) are left as they were, so a query
+    * can share its SQL text with its oracle without touching the
+    * caller's catalog. */
+  def sql(s: SparkSession, text: String, frames: (String, DataFrame)*): DataFrame = {
+    val bound = frames.map { case (name, df) =>
+      (name, df, s"graft_q_${java.util.UUID.randomUUID.toString.replace('-', '_')}")
+    }
+    try {
+      bound.foreach { case (_, df, view) => df.createTempView(view) }
+      s.sql(bound.map { case (name, _, view) => s"$name AS (SELECT * FROM $view)" }
+        .mkString("WITH ", ",\n", "\n") + text)
+    } finally bound.foreach { case (_, _, view) => s.catalog.dropTempView(view) }
+  }
 }

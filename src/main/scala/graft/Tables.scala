@@ -1,11 +1,12 @@
 package graft
 
+import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -24,10 +25,8 @@ import org.apache.spark.sql.types._
   * `TableGen`) as session `TimestampType`. `TablesSpec` checks each
   * declared schema against the inferred one.
   *
-  * So `load` runs no Spark job. A table file's resolved relation is
-  * also kept per session and reused while the file's length and
-  * modification time are unchanged; every reuse gets fresh attribute
-  * ids, so a table joined with itself resolves.
+  * So `load` runs no Spark job. A table's resolved relation is kept in
+  * a [[Memo]], the one validity rule every memo in graft follows.
   */
 object Tables {
   private def fields(fs: (String, DataType)*): StructType =
@@ -62,43 +61,85 @@ object Tables {
   val names: Seq[String] = declared.map(_._1)
   val schemas: Map[String, StructType] = declared.toMap
 
-  /** A table file's resolved relation, valid while the file keeps this
-    * length and modification time. */
-  private final case class Resolved(length: Long, modified: Long, relation: LogicalRelation)
+  /** The one validity rule of every memo in graft: `Tables`' resolved
+    * relations and [[graft.ops.SharedFrames]]' frames and values.
+    *
+    * An entry is keyed by (session, dir, name) and stamped with the
+    * (length, modification time) of the table files under `dir` it
+    * depends on: one entry for a table file, one per data file for a
+    * table stored as a directory (`ScaleGen` output), none for a missing
+    * table. A lookup whose stamp differs drops the entry (handing it to
+    * `replaced`) and builds it again, so a memo never returns what an
+    * older file gave. A session's entries are dropped when its
+    * SparkContext stops, so a memo never keeps a stopped session alive
+    * nor hands its entries to a later one. A build runs under the memo's
+    * lock: concurrent lookups of one memo build each entry once.
+    */
+  private[graft] final class Memo[V](replaced: V => Unit) {
+    type Key = (SparkSession, String, String)
+    private val entries = new ConcurrentHashMap[Key, (Seq[(String, Long, Long)], V)]()
+    private val watched = java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
 
-  /** One entry per (session, path). A session's entries are dropped when
-    * its SparkContext stops, so the cache never keeps a stopped session
-    * alive. */
-  private val resolved = new ConcurrentHashMap[(SparkSession, String), Resolved]()
+    def apply(spark: SparkSession, dir: String, name: String, tables: Seq[String])(
+        build: => V): V = synchronized {
+      val key = (spark, dir, name)
+      val stamp = tables.flatMap(t => filesOf(spark, new Path(s"$dir/$t.parquet")))
+      Option(entries.get(key)) match {
+        case Some((`stamp`, v)) => v
+        case old =>
+          old.foreach { e => entries.remove(key); replaced(e._2) }
+          val v = build
+          val sc = spark.sparkContext
+          if (watched.add(sc))
+            sc.addSparkListener(new SparkListener {
+              override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+                entries.keySet.removeIf(_._1.sparkContext eq sc)
+            })
+          if (!sc.isStopped) entries.put(key, (stamp, v))
+          v
+      }
+    }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = new Path(s"$dir/$name.parquet")
-    // a directory (ScaleGen's multi-file output) or a missing path is
-    // not cached: the reader resolves it, or raises its usual error
-    val file = Try(path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(path)).toOption.filter(_.isFile)
-    val key = (spark, path.toString)
-    file.flatMap(f => Option(resolved.get(key))
-        .filter(r => r.length == f.getLen && r.modified == f.getModificationTime)) match {
-      case Some(r) => DatasetShim.ofRows(spark, r.relation.newInstance())
-      case None =>
-        // this frame shares the cached relation's ids; reuses never do
-        val df = spark.read.schema(schemas(name)).parquet(path.toString)
-        file.foreach { f =>
-          val relation = df.queryExecution.analyzed.asInstanceOf[LogicalRelation]
-          remember(key, Resolved(f.getLen, f.getModificationTime, relation))
-        }
-        df
+    def values: Iterable[V] = entries.values.asScala.map(_._2)
+
+    /** Drop the entries whose key matches, handing each to `replaced`. */
+    def drop(p: Key => Boolean): Unit = synchronized {
+      entries.asScala.toSeq.foreach { case (k, (_, v)) =>
+        if (p(k)) { entries.remove(k); replaced(v) }
+      }
     }
   }
 
-  private def remember(key: (SparkSession, String), r: Resolved): Unit = synchronized {
-    val sc = key._1.sparkContext
-    if (!resolved.keySet.asScala.exists(_._1.sparkContext eq sc))
-      sc.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-          resolved.keySet.removeIf(_._1.sparkContext eq sc)
-      })
-    resolved.put(key, r)
+  /** (path, length, modification time) of the data files of the table at
+    * `path`: itself if it is a file, the files under it if it is a
+    * directory, none if it is missing. One file-status call for a file. */
+  private def filesOf(spark: SparkSession, path: Path): Seq[(String, Long, Long)] = {
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def stamp(f: FileStatus) = (f.getPath.toString, f.getLen, f.getModificationTime)
+    try {
+      val f = fs.getFileStatus(path)
+      if (f.isFile) Seq(stamp(f))
+      else {
+        val it = fs.listFiles(path, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+          .map(stamp).toVector.sortBy(_._1)
+      }
+    } catch { case _: FileNotFoundException => Nil }
+  }
+
+  private val resolved = new Memo[LogicalRelation](_ => ())
+
+  /** Table `name` under `dir`. Its relation is resolved once per session
+    * and file stamp; every load gets fresh attribute ids, so a table
+    * joined with itself resolves. A missing table raises the reader's
+    * usual error. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val relation = resolved(spark, dir, name, Seq(name)) {
+      spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
+        .queryExecution.analyzed.asInstanceOf[LogicalRelation]
+    }
+    DatasetShim.ofRows(spark, relation.newInstance())
   }
 }

@@ -43,8 +43,8 @@ object Pq {
 
   /** The grouped subspace fit on RAW vectors, memoized per
     * (dir, params) when callers pass memoKey — q_embed_pq and
-    * q_ann_pq train the identical codebooks (r11, the ivfParts
-    * pattern): assignment and codebook checkpoint through
+    * q_ann_pq train the identical codebooks (the ivfParts pattern):
+    * assignment and codebook checkpoint through
     * SharedFrames so they survive perfbench's `Harness.hygiene`. */
   private def rawFit(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -53,14 +53,13 @@ object Pq {
     case Some(dir) =>
       // key carries the INPUT identity (id/vec columns) alongside the
       // hyperparams: two callers training on different columns with the
-      // same params in the same dir must not share a fit (r11 ADVICE —
-      // the registry-name-shadowing bug class).
+      // same params in the same dir must not share a fit.
       val key = s"pqraw_${idCol}_${vecCol}_${m}_${subDim}_${k}_$iters"
-      graft.ops.SharedFrames.value(dir, key) {
+      graft.ops.SharedFrames.value(emb.sparkSession, dir, key) {
         val (a, cb) = KMeansFx.fitFxGrouped(
           subspacePoints(emb, idCol, vecCol, m, subDim), k, iters)
-        (graft.ops.SharedFrames.frame(dir, s"${key}_assign")(a),
-          graft.ops.SharedFrames.frame(dir, s"${key}_cb")(cb))
+        (graft.ops.SharedFrames.frame(emb.sparkSession, dir, s"${key}_assign")(a),
+          graft.ops.SharedFrames.frame(emb.sparkSession, dir, s"${key}_cb")(cb))
       }
     case None => KMeansFx.fitFxGrouped(
       subspacePoints(emb, idCol, vecCol, m, subDim), k, iters)
@@ -280,7 +279,7 @@ object Pq {
       kc: Int, m: Int, subDim: Int, k: Int, iters: Int,
       memoKey: Option[String] = None)
       : (DataFrame, DataFrame, DataFrame) = memoKey match {
-    // Suite-level memo (r11): q_ann_ivfpq, q_ann_ivfpq_rerank and
+    // Suite-level memo: q_ann_ivfpq, q_ann_ivfpq_rerank and
     // q_ann_recall train the SAME index (identical params) — before
     // the memo each consumer re-ran both Lloyd fits (~1.5-2s apiece at
     // sf0.1). The codebooks are driver-held LocalRelations (safe to
@@ -288,11 +287,11 @@ object Pq {
     // SharedFrames so it survives perfbench's `Harness.hygiene`.
     // Hash-invariant: the fits are deterministic fixed-point Lloyd.
     case Some(dir) =>
-      // input identity in the key — see rawFit (r11 ADVICE)
+      // input identity in the key — see rawFit
       val key = s"ivfpq_${idCol}_${vecCol}_${kc}_${m}_${subDim}_${k}_$iters"
-      graft.ops.SharedFrames.value(dir, key) {
+      graft.ops.SharedFrames.value(emb.sparkSession, dir, key) {
         val (a, b, c) = ivfParts(emb, idCol, vecCol, kc, m, subDim, k, iters)
-        (a, b, graft.ops.SharedFrames.frame(dir, s"${key}_codes")(c))
+        (a, b, graft.ops.SharedFrames.frame(emb.sparkSession, dir, s"${key}_codes")(c))
       }
     case None => {
     // The coarse fit's assignment keeps the fx vector, so residuals are

@@ -11,22 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Tables already bucketed this JVM, keyed table -> source token.
-    * Bucketing is a once-per-warehouse cost at scale, not a per-query
-    * one; this cache gives the same economics locally (Verify and
-    * perfbench re-invoke each query body in one JVM). */
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** [[writeBucketed]] but only if `table` wasn't already written from
-    * the same `sourceToken` (e.g. the input sf dir) in this JVM. */
-  def ensureBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-      sourceToken: String): Unit = {
-    if (written.get(table) != sourceToken) {
-      writeBucketed(df, table, key, buckets)
-      written.put(table, sourceToken)
-    }
-  }
-
   /** Persist `df` as a bucketed table (warehouse-managed parquet).
     * Drops any prior table AND its location first: a fresh session's
     * catalog doesn't know tables from previous runs, but their

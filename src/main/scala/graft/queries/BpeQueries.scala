@@ -12,9 +12,9 @@ import graft.text.{Bpe, Text}
   * materialization, Sennrich et al. arXiv 1508.07909).
   *
   * All three queries consume ONE suite-level `Bpe.train` run
-  * (memoized via [[graft.ops.SharedFrames.value]] — before r11 each
-  * ran its own training, so the corpus shuffle and the K argmax rounds
-  * executed three times per suite) and share the same generated oracle
+  * (memoized via [[graft.ops.SharedFrames.value]], so the corpus
+  * shuffle and the K argmax rounds run once, not once per query) and
+  * share the same generated oracle
   * CTE chain, so the learned merges, the resulting vocabulary and the
   * corpus encoding cannot drift from each other or from the oracle.
   * The memoized state is driver-bounded by construction (K merge rows
@@ -35,7 +35,7 @@ object BpeQueries {
     * symbolized vocab relation dies with the training caches. */
   private def trained(s: org.apache.spark.sql.SparkSession, d: String)
       : (Seq[Bpe.Merge], Seq[(String, Long, Long)]) =
-    SharedFrames.value(d, "bpe_trained") {
+    SharedFrames.value(s, d, "bpe_trained") {
       val t = Bpe.train(s, d, K)
       import s.implicits._
       val vocabRows = t.vocab

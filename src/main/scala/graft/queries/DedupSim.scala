@@ -439,7 +439,7 @@ object DedupSim {
     * chain, so DuckDB replays bucket assignment, candidate set, and
     * ranking bit-for-bit.
     *
-    * Replica-group collapse (r13 VERDICT #3): byte-identical vectors
+    * Replica-group collapse: byte-identical vectors
     * share bucket, norm, and every pairwise cosine, so the corpus is
     * grouped by an embedding fingerprint first and ALL fx dot products
     * run rep-against-rep; member pairs inherit the rep cosine through
@@ -1269,12 +1269,12 @@ object DedupSim {
 
   /** One span-mining pass per suite: q_dedup_substring (the detector
     * readout) and q_dedup_excise (the action) both consume the same
-    * winnow-anchor span table — before r11 each ran its own mining
-    * join (~3s apiece at sf0.1). Spans are tiny relative to the corpus
+    * winnow-anchor span table, where each would otherwise run its own
+    * mining join (~3s apiece at sf0.1). Spans are tiny relative to the corpus
     * (the natural SharedFrames checkpoint size). */
   private def repeatedSpansShared(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.ops.SharedFrames.frame(d, "substring_spans") {
+    graft.ops.SharedFrames.frame(s, d, "substring_spans") {
       graft.dedup.Substring
         .repeatedSpans(Tables.load(s, d, "documents"), "doc_id", "text")
     }

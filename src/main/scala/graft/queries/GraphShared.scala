@@ -15,9 +15,9 @@ import graft.ops.SharedFrames
   * [[Wave10.lpaLabels]]), q_graph_linkpred, q_graph_assortativity,
   * q_graph_sssp and q_graph_ppr — define the SAME edge contract:
   * distinct (order, part) incidences, parts pairing within an order,
-  * support >= 2 shared orders. Before r9 each ran its own a-priori-
-  * pruned merge-hinted pair self-join (~1.5-2s each at sf0.1); now
-  * the first consumer pays one build and the rest read the
+  * support >= 2 shared orders. Built per consumer, each would run its
+  * own a-priori-pruned merge-hinted pair self-join (~1.5-2s each at
+  * sf0.1); the first consumer pays one build and the rest read the
   * materialized RDD. Every consumer derives its own shape (oriented,
   * symmetric, weighted) with narrow ops whose rows are identical to
   * the inline build — hashes unchanged.
@@ -34,14 +34,14 @@ object GraphShared {
     * orders needs both parts in >= 2 order lines), merge-hinted so
     * the one big self-join is an SMJ over one exchange pair. */
   def pairs(s: SparkSession, d: String): DataFrame =
-    SharedFrames.frame(d, "graph_pairs_ge2") {
+    SharedFrames.frame(s, d, "graph_pairs_ge2") {
       val np = Session.partitions(s)
       val li = Tables.load(s, d, "lineitem")
         .select("l_orderkey", "l_partkey").distinct()
       // a-priori prefilter: parts on >= 2 order lines. Part-grain
       // (data-sized), so NO broadcast hint — stats/AQE broadcast it
       // while it fits and degrade to a shuffled semi-join at cluster
-      // scale (r12, the broadcast-purge invariant).
+      // scale (the registry-wide broadcast tripwire in PlanShapeSpec).
       val hot = Tables.load(s, d, "lineitem").groupBy("l_partkey")
         .agg(count(lit(1)).as("n_raw")).filter(col("n_raw") >= 2)
         .select("l_partkey")

@@ -167,24 +167,17 @@ object Relational {
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
   }
 
-  val aggGroupingSets: Q = Q(
-    "q_agg_gsets",
+  private val aggGroupingSetsSql =
     s"""SELECT l_returnflag, l_linestatus,
        |$groupedAggSql
        |FROM lineitem
        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin) {
-    (s, d) =>
-      // GROUPING SETS has no public DataFrame builder; SQL over a view is
-      // the idiomatic Spark route (same Catalyst Expand plan as rollup).
-      lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-          |  COUNT(*) AS n_rows
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
+       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
+
+  /** The oracle text itself, run over the table (the same Catalyst
+    * Expand plan as rollup). */
+  val aggGroupingSets: Q = Q("q_agg_gsets", aggGroupingSetsSql) { (s, d) =>
+    Q.sql(s, aggGroupingSetsSql, "lineitem" -> lineitem(s, d))
   }
 
   // -- joins --------------------------------------------------------------
@@ -429,44 +422,29 @@ object Relational {
     * directly (RewritePredicateSubquery) — the subquery never executes
     * per-row. The correlation is two-sided (key equality + an
     * inequality on the outer row's own column). */
-  val subqueryExists: Q = Q(
-    "q_subquery_exists",
+  private val subqueryExistsSql =
     """SELECT c_custkey, c_name, c_acctbal FROM customer c
       |WHERE EXISTS (SELECT 1 FROM orders o
       |              WHERE o.o_custkey = c.c_custkey
       |                AND o.o_totalprice > c.c_acctbal * 50)
-      |ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    customer(s, d).createOrReplaceTempView("customer")
-    orders(s, d).createOrReplaceTempView("orders")
-    s.sql(
-      """SELECT c_custkey, c_name, c_acctbal FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > c.c_acctbal * 50)
-        |ORDER BY c_custkey""".stripMargin)
+      |ORDER BY c_custkey""".stripMargin
+  val subqueryExists: Q = Q("q_subquery_exists", subqueryExistsSql) { (s, d) =>
+    Q.sql(s, subqueryExistsSql, "customer" -> customer(s, d), "orders" -> orders(s, d))
   }
 
   /** Correlated scalar subqueries (count + max per outer row):
     * decorrelated into one aggregate over orders joined back to
     * customer (RewriteCorrelatedScalarSubquery) — including the
     * COUNT-over-no-rows = 0 edge both engines must agree on. */
-  val subqueryScalar: Q = Q(
-    "q_subquery_scalar",
+  private val subqueryScalarSql =
     """SELECT c_custkey, c_acctbal,
       |  (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey
       |     AND o.o_totalprice > 350000) AS n_big_orders,
       |  (SELECT MAX(o_totalprice) FROM orders o
       |     WHERE o.o_custkey = c.c_custkey) AS max_order
-      |FROM customer c ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    customer(s, d).createOrReplaceTempView("customer")
-    orders(s, d).createOrReplaceTempView("orders")
-    s.sql(
-      """SELECT c_custkey, c_acctbal,
-        |  (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey
-        |     AND o.o_totalprice > 350000) AS n_big_orders,
-        |  (SELECT MAX(o_totalprice) FROM orders o
-        |     WHERE o.o_custkey = c.c_custkey) AS max_order
-        |FROM customer c ORDER BY c_custkey""".stripMargin)
+      |FROM customer c ORDER BY c_custkey""".stripMargin
+  val subqueryScalar: Q = Q("q_subquery_scalar", subqueryScalarSql) { (s, d) =>
+    Q.sql(s, subqueryScalarSql, "customer" -> customer(s, d), "orders" -> orders(s, d))
   }
 
   /** Equi-width histogram in exact integer space: prices as cents,

@@ -15,9 +15,8 @@ import graft.text.Text
   * `q_retrieval_ndcg` (sparse top-10 vs dense top-10),
   * `q_hybrid_rrf` (sparse top-20 fused with dense top-20) and
   * `q_sparse_cosine` (the sparse scorer over its own probe set) — and
-  * before r9 each rebuilt the full tf-idf index and/or the exact dense
-  * scoring from scratch (~15-20s of the r8 driver bench total was
-  * triple-computed work). Now:
+  * built per consumer, each would rebuild the full tf-idf index and/or
+  * the exact dense scoring from scratch. Now:
   *
   *  - [[docvecs]] — the dense per-doc tf-idf weight-vector index
   *    (doc_id, v, n2) behind [[TextQueries.sparseSims]]: built once,
@@ -37,10 +36,10 @@ object RetrievalShared {
 
   /** Vocabulary size (distinct terms) — driver scalar, dictionary-
     * bounded. Reads the materialized [[tfFrame]], not its own corpus
-    * pass (r14: vsize + the two tf references inside docvecs were
-    * three full explode+aggregate passes over the corpus; now one). */
+    * pass (vsize and the two tf references inside docvecs would
+    * otherwise be three full explode+aggregate passes over the corpus). */
   def vsize(s: SparkSession, d: String): Int =
-    SharedFrames.value[Long](d, "vsize") {
+    SharedFrames.value[Long](s, d, "vsize") {
       tfFrame(s, d).select("term").distinct().count()
     }.toInt
 
@@ -50,7 +49,7 @@ object RetrievalShared {
     * materialization each reference re-ran the corpus explode +
     * aggregate (guide §1.2: don't recompute what you already have). */
   private def tfFrame(s: SparkSession, d: String): DataFrame =
-    SharedFrames.frame(d, "tf") {
+    SharedFrames.frame(s, d, "tf") {
       Text.tokenRows(
           Tables.load(s, d, "documents").repartition(Session.partitions(s)),
           col("text"), "term", col("doc_id"))
@@ -85,7 +84,7 @@ object RetrievalShared {
     * so downstream scoring stays parallel (no AQE single-partition
     * coalesce of the fan-out stage). */
   def docvecs(s: SparkSession, d: String): DataFrame =
-    SharedFrames.frame(d, "docvecs") {
+    SharedFrames.frame(s, d, "docvecs") {
       val n = vsize(s, d)
       val tf = tfFrame(s, d)
       val dfq = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -104,7 +103,7 @@ object RetrievalShared {
   /** Exact-integer sparse cos² similarities for a probe set — the
     * scoring stage over the shared [[docvecs]] index.
     *
-    * Dense-adjacency scoring rationale (measured r8): this corpus's
+    * Dense-adjacency scoring rationale: this corpus's
     * vocabulary is 31 terms with df ~ 80% of N, so EVERY (probe, doc)
     * pair shares terms — the inverted-index candidate join (kept as
     * the oracle's shape) would materialize the same Q x N pairs 31
@@ -136,7 +135,7 @@ object RetrievalShared {
 
   /** Sparse ranking, top-20 per %100 probe: (probe_id, doc_id, rs). */
   def sparseTop20(s: SparkSession, d: String): DataFrame =
-    SharedFrames.frame(d, "sparse_top20") {
+    SharedFrames.frame(s, d, "sparse_top20") {
       TopK.perGroup(sparseSims(s, d, probeMod = 100L),
         partitionBy = Seq(col("probe_id")),
         orderBy = Seq(col("sim2_e9").desc, col("doc_id").asc),
@@ -150,7 +149,7 @@ object RetrievalShared {
     * and it is the suite's quadratic term, which is exactly why it is
     * computed once and shared. */
   def denseTop20(s: SparkSession, d: String): DataFrame =
-    SharedFrames.frame(d, "dense_top20") {
+    SharedFrames.frame(s, d, "dense_top20") {
       import graft.ml.Embeddings.fxDot
       val withNorm = Tables.load(s, d, "embeddings")
         .repartition(Session.partitions(s))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact._
-import graft.ops.{Bucketing, Skew}
+import graft.ops.{Bucketing, SharedFrames, Skew}
 import graft.text.Text
 
 /** Wave 5 — scale patterns exercised as first-class queries: the
@@ -39,22 +39,26 @@ object ScaleOps {
 
   /** Co-located bucketed join == plain join; the bucketed plan has no
     * shuffle exchange for the join itself (asserted in ScaleOpsSpec;
-    * visible in PLANS.md). The bucketed tables are written once per
-    * (JVM, input dir) — bucketing is a warehouse-build cost, not a
-    * per-query one — so repeated invocations time only the join. */
+    * visible in PLANS.md). Writing the managed tables `graft_b_orders`
+    * and `graft_b_lineitem` is a warehouse-build cost, not a per-query
+    * one: a [[SharedFrames]] build writes them once per session and
+    * input files, so repeated invocations time only the join. The
+    * catalog holds one pair of tables, so the build for one dir drops
+    * the entry of any other dir, whose tables it overwrites. */
   val joinBucketed: Q = Q(
     "q_join_bucketed",
     """SELECT o_orderkey, COUNT(*) AS n_items,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
       |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
       |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    Bucketing.ensureBucketed(
-      Tables.load(s, d, "orders").select("o_orderkey"),
-      "graft_b_orders", "o_orderkey", buckets = 8, sourceToken = d)
-    Bucketing.ensureBucketed(
-      Tables.load(s, d, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-      "graft_b_lineitem", "o_orderkey", buckets = 8, sourceToken = d)
+    SharedFrames.value(s, d, "graft_b_tables") {
+      SharedFrames.release("graft_b_tables")
+      Bucketing.writeBucketed(Tables.load(s, d, "orders").select("o_orderkey"),
+        "graft_b_orders", "o_orderkey", buckets = 8)
+      Bucketing.writeBucketed(Tables.load(s, d, "lineitem")
+          .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
+        "graft_b_lineitem", "o_orderkey", buckets = 8)
+    }
     Bucketing.colocatedJoin(s, "graft_b_orders", "graft_b_lineitem", "o_orderkey")
       .groupBy("o_orderkey")
       .agg(count(lit(1)).as("n_items"), dsum(col("l_quantity")).as("sum_qty"))
@@ -323,19 +327,17 @@ object ScaleOps {
       |WHERE l_suppkey IN
       |  (SELECT s_suppkey FROM supplier WHERE s_acctbal > 4500.0)
       |ORDER BY l_orderkey, l_linenumber, l_suppkey""".stripMargin) { (s, d) =>
-    Tables.load(s, d, "supplier").createOrReplaceTempView("supplier")
-    Tables.load(s, d, "lineitem").createOrReplaceTempView("lineitem")
-    s.udf.register("graft_bloom_agg",
-      udaf(graft.functions.BloomFilter.Agg(numBits = 1 << 13, numHashes = 4)))
-    s.sql(
-      """SELECT l_orderkey, l_linenumber, l_suppkey FROM lineitem
-        |WHERE graft_bloom_might_contain(
-        |        (SELECT graft_bloom_agg(s_suppkey) FROM supplier
-        |         WHERE s_acctbal > 4500.0),
-        |        CAST(l_suppkey AS BIGINT))
-        |  AND l_suppkey IN (SELECT s_suppkey FROM supplier
-        |                    WHERE s_acctbal > 4500.0)
-        |ORDER BY l_orderkey, l_linenumber, l_suppkey""".stripMargin)
+    val dim = Tables.load(s, d, "supplier").filter(col("s_acctbal") > 4500.0)
+    val bloomAgg =
+      udaf(graft.functions.BloomFilter.Agg(numBits = 1 << 13, numHashes = 4))
+        .withName("graft_bloom_agg")
+    val bloom = dim.select(bloomAgg(col("s_suppkey"))).scalar()
+    Tables.load(s, d, "lineitem")
+      .filter(call_function("graft_bloom_might_contain",
+          bloom, col("l_suppkey").cast("bigint")) &&
+        col("l_suppkey").isin(dim.select("s_suppkey")))
+      .select("l_orderkey", "l_linenumber", "l_suppkey")
+      .orderBy("l_orderkey", "l_linenumber", "l_suppkey")
   }
 
   /** Data-quality constraint suite (Deequ-style): each check is one

@@ -86,8 +86,7 @@ object Wave10 {
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
       graft.functions.Exact.bucket(ms(col("o_orderdate")), 86400000L).as("day"),
       col("o_orderpriority").as("pri"))
-    // r15 (guide §7.2 read-the-plan + §5 operator choice): min/max
-    // over STRING columns put UTF8String fields in the aggregation
+    // min/max over STRING columns put UTF8String fields in the aggregation
     // buffer, which disqualifies HashAggregate — the whole 7-way
     // multi-distinct Expand path (7x the fact rows) fell back to
     // SortAggregate, paying TWO full sorts of the expanded rows on the
@@ -554,8 +553,8 @@ object Wave10 {
     *
     * Every frame is memoized through [[graft.ops.SharedFrames]] (the
     * GraphShared pattern one level up): q_graph_labelprop and
-    * q_graph_modularity both consume this chain, and before r11 each
-    * built it fresh — the suite ran its most expensive iterative job
+    * q_graph_modularity both consume this chain; built per consumer,
+    * the suite ran its most expensive iterative job
     * twice to score its own output (modularity was the #1 driver bench
     * cost). Now the first consumer pays one build (eager executor-local
     * checkpoints, exempt from perfbench's `Harness.hygiene`) and the
@@ -569,17 +568,17 @@ object Wave10 {
     // load-bearing partitioning: every round joins labels against eu on
     // v, and the checkpointed LogicalRDD preserves the repartition's
     // hashpartitioning(v), so rounds shuffle only the node-sized labels
-    val eu = SharedFrames.frame(d, "lpa_eu") {
+    val eu = SharedFrames.frame(s, d, "lpa_eu") {
       e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(np, col("v"))
     }
-    var frames = Vector(SharedFrames.frame(d, "lpa_l0") {
+    var frames = Vector(SharedFrames.frame(s, d, "lpa_l0") {
       eu.select(col("u").as("node")).distinct()
         .withColumn("lbl", col("node"))
     })
     (1 to LpaRounds).foreach { i =>
       val prev = frames.last
-      frames :+= SharedFrames.frame(d, s"lpa_l$i") {
+      frames :+= SharedFrames.frame(s, d, s"lpa_l$i") {
         eu.join(prev.select(col("node").as("v"), col("lbl")), "v")
           .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("n"))
           .groupBy(col("u"))
@@ -605,8 +604,8 @@ object Wave10 {
       // in the main projection and rounds R and R-1 in the n_changed
       // witness subquery, and without the checkpoints those branches
       // would RE-EXECUTE the whole chain (11 round-evaluations instead
-      // of 4; measured 5.9s -> 4.1s isolated sf0.1). Since r11 the
-      // frames are ALSO suite-memoized: q_graph_modularity reads the
+      // of 4; measured 5.9s -> 4.1s isolated sf0.1). The frames are
+      // ALSO suite-memoized: q_graph_modularity reads the
       // same RDDs instead of rebuilding the chain. The argmax is a
       // struct max (max n, then min label via negation): one
       // aggregate, no window rank.
@@ -714,7 +713,7 @@ object Wave10 {
     * symmetric edge list (the triangle-count shape); the candidate set
     * anti-joins the edge list; the degree table joins once per endpoint
     * but builds ONE BroadcastExchange (renamed projections canonicalize
-    * identically — the q_triangle_count r6 lesson). No all-pairs stage.
+    * identically, as in q_triangle_count). No all-pairs stage.
     */
   val graphLinkpred: Q = Q(
     "q_graph_linkpred",
@@ -805,12 +804,12 @@ object Wave10 {
 
   /** Shared Holt-chain engine machinery: the 24 stacked
     * (step, x_cents, level_cents, trend_cents) rows. Memoized per
-    * suite (r11 VERDICT #6): q_holt_linear and q_forecast_eval consume
+    * suite: q_holt_linear and q_forecast_eval consume
     * the identical chain, and before the memo each evaluated its own
     * orders aggregate. Hash-invariant — the frame content is
     * unchanged; the 24-row checkpoint is trivial to materialize. */
   def holtSeries(s: SparkSession, d: String): DataFrame =
-    graft.ops.SharedFrames.frame(d, "holt_series")(holtSeriesBuild(s, d))
+    graft.ops.SharedFrames.frame(s, d, "holt_series")(holtSeriesBuild(s, d))
 
   private def holtSeriesBuild(s: SparkSession, d: String): DataFrame = {
     val H = HoltSteps

@@ -99,9 +99,7 @@ object Wave23 {
           sum(expr("CAST(x1 * y AS DECIMAL(38,0))")).as("s1y"),
           sum(expr("CAST(x2 * y AS DECIMAL(38,0))")).as("s2y"),
           sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
-      mom.createOrReplaceTempView("w23_mom")
-      s.sql(tail("div", a => s"CAST($a AS DECIMAL(38,0))")
-        .replace("FROM mom", "FROM w23_mom"))
+      Q.sql(s, tail("div", a => s"CAST($a AS DECIMAL(38,0))"), "mom" -> mom)
     }
   }
 

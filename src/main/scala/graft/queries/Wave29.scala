@@ -75,9 +75,7 @@ object Wave29 {
           sum(expr("z * x")).as("szx"),
           sum(expr("CAST(z * y AS DECIMAL(38,0))")).as("szy"),
           sum(expr("CAST(x * y AS DECIMAL(38,0))")).as("sxy"))
-      mom.createOrReplaceTempView("w29_mom")
-      s.sql(tail("div", a => s"CAST($a AS DECIMAL(38,0))")
-        .replace("FROM mom", "FROM w29_mom"))
+      Q.sql(s, tail("div", a => s"CAST($a AS DECIMAL(38,0))"), "mom" -> mom)
     }
   }
 
@@ -157,7 +155,7 @@ object Wave29 {
         .groupBy("seg", "reg")
         .agg(sum(expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
           .as("rv"))
-      // r14: the carried IPF matrix is the (mktsegment x region) grid —
+      // The carried IPF matrix is the (mktsegment x region) grid —
       // <= 25 cells at ANY corpus scale (both axes are fixed
       // dictionaries), the same boundedness that justifies
       // q_eval_bradley_terry's driver-side MM recursion and
@@ -176,7 +174,7 @@ object Wave29 {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       val revRows = rev.collect()
         .map(r => ((r.getString(0), r.getLong(1)), BigInt(r.getLong(2))))
-      // r15 boundedness tripwire (VERDICT r14 #2): the driver solve is
+      // Boundedness tripwire: the driver solve is
       // only legal because the grid is the (mktsegment x region)
       // product of two fixed dictionaries — 5 x 5 today. Fail LOUD if
       // a future edit generalizes an axis into something data-sized
@@ -186,7 +184,7 @@ object Wave29 {
           s"(got ${cellRows.length} cells / ${revRows.length} rev cells)")
       val nt = BigInt(cellRows.map(_._3).sum)
       val rvt = revRows.map(_._2).sum
-      // Margin invariant (ADVICE r14): every scaling denominator below
+      // Margin invariant: every scaling denominator below
       // (rvt, rs(sg), cs(rg)) must be positive — revenue cents are
       // positive and every kept cell carries weight, so a zero margin
       // means the data contract broke; the old Spark DECIMAL-div plan

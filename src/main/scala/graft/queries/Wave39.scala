@@ -120,9 +120,7 @@ object Wave39 {
         sum(when(col("arm") === "a", col("post")).otherwise(0L)).as("ssa"),
         sum(when(col("arm") === "b", col("pre")).otherwise(0L)).as("spb"),
         sum(when(col("arm") === "b", col("post")).otherwise(0L)).as("ssb"))
-      mom.createOrReplaceTempView("w39_mom")
-      s.sql(tail("div", a => s"CAST($a AS DECIMAL(38,0))")
-        .replace("FROM mom", "FROM w39_mom"))
+      Q.sql(s, tail("div", a => s"CAST($a AS DECIMAL(38,0))"), "mom" -> mom)
     }
   }
 
@@ -169,13 +167,8 @@ object Wave39 {
         .select(col("label"), (col("pos") + 1).as("i"), col("col").as("v"))
         .groupBy("label", "i").agg(sum("v").as("s"))
       val cnt = emb.groupBy("label").agg(count(lit(1)).as("n"))
-      dim.createOrReplaceTempView("w39_dim")
-      cnt.createOrReplaceTempView("w39_cnt")
-      s.sql(tail("div", a => s"CAST($a AS DECIMAL(38,0))")
-        .replace("FROM dim a", "FROM w39_dim a")
-        .replace("JOIN dim b", "JOIN w39_dim b")
-        .replace("JOIN cnt ca", "JOIN w39_cnt ca")
-        .replace("JOIN cnt cb", "JOIN w39_cnt cb"))
+      Q.sql(s, tail("div", a => s"CAST($a AS DECIMAL(38,0))"),
+        "dim" -> dim, "cnt" -> cnt)
     }
   }
 

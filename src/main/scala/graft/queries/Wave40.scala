@@ -169,9 +169,7 @@ object Wave40 {
           .as("swyc"),
         sum(when(col("t") === 1, col("w")).otherwise(0L)).as("swt"),
         sum(when(col("t") === 0, col("w")).otherwise(0L)).as("swc"))
-      agg.createOrReplaceTempView("w40_agg")
-      s.sql(tail("div", a => s"CAST($a AS DECIMAL(38,0))")
-        .replace("FROM agg", "FROM w40_agg"))
+      Q.sql(s, tail("div", a => s"CAST($a AS DECIMAL(38,0))"), "agg" -> agg)
     }
   }
 

@@ -35,7 +35,7 @@ object Wave69 {
   /** The single derivation of the player set and opponent map from the
     * match matrix — shared by [[btFixedPoint]] and the query readout so
     * the reported n_matches/rnk can never drift from the ratings the
-    * recursion produced (r13 ADVICE). */
+    * recursion produced. */
   private[graft] def btPlayersOpp(nij: Map[(String, String), Long])
       : (Seq[String], Map[String, Seq[String]]) = {
     val players = nij.keys.map(_._1).toSeq.distinct.sorted
@@ -95,7 +95,8 @@ object Wave69 {
     * arithmetic on a ≤ 25×25 dictionary — collected to the driver like
     * a learned model, never joined back at data grain. */
   /** Exact micro-spend aggregate shared with Wave77's preference-cycle
-    * audit (a def, not a val — the r8 val-init-order trap). */
+    * audit (a def, not a val, so no object's initialization order can
+    * read it as null). */
   private[queries] def btSpendSql: String =
     """SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
       |    * (10000 - CAST(ROUND(l.l_discount * 10000, 0) AS BIGINT)))"""
@@ -110,7 +111,7 @@ object Wave69 {
   private[queries] def btPairFrame(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.ops.SharedFrames.frame(d, "bt_pairs") {
+    graft.ops.SharedFrames.frame(s, d, "bt_pairs") {
       val os = Tables.load(s, d, "lineitem").as("l")
         .join(Tables.load(s, d, "part")
           .select(col("p_partkey").as("l_partkey"), col("p_brand").as("b")),

@@ -22,6 +22,50 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def executed(name: String): String = staticPlan(name).toString
 
+  /** What a build may change in the session: its temp views, global temp
+    * views and temporary functions (each by reference), and its
+    * persistent tables (by name). */
+  private def catalogState(): Map[String, AnyRef] = {
+    val c = spark.sessionState.catalog
+    val g = c.globalTempViewManager
+    val fns = spark.sessionState.functionRegistry
+    val ext = c.externalCatalog
+    c.getTempViewNames().map(n => s"temp view $n" -> c.getRawTempView(n).orNull).toMap ++
+      g.listViewNames("*").map(n => s"global temp view $n" -> g.get(n).orNull) ++
+      c.listTemporaryFunctions().map(f =>
+        s"temporary function ${f.funcName}" -> fns.lookupFunctionBuilder(f).orNull) ++
+      ext.listDatabases().flatMap(db => ext.listTables(db).map(t => s"table $db.$t" -> ""))
+  }
+
+  /** The tables `q_join_bucketed` writes: writing them is its capability. */
+  private val ownedTables = Set("table default.graft_b_orders", "table default.graft_b_lineitem")
+
+  /** The one registry walk: every query built once at sf0.001, in name
+    * order, with the catalog entries its build added, dropped or
+    * replaced. The registry-wide tripwires read their plans from it.
+    * Sharing one walk is sound only because no build rebinds a view
+    * that another build reads, which the catalog tripwire checks. */
+  private lazy val walk: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, f) =>
+      val before = catalogState()
+      val df = f(spark, SharedSpark.sf001)
+      val after = catalogState()
+      val changed = (before.keySet ++ after.keySet).toSeq.sorted.filter { k =>
+        !ownedTables(k) && !(before.get(k).zip(after.get(k)).exists { case (a, b) => a eq b })
+      }
+      (name, df, changed)
+    }
+
+  test("registry-wide: a build leaves the session's temp views, global " +
+    "temp views and temporary functions as it found them, and adds no " +
+    "persistent table but graft_b_orders and graft_b_lineitem") {
+    val bad = walk.collect { case (name, _, changed) if changed.nonEmpty =>
+      s"$name: ${changed.mkString(", ")}"
+    }
+    assert(bad.isEmpty,
+      s"${bad.size} builds changed the session's catalog:\n" + bad.mkString("\n"))
+  }
+
   test("q_join_interval_overlap: binned equi-join, never a nested-loop " +
     "or cartesian product") {
     val plan = executed("q_join_interval_overlap")
@@ -381,7 +425,7 @@ class PlanShapeSpec extends AnyFunSuite {
         .filter(org.apache.spark.sql.functions.col("n_raw") >= 2)
         .select("l_partkey")
       import org.apache.spark.sql.functions._
-      // un-hinted since r12: hot is part-grain (data-sized)
+      // un-hinted: hot is part-grain (data-sized)
       val lih = li.join(hot, Seq("l_partkey"), "left_semi")
       val a = lih.select(col("l_orderkey"), col("l_partkey").as("u"))
         .hint("merge")
@@ -517,7 +561,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(bnl.size <= 2, s"expected <=2 one-row BNLJs (m, q_ppm), got " +
       s"${bnl.size}:\n" + s.take(1500))
     // the SharedFrames memo must hand labelprop and modularity the SAME
-    // label frames (one LPA build per suite — the r10 #1 finding)
+    // label frames (one LPA build per suite)
     val a = graft.queries.Wave10.lpaLabels(spark, SharedSpark.sf001)
     val b = graft.queries.Wave10.lpaLabels(spark, SharedSpark.sf001)
     assert((a._2 eq b._2) && (a._3 eq b._3) && (a._4 eq b._4),
@@ -572,10 +616,11 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("registry-wide: every WindowExec carries a partition spec (no " +
     "data-sized single-partition windows anywhere)") {
+    val built = walk
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
-        val plan = f(spark, SharedSpark.sf001).queryExecution.executedPlan
+      built.foreach { case (name, df, _) =>
+        val plan = df.queryExecution.executedPlan
         val bad = plan.collectWithSubqueries {
           case w: org.apache.spark.sql.execution.window.WindowExec
               if w.partitionSpec.isEmpty => w
@@ -673,8 +718,8 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     // Tables whose row count scales with SF: force-broadcasting any of
-    // them (un-aggregated) is exactly the 100TB hard-fail the r11
-    // verdict flagged. nation (25) / region (5) are bounded and exempt.
+    // them (un-aggregated) hard-fails at 100TB. nation (25) / region (5)
+    // are bounded and exempt.
     val dataSized =
       Seq("customer", "supplier", "part", "orders", "lineitem",
         "events", "documents", "embeddings")
@@ -729,9 +774,9 @@ class PlanShapeSpec extends AnyFunSuite {
       "from_type", "to_type", "nk")
     // GENERIC one-letter/short aliases (b, i, s1, s2, bin, bkt) are NOT
     // globally exempt: a future data-grain aggregate whose key happens
-    // to be aliased "b" must not silently bypass the tripwire (r13
-    // ADVICE). Each generic alias is exempted ONLY for the audited
-    // query that coined it, with the bounding argument inline:
+    // to be aliased "b" must not silently bypass the tripwire. Each
+    // generic alias is exempted ONLY for the audited query that coined
+    // it, with the bounding argument inline:
     val scopedBoundedCols: Map[String, Set[String]] = Map(
       // bin = c_mktsegment aliased (5-segment dictionary)
       "q_causal_ipw" -> Set("bin"),
@@ -752,8 +797,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // explicit limit. A data-sized-grain aggregate (groupBy doc_id /
     // custkey / partkey …) is NOT exempt — its output scales with the
     // corpus and a forced broadcast over it still hard-fails the 8GB
-    // limit at cluster scale (r12 ADVICE tightened this; the old rule
-    // exempted ANY Aggregate).
+    // limit at cluster scale.
     def unboundedScans(p: LogicalPlan, bounded: Set[String]): Seq[String] =
       p match {
         case a: Aggregate =>
@@ -771,12 +815,12 @@ class PlanShapeSpec extends AnyFunSuite {
         }
         case other => other.children.flatMap(unboundedScans(_, bounded))
       }
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, f) if probePanels(name) => Nil
-      case (name, f) =>
+    val bad = walk.flatMap {
+      case (name, _, _) if probePanels(name) => Nil
+      case (name, df, _) =>
         val bounded =
           boundedCols ++ scopedBoundedCols.getOrElse(name, Set.empty)
-        val plan = f(spark, SharedSpark.sf001).queryExecution.analyzed
+        val plan = df.queryExecution.analyzed
         plan.collectWithSubqueries {
           case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
             unboundedScans(h.child, bounded)
@@ -794,15 +838,16 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val registry = spark.sessionState.functionRegistry
     // the GraftExtensions kernels are the graft_* functions whose class
-    // is a graft.plans expression (a query's own temporary UDF, such as
-    // q_bloom_prune's graft_bloom_agg, is not a kernel)
+    // is a graft.plans expression; the catalog tripwire keeps builds
+    // from registering any other function, so the filter only guards
+    // against a graft_* name registered outside the registry
     val kernels = registry.listFunction().map(_.funcName)
       .filter(_.startsWith("graft_")).distinct
       .map(n => n -> registry.lookupFunction(FunctionIdentifier(n)).get.getClassName)
       .filter(_._2.startsWith("graft.plans."))
     assert(kernels.nonEmpty, "no graft_* kernel is registered")
-    val reached = SparkEntry.queries.toSeq.flatMap { case (_, f) =>
-      f(spark, SharedSpark.sf001).queryExecution.analyzed
+    val reached = walk.flatMap { case (_, df, _) =>
+      df.queryExecution.analyzed
         .collectWithSubqueries { case p =>
           p.expressions.flatMap(_.collect { case e => e.getClass.getName })
         }.flatten

@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry-wide SharedFrames tripwire (r11 VERDICT #5): after a full
-  * registry pass, every suite-shared build must have materialized
-  * EXACTLY once, and the known shared families must actually ride the
-  * memo. The per-family reference-equality pins in PlanShapeSpec catch
-  * a family whose consumers stop sharing; this catches the other two
+/** Registry-wide SharedFrames tripwire: after a full registry pass,
+  * every suite-shared build must have materialized EXACTLY once, and
+  * the known shared families must actually ride the memo. The
+  * per-family reference-equality pins in PlanShapeSpec catch a family
+  * whose consumers stop sharing; this catches the other two
   * regressions — a key that builds twice (memo bypass / key drift
   * between call sites) and a family that silently stops registering
   * builds at all (e.g. a refactor that drops the memoKey argument).
@@ -17,27 +17,27 @@ class SharedBuildSpec extends AnyFunSuite {
   test("full registry pass: every shared (dir, name) builds exactly " +
     "once, and the LPA/BPE/spans/PQ/retrieval families ride the memo") {
     import graft.ops.SharedFrames
-    val dir = SharedSpark.sf001
-    // Fresh epoch: earlier suites may have already built frames for
-    // this dir (memo hits leave no build entry), so drop both the
-    // memo and the log — this pass must rebuild everything itself.
+    // Fresh epoch: earlier suites may have already built frames (memo
+    // hits leave no build entry), so drop both the memo and the log —
+    // this pass, at one dir, must rebuild everything itself.
     SharedFrames.releaseAll()
     SharedFrames.clearBuildLog()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
       SharedFrames.setPayer(name)
-      f(spark, dir).count()
+      f(spark, SharedSpark.sf001).count()
     }
-    val builds = SharedFrames.paidBuildsByDir.toSeq
-      .flatMap { case (payer, dn) => dn.map { case (d, n) => (d, n, payer) } }
-    val dup = builds.groupBy(b => (b._1, b._2)).filter(_._2.size > 1)
+    val builds = SharedFrames.paidBuilds.toSeq
+      .flatMap { case (payer, ns) => ns.map(n => (n, payer)) }
+    val dup = builds.groupBy(_._1).filter(_._2.size > 1)
     assert(dup.isEmpty,
-      "shared keys built more than once per suite:\n" + dup.map {
-        case ((d, n), xs) => s"  ($d, $n) by ${xs.map(_._3).mkString(", ")}"
+      "shared names built more than once per suite:\n" + dup.map {
+        case (n, xs) => s"  $n by ${xs.map(_._2).mkString(", ")}"
       }.mkString("\n"))
-    val names = builds.map(_._2).toSet
+    val names = builds.map(_._1).toSet
     val expectedPrefixes = Seq(
       "lpa_", "bpe_trained", "substring_spans", "ivfpq_", "pqraw_",
-      "graph_pairs_ge2", "docvecs", "sparse_top20", "dense_top20")
+      "graph_pairs_ge2", "docvecs", "sparse_top20", "dense_top20",
+      "graft_b_tables")
     val missing =
       expectedPrefixes.filterNot(p => names.exists(_.startsWith(p)))
     assert(missing.isEmpty,

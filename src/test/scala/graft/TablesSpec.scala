@@ -24,6 +24,15 @@ class TablesSpec extends AnyFunSuite {
     dir
   }
 
+  /** Replace table `name` in `dir` with the rows of `df`, as one file. */
+  private def replaceTable(dir: Path, name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = Files.createTempDirectory("tables-spec-write").resolve("out").toString
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, dir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
   test("each declared schema equals the schema Spark infers from the file") {
     Tables.names.foreach { n =>
       val inferred = spark.read.parquet(s"${SharedSpark.sf001}/$n.parquet").schema
@@ -69,17 +78,42 @@ class TablesSpec extends AnyFunSuite {
     val kept = Tables.load(spark, dir.toString, "orders")
       .filter(col("o_orderkey") % 7 === 0).orderBy("o_orderkey").collect()
     assert(kept.nonEmpty && kept.length < before)
-    val tmp = dir.resolve("orders.tmp").toString
-    spark.createDataFrame(java.util.Arrays.asList(kept: _*), Tables.schemas("orders"))
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-    Files.move(part.toPath, dir.resolve("orders.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    replaceTable(dir, "orders",
+      spark.createDataFrame(java.util.Arrays.asList(kept: _*), Tables.schemas("orders")))
     val reloaded = Tables.load(spark, dir.toString, "orders")
     assert(reloaded.orderBy("o_orderkey").collect().toSeq == kept.toSeq)
     // the planner sizes the scan (broadcast choices) from the new file
     assert(reloaded.queryExecution.optimizedPlan.stats.sizeInBytes ==
       Files.size(dir.resolve("orders.parquet")))
+  }
+
+  test("memoized builds follow a replaced table file: q_retrieval_ndcg, " +
+    "q_bpe_vocab and q_join_bucketed equal the same queries over a fresh " +
+    "copy that holds the new file") {
+    val queries = Seq("q_retrieval_ndcg", "q_bpe_vocab", "q_join_bucketed")
+    def rows(q: String, dir: Path): Seq[String] =
+      SparkEntry.queries(q)(spark, dir.toString).collect().map(_.toString).toSeq
+    val sf001 = java.nio.file.Paths.get(SharedSpark.sf001)
+    val bucketed = rows("q_join_bucketed", sf001)
+    val replaced = copyOfTables()
+    queries.foreach(rows(_, replaced)) // the memos now hold the first files
+    // every third row of documents and of orders, replacing the files of
+    // the used copy and, in a fresh copy, there from the start
+    val fresh = copyOfTables()
+    Seq("documents" -> "doc_id", "orders" -> "o_orderkey").foreach { case (t, key) =>
+      val kept = Tables.load(spark, SharedSpark.sf001, t).filter(col(key) % 3 === 0)
+      Seq(replaced, fresh).foreach(replaceTable(_, t, kept))
+    }
+    val stale = queries.filter { q =>
+      val (got, want) = (rows(q, replaced), rows(q, fresh))
+      if (got != want) info(s"$q: ${got.size} rows after the replacement, ${want.size} over the fresh copy")
+      got != want
+    }
+    assert(stale.isEmpty,
+      s"memoized builds returned rows of the replaced files: ${stale.mkString(", ")}")
+    // the catalog holds one pair of bucketed tables: back at sf0.001,
+    // the query must not read the tables the other dirs' builds wrote
+    assert(rows("q_join_bucketed", sf001) == bucketed)
   }
 
   test("a table joined with a second load of itself resolves") {
