@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact._
+import graft.functions.Sketches
 
 /** Wave 4c — event-stream product analytics: ordered funnels and
   * cohort retention. Both are per-entity window pipelines: ONE shuffle
@@ -341,12 +342,10 @@ object Analytics {
     * the mergeability demo is the point: the union of two bottom-k
     * sets re-trimmed to k IS the sketch of the union, so shard
     * sketches combine without ever revisiting the data. md5 hex is the
-    * hash (identical lowercase hex in both engines; lexicographic
-    * order on fixed-width hex = numeric order), and the estimator
-    * (k−1)·2^48 / h_(k) runs on the first 48 hash bits as a single
-    * exact integer division (hash-safe cross-engine; CLAUDE.md float
-    * rule). `exact_distinct` rides along as the accuracy witness — at
-    * 100TB you'd never compute it; the sketch is the feasible path.
+    * hash (lexicographic order on fixed-width hex = numeric order); the
+    * estimator is [[Sketches]]' exact-integer KMV. `exact_distinct`
+    * rides along as the accuracy witness — at 100TB you'd never
+    * compute it; the sketch is the feasible path.
     *
     * Shape at 100TB: one map-side-partial distinct on (day, hash),
     * bottom-k per day via the map-side group limit ([[graft.ops
@@ -355,7 +354,7 @@ object Analytics {
     * (day, hash) distinct. */
   val kmvDistinct: Q = Q(
     "q_sketch_kmv",
-    """WITH dh AS (SELECT DISTINCT CAST(l_shipdate AS DATE) AS day,
+    s"""WITH dh AS (SELECT DISTINCT CAST(l_shipdate AS DATE) AS day,
       |    md5(CAST(l_orderkey AS VARCHAR)) AS h FROM lineitem),
       |dsk AS (SELECT day, h FROM (
       |    SELECT day, h, ROW_NUMBER() OVER (PARTITION BY day ORDER BY h) AS rn
@@ -371,8 +370,7 @@ object Analytics {
       |    COUNT(DISTINCT l_orderkey) AS exact_distinct FROM lineitem GROUP BY month)
       |SELECT e.month, e.sketch_k,
       |  CASE WHEN e.sketch_k < 64 THEN e.sketch_k
-      |       ELSE 17732923532771328 //
-      |         GREATEST(CAST(concat('0x', substr(e.hk, 1, 12)) AS BIGINT), 1) END
+      |       ELSE ${Sketches.kmvEstimateSql(64, Sketches.kmvHashSql("e.hk"))} END
       |    AS kmv_est,
       |  x.exact_distinct
       |FROM est e JOIN ex x ON e.month = x.month ORDER BY e.month""".stripMargin) {
@@ -397,8 +395,7 @@ object Analytics {
       est.join(ex, "month")
         .select(col("month"), col("sketch_k"),
           when(col("sketch_k") < 64, col("sketch_k"))
-            .otherwise(expr("17732923532771328 div " +
-              "greatest(cast(conv(substr(hk, 1, 12), 16, 10) as bigint), 1)"))
+            .otherwise(Sketches.kmvEstimate(64, Sketches.kmvHash(col("hk"))))
             .as("kmv_est"),
           col("exact_distinct"))
         .orderBy("month")
@@ -413,14 +410,14 @@ object Analytics {
     * algebra, so segment overlap / audience-intersection questions
     * run on k-row summaries, not 100 TB rescans.
     *
-    * Estimator stays in exact integers: union est is the established
-    * (k-1)*2^48 // prefix48(h_k); intersection est is
-    * matched_of_k * union_est // k (Jaccard numerator exposed as
-    * matched_of_k). Exact counts ride along in-plan (no driver
-    * actions) via broadcast one-row aggregates for the error story. */
+    * Estimator stays in exact integers: union est is [[Sketches]]' KMV;
+    * intersection est is matched_of_k * union_est // k (Jaccard
+    * numerator exposed as matched_of_k). Exact counts ride along
+    * in-plan (no driver actions) via broadcast one-row aggregates for
+    * the error story. */
   val kmvSetOps: Q = Q(
     "q_sketch_kmv_ops",
-    """WITH a AS (SELECT DISTINCT md5(CAST(l_partkey AS VARCHAR)) AS h
+    s"""WITH a AS (SELECT DISTINCT md5(CAST(l_partkey AS VARCHAR)) AS h
       |           FROM lineitem WHERE year(CAST(l_shipdate AS DATE)) = 1996),
       |b AS (SELECT DISTINCT md5(CAST(l_partkey AS VARCHAR)) AS h
       |      FROM lineitem WHERE year(CAST(l_shipdate AS DATE)) = 1997),
@@ -438,8 +435,7 @@ object Analytics {
       |  FROM kk),
       |est AS (SELECT k_eff, n_both,
       |    CASE WHEN k_eff < 64 THEN k_eff
-      |         ELSE 17732923532771328 //
-      |           GREATEST(CAST(concat('0x', substr(hk, 1, 12)) AS BIGINT), 1)
+      |         ELSE ${Sketches.kmvEstimateSql(64, Sketches.kmvHashSql("hk"))}
       |    END AS union_est
       |  FROM stats),
       |ex AS (SELECT
@@ -481,8 +477,7 @@ object Analytics {
     stats
       .withColumn("union_est",
         when(col("k_eff") < 64, col("k_eff"))
-          .otherwise(expr("17732923532771328 div " +
-            "greatest(cast(conv(substr(hk, 1, 12), 16, 10) as bigint), 1)")))
+          .otherwise(Sketches.kmvEstimate(64, Sketches.kmvHash(col("hk")))))
       .crossJoin(broadcast(exact))
       .select(col("k_eff"), col("union_est"),
         col("n_both").as("matched_of_k"),
@@ -766,14 +761,11 @@ object Analytics {
     * exact integer arithmetic — the sketch family q_agg_approx_distinct
     * had to leave outside the hash gate (Spark's HLL++ register binary
     * is engine-internal) rebuilt from public parts so the whole
-    * estimator hash-matches: register = first md5 byte (m=256), rank =
-    * 49 − bitlength of the next 48 hash bits (`length(bin(w))`, minimal
-    * form in both engines), and the harmonic sum Σ2^(−M_j) is carried
-    * as the exact integer Σ2^(49−M_j) over a common 2^49 denominator —
-    * power-of-two shifts, never floats. The estimate is then one exact
-    * division of the precomputed integer constant α₂₅₆·m²·2⁴⁹·10⁶⁻¹.
-    * Registers build per MONTH and MERGE by max to per-year estimates —
-    * the mergeability that makes HLL the production cardinality sketch
+    * estimator hash-matches: register, rank and estimate are
+    * [[Sketches]]' HLL (the harmonic sum carried as the exact integer
+    * Σ2^(49−M_j) — power-of-two shifts, never floats). Registers build
+    * per MONTH and MERGE by max to per-year estimates — the
+    * mergeability that makes HLL the production cardinality sketch
     * (re-aggregation without rescans); zero-register counts ride along
     * (the linear-counting regime flag), and the exact distinct count
     * joins in as the error witness.
@@ -784,14 +776,11 @@ object Analytics {
     * 256-row frame, broadcast. */
   val hllFx: Q = Q(
     "q_sketch_hll_fx",
-    """WITH dh AS (SELECT DISTINCT CAST(date_part('year', l_shipdate) AS BIGINT) AS yr,
+    s"""WITH dh AS (SELECT DISTINCT CAST(date_part('year', l_shipdate) AS BIGINT) AS yr,
       |    CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE) AS mon,
       |    md5(CAST(l_orderkey AS VARCHAR)) AS h FROM lineitem),
-      |rr AS (SELECT yr, mon,
-      |    CAST(concat('0x', substr(h, 1, 2)) AS BIGINT) AS reg,
-      |    CASE WHEN CAST(concat('0x', substr(h, 3, 12)) AS BIGINT) = 0 THEN 49
-      |         ELSE 49 - length(bin(CAST(concat('0x', substr(h, 3, 12)) AS BIGINT)))
-      |    END AS r
+      |rr AS (SELECT yr, mon, ${Sketches.hllRegisterSql("h")} AS reg,
+      |    ${Sketches.hllRankSql("h")} AS r
       |  FROM dh),
       |mreg AS (SELECT yr, mon, reg, MAX(r) AS mr FROM rr GROUP BY 1, 2, 3),
       |yreg AS (SELECT yr, reg, MAX(mr) AS mr FROM mreg GROUP BY 1, 2),
@@ -806,9 +795,7 @@ object Analytics {
       |  FROM full0 GROUP BY yr),
       |ex AS (SELECT CAST(date_part('year', l_shipdate) AS BIGINT) AS yr,
       |       COUNT(DISTINCT l_orderkey) AS exact_distinct FROM lineitem GROUP BY 1)
-      |SELECT h.yr, h.n_zero,
-      |  CAST(26499596412111161535758336 // (CAST(h.ss AS HUGEINT) * 1000000)
-      |       AS BIGINT) AS hll_est,
+      |SELECT h.yr, h.n_zero, ${Sketches.hllEstimateSql("h.ss")} AS hll_est,
       |  e.exact_distinct
       |FROM hsum h JOIN ex e ON e.yr = h.yr ORDER BY h.yr""".stripMargin) { (s, d) =>
     val li = Tables.load(s, d, "lineitem")
@@ -817,10 +804,7 @@ object Analytics {
       md5(col("l_orderkey").cast("string").cast("binary")).as("h"))
       .distinct()
     val rr = dh.select(col("yr"), col("mon"),
-      expr("CAST(conv(substr(h, 1, 2), 16, 10) AS BIGINT)").as("reg"),
-      expr("""CASE WHEN CAST(conv(substr(h, 3, 12), 16, 10) AS BIGINT) = 0 THEN 49L
-             |ELSE 49L - length(bin(CAST(conv(substr(h, 3, 12), 16, 10) AS BIGINT)))
-             |END""".stripMargin).as("r"))
+      Sketches.hllRegister(col("h")).as("reg"), Sketches.hllRank(col("h")).as("r"))
     val mreg = rr.groupBy("yr", "mon", "reg").agg(max(col("r")).as("mr"))
     val yreg = mreg.groupBy("yr", "reg").agg(max(col("mr")).as("mr"))
     val spine = dh.select(col("yr")).distinct()
@@ -835,10 +819,7 @@ object Analytics {
     val ex = li.groupBy(year(col("l_shipdate")).cast("long").as("yr"))
       .agg(countDistinct(col("l_orderkey")).as("exact_distinct"))
     hsum.join(ex, "yr")
-      .select(col("yr"), col("n_zero"),
-        expr("""CAST(CAST('26499596412111161535758336' AS DECIMAL(38,0))
-               |     div (CAST(ss AS DECIMAL(38,0)) * 1000000)
-               |     AS BIGINT)""".stripMargin).as("hll_est"),
+      .select(col("yr"), col("n_zero"), Sketches.hllEstimate(col("ss")).as("hll_est"),
         col("exact_distinct"))
       .orderBy("yr")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 import graft.dedup.MinHash
 import graft.text.Text
 
@@ -458,8 +459,8 @@ object DedupSim {
     "q_ann_lsh",
     s"""WITH $compSql,
        |pl AS (SELECT p, i,
-       |    CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 2))
-       |         AS INT) - 128 AS c
+       |    ${Hex.prefixSql("md5(CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR))", 1, 2)}
+       |      - 128 AS c
        |  FROM (SELECT unnest(range(0, 6)) AS p) pp, pos),
        |sgn AS (SELECT vec_id, p, SUM(CAST(FLOOR(v * c * 1e15) AS BIGINT)) AS sd
        |  FROM comp JOIN pl USING (i) GROUP BY 1, 2),

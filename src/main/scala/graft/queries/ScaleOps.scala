@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact._
+import graft.functions.Hex
 import graft.ops.{Bucketing, SharedFrames, Skew}
 import graft.text.Text
 
@@ -503,15 +504,13 @@ object ScaleOps {
     */
   val samplePriority: Q = Q(
     "q_sample_priority",
-    """SELECT o_orderkey, o_totalprice AS w,
+    s"""SELECT o_orderkey, o_totalprice AS w,
       |  o_totalprice /
-      |    ((CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
-      |           AS BIGINT) + 1) / 4294967296.0) AS priority
+      |    ((${Hex.prefixSql("md5(CAST(o_orderkey AS VARCHAR))", 1, 8)} + 1)
+      |      / 4294967296.0) AS priority
       |FROM orders
       |ORDER BY priority DESC, o_orderkey LIMIT 100""".stripMargin) { (s, d) =>
-    val u32 = conv(
-      substring(md5(col("o_orderkey").cast("string").cast("binary")), 1, 8),
-      16, 10).cast("long")
+    val u32 = Hex.prefix(md5(col("o_orderkey").cast("string").cast("binary")), 1, 8)
     Tables.load(s, d, "orders")
       .select(col("o_orderkey"), col("o_totalprice").as("w"),
         (col("o_totalprice") / ((u32 + 1) / lit(4294967296.0))).as("priority"))
@@ -609,7 +608,7 @@ object ScaleOps {
     * product holds to ~2^63.) */
   val sampleTemperature: Q = Q(
     "q_sample_temperature",
-    """WITH n AS (SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
+    s"""WITH n AS (SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
       |w AS (SELECT source, n_s,
       |        CAST(FLOOR(SQRT(CAST(n_s AS DOUBLE))) AS BIGINT) AS w_s FROM n),
       |tot AS (SELECT CAST(SUM(w_s) AS BIGINT) AS wt FROM w),
@@ -618,8 +617,8 @@ object ScaleOps {
       |      FROM w, tot)
       |SELECT d.doc_id, d.source, r.n_s AS n_source, r.w_s AS w_source
       |FROM documents d JOIN r ON d.source = r.source
-      |WHERE CAST(CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
-      |             AS BIGINT) AS DOUBLE) / 4294967296.0 < r.rate
+      |WHERE CAST(${Hex.prefixSql("md5(CAST(d.doc_id AS VARCHAR))", 1, 8)}
+      |             AS DOUBLE) / 4294967296.0 < r.rate
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.load(s, d, "documents")
     val n = docs.groupBy("source").agg(count(lit(1)).as("n_s"))
@@ -629,9 +628,7 @@ object ScaleOps {
     val r = w.crossJoin(broadcast(tot))
       .withColumn("rate", (col("w_s") * 100).cast("double") /
         (col("wt") * col("n_s")).cast("double"))
-    val u32 = conv(
-      substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8),
-      16, 10).cast("long")
+    val u32 = Hex.prefix(md5(col("doc_id").cast("string").cast("binary")), 1, 8)
     docs.join(broadcast(r), "source")
       .filter(u32.cast("double") / lit(4294967296.0) < col("rate"))
       .select(col("doc_id"), col("source"),
@@ -650,10 +647,10 @@ object ScaleOps {
     * form of "globally shuffle 100TB". */
   val shardShuffle: Q = Q(
     "q_shard_shuffle",
-    """WITH h AS (SELECT doc_id, n_chars,
+    s"""WITH h AS (SELECT doc_id, n_chars,
       |    md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
       |s AS (SELECT doc_id, n_chars, hx,
-      |    CAST(('0x' || substr(hx, 1, 8)) AS BIGINT) % 8 AS shard FROM h)
+      |    ${Hex.prefixSql("hx", 1, 8)} % 8 AS shard FROM h)
       |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
       |  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY hx, doc_id)
       |       AS BIGINT) AS pos_in_shard,
@@ -666,7 +663,7 @@ object ScaleOps {
     val base = Tables.load(s, d, "documents")
       .select(col("doc_id"), col("n_chars"), hx.as("hx"))
       .withColumn("shard",
-        (conv(substring(col("hx"), 1, 8), 16, 10).cast("long") % 8))
+        Hex.prefix(col("hx"), 1, 8) % 8)
     val w = Window.partitionBy("shard").orderBy("hx", "doc_id")
     base.select(col("doc_id"), col("shard"),
         row_number().over(w).cast("long").as("pos_in_shard"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 import graft.plans.FxLog2
 import graft.text.Text
 
@@ -160,7 +161,7 @@ object TextQueries {
     * document fingerprinting of the north star): per-doc count plus the
     * first/last selected hash (unsigned order).
     *
-    * FULL ORACLE (r5): the engine's Rabin-Karp chain wraps in signed
+    * FULL ORACLE: the engine's Rabin-Karp chain wraps in signed
     * Long, i.e. lives mod 2^64 — so DuckDB replays each k-gram hash as
     * a HUGEINT residue sum (c_j * B^(k-1-j), true-precision powers,
     * one % 2^64), packs (hash, 2^32-1-pos) so an unsigned window MIN
@@ -384,20 +385,7 @@ object TextQueries {
       |args AS (SELECT DISTINCT n FROM (
       |         SELECT 2 * df + 1 AS n FROM dfr
       |         UNION ALL SELECT 2 * n_docs + 2 FROM stats)),
-      |base AS (SELECT n, length(bin(n)) - 1 AS e FROM args),
-      |fxl(n, i, x, r) AS (
-      |  SELECT n, 0,
-      |    CASE WHEN e <= 30 THEN n << (30 - e) ELSE n >> (e - 30) END,
-      |    CAST(e AS BIGINT) << 30
-      |  FROM base
-      |  UNION ALL
-      |  SELECT n, i + 1,
-      |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-      |         THEN ((x * x) >> 30) >> 1 ELSE (x * x) >> 30 END,
-      |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-      |         THEN r | (1::BIGINT << (29 - i)) ELSE r END
-      |  FROM fxl WHERE i < 30),
-      |lg AS (SELECT n, r FROM fxl WHERE i = 30),
+      |${FxLog2.oracleCte("args")},
       |idf AS (SELECT d.term, ln.r - ld.r AS idf2
       |        FROM dfr d CROSS JOIN stats s
       |        JOIN lg ln ON ln.n = 2 * s.n_docs + 2
@@ -440,8 +428,7 @@ object TextQueries {
     s"""WITH RECURSIVE
       |tk AS (SELECT doc_id, lang, ${Text.tokensSql("text")} AS toks FROM documents),
       |bb AS (SELECT doc_id, lang,
-      |         CAST(('0x' || substr(md5(toks[i] || ' ' || toks[i+1]), 1, 8))
-      |              AS BIGINT) % 1024 AS b
+      |         ${Hex.prefixSql("md5(toks[i] || ' ' || toks[i+1])", 1, 8)} % 1024 AS b
       |       FROM tk, (SELECT unnest(range(1,
       |         (SELECT COALESCE(MAX(len(toks)), 0) + 1 FROM tk))) AS i) p
       |       WHERE i <= len(toks) - 1),
@@ -456,20 +443,7 @@ object TextQueries {
       |       FROM cr CROSS JOIN tot),
       |args AS (SELECT DISTINCT n FROM (
       |         SELECT num AS n FROM wt UNION ALL SELECT den FROM wt)),
-      |base AS (SELECT n, length(bin(n)) - 1 AS e FROM args),
-      |fxl(n, i, x, r) AS (
-      |  SELECT n, 0,
-      |    CASE WHEN e <= 30 THEN n << (30 - e) ELSE n >> (e - 30) END,
-      |    CAST(e AS BIGINT) << 30
-      |  FROM base
-      |  UNION ALL
-      |  SELECT n, i + 1,
-      |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-      |         THEN ((x * x) >> 30) >> 1 ELSE (x * x) >> 30 END,
-      |    CASE WHEN ((x * x) >> 30) >= (1::BIGINT << 31)
-      |         THEN r | (1::BIGINT << (29 - i)) ELSE r END
-      |  FROM fxl WHERE i < 30),
-      |lg AS (SELECT n, r FROM fxl WHERE i = 30),
+      |${FxLog2.oracleCte("args")},
       |wfx AS (SELECT wt.b, ln.r - ld.r AS w_fx
       |        FROM wt JOIN lg ln ON ln.n = wt.num
       |                 JOIN lg ld ON ld.n = wt.den),
@@ -487,8 +461,7 @@ object TextQueries {
       .select(col("doc_id"), col("lang"),
         explode(Text.shingleListUdf(2)(col("text"))).as("bg"))
       .select(col("doc_id"), col("lang"),
-        (conv(substring(md5(col("bg").cast("binary")), 1, 8), 16, 10)
-          .cast("long") % 1024).as("b"))
+        (Hex.prefix(md5(col("bg").cast("binary")), 1, 8) % 1024).as("b"))
     val cr = bb.groupBy("b").agg(
       count(lit(1)).as("n_r"),
       count(when(col("lang") === "en", 1)).as("n_t"))
@@ -807,7 +780,7 @@ object TextQueries {
          |    CASE WHEN md5(CAST(doc_id AS VARCHAR)) < 'cc' THEN 1 ELSE 0 END AS is_train,
          |    text FROM documents),
          |db AS (SELECT DISTINCT doc_id, label, is_train,
-         |    CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % $B AS b
+         |    ${Hex.prefixSql("md5(tok)", 1, 8)} % $B AS b
          |  FROM lab, UNNEST(list_distinct(${Text.tokensSql("text")})) AS u(tok)),
          |n AS (SELECT SUM(label) AS n_pos, SUM(1 - label) AS n_neg
          |  FROM lab WHERE is_train = 1),
@@ -839,8 +812,7 @@ object TextQueries {
         .select(col("doc_id"), col("label"), col("is_train"),
           explode(Text.shingleSetUdf(1)(col("text"))).as("tok"))
         .select(col("doc_id"), col("label"), col("is_train"),
-          (conv(substring(md5(col("tok").cast("binary")), 1, 8), 16, 10)
-            .cast(LongType) % B).as("b"))
+          (Hex.prefix(md5(col("tok").cast("binary")), 1, 8) % B).as("b"))
         .distinct()
       val n = lab.filter(col("is_train") === 1)
         .agg(sum(col("label")).as("n_pos"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.{Q, Session, Tables}
 import graft.functions.Exact.ms
+import graft.functions.Hex
 import graft.ops.SharedFrames
 import graft.plans.FxLog2
 import graft.text.Text
@@ -382,17 +383,17 @@ object Wave10 {
     */
   val spatialJoin: Q = Q(
     "q_spatial_join",
-    """WITH c AS (SELECT c_custkey,
-      |    CAST(('0x' || substr(md5('cx:' || CAST(c_custkey AS VARCHAR)), 1, 8))
-      |      AS BIGINT) % 10000 AS cx,
-      |    CAST(('0x' || substr(md5('cy:' || CAST(c_custkey AS VARCHAR)), 1, 8))
-      |      AS BIGINT) % 10000 AS cy
+    s"""WITH c AS (SELECT c_custkey,
+      |    ${Hex.prefixSql("md5('cx:' || CAST(c_custkey AS VARCHAR))", 1, 8)}
+      |      % 10000 AS cx,
+      |    ${Hex.prefixSql("md5('cy:' || CAST(c_custkey AS VARCHAR))", 1, 8)}
+      |      % 10000 AS cy
       |  FROM customer),
       |s AS (SELECT s_suppkey,
-      |    CAST(('0x' || substr(md5('sx:' || CAST(s_suppkey AS VARCHAR)), 1, 8))
-      |      AS BIGINT) % 10000 AS sx,
-      |    CAST(('0x' || substr(md5('sy:' || CAST(s_suppkey AS VARCHAR)), 1, 8))
-      |      AS BIGINT) % 10000 AS sy
+      |    ${Hex.prefixSql("md5('sx:' || CAST(s_suppkey AS VARCHAR))", 1, 8)}
+      |      % 10000 AS sx,
+      |    ${Hex.prefixSql("md5('sy:' || CAST(s_suppkey AS VARCHAR))", 1, 8)}
+      |      % 10000 AS sy
       |  FROM supplier)
       |SELECT c.c_custkey, s.s_suppkey, c.cx, c.cy, s.sx, s.sy,
       |  (c.cx - s.sx) * (c.cx - s.sx) + (c.cy - s.sy) * (c.cy - s.sy) AS dist2
@@ -401,8 +402,7 @@ object Wave10 {
       |      <= 360000
       |ORDER BY c_custkey, s_suppkey""".stripMargin) { (s, d) =>
     def coord(prefix: String, key: org.apache.spark.sql.Column) =
-      conv(substring(md5(concat(lit(prefix), key.cast("string"))), 1, 8),
-        16, 10).cast("long") % 10000L
+      Hex.prefix(md5(concat(lit(prefix), key.cast("string"))), 1, 8) % 10000L
     val cust = Tables.load(s, d, "customer").select(col("c_custkey"),
       coord("cx:", col("c_custkey")).as("cx"),
       coord("cy:", col("c_custkey")).as("cy"))

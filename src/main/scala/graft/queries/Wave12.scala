@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 import graft.plans.FxLog2
 import graft.text.Text
 
@@ -38,9 +39,9 @@ object Wave12 {
     */
   val causalDid: Q = Q(
     "q_causal_did",
-    """WITH o AS (SELECT
-      |    CAST(('0x' || substr(md5('did:' || CAST(o_custkey AS VARCHAR)), 1, 8))
-      |      AS BIGINT) % 2 AS treat,
+    s"""WITH o AS (SELECT
+      |    ${Hex.prefixSql("md5('did:' || CAST(o_custkey AS VARCHAR))", 1, 8)}
+      |      % 2 AS treat,
       |    CASE WHEN epoch_ms(o_orderdate) // 86400000 >= 10227
       |         THEN 1 ELSE 0 END AS post,
       |    CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -70,8 +71,8 @@ object Wave12 {
       |  did.did_e6
       |FROM c, did ORDER BY treat, post""".stripMargin) { (s, d) =>
     val o = Tables.load(s, d, "orders").select(
-      (conv(substring(md5(concat(lit("did:"), col("o_custkey").cast("string"))),
-        1, 8), 16, 10).cast("long") % 2).as("treat"),
+      (Hex.prefix(md5(concat(lit("did:"), col("o_custkey").cast("string"))),
+        1, 8) % 2).as("treat"),
       when(graft.functions.Exact.bucket(
         graft.functions.Exact.ms(col("o_orderdate")), 86400000L) >= 10227, 1L)
         .otherwise(0L).as("post"),

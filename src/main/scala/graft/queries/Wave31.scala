@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 import graft.text.Text
 
 /** Wave 31 — curation signals and featurization: integer Flesch-style
@@ -98,8 +99,7 @@ object Wave31 {
        |tf AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf
        |  FROM tok GROUP BY 1),
        |hb AS (SELECT term, tf,
-       |    CAST(('0x' || substr(md5(term), 1, 8)) AS BIGINT) % $HashBuckets
-       |      AS bucket
+       |    ${Hex.prefixSql("md5(term)", 1, 8)} % $HashBuckets AS bucket
        |  FROM tf),
        |bk AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_terms,
        |    CAST(SUM(tf) AS BIGINT) AS total_tf,
@@ -117,8 +117,7 @@ object Wave31 {
         .as("term"))
       .groupBy("term").agg(count(lit(1)).as("tf"))
     val hb = tf.withColumn("bucket",
-      (conv(substring(md5(col("term").cast("binary")), 1, 8), 16, 10)
-        .cast("long") % HashBuckets))
+      Hex.prefix(md5(col("term").cast("binary")), 1, 8) % HashBuckets)
     val bk = hb.groupBy("bucket")
       .agg(count(lit(1)).as("n_terms"), sum("tf").as("total_tf"),
         min("term").as("first_term"))

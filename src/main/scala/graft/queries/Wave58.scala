@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 
 /** Wave 58 — two classics the registry lacked: the top principal
   * component of the embedding corpus by integer power iteration (the
@@ -14,7 +15,7 @@ import graft.{Q, Session, Tables}
   * established floor(x*1e6) embedding fixed-point cast; everything
   * downstream is BIGINT/HUGEINT products and truncating divisions that
   * both engines unroll identically (Scala BigInt `/` and DuckDB `//`
-  * both truncate toward zero, negatives included — verified r8c).
+  * both truncate toward zero, negatives included).
   */
 object Wave58 {
 
@@ -174,8 +175,8 @@ object Wave58 {
     "q_sample_priority_tau",
     s"""WITH w AS (SELECT o_orderkey AS okey,
        |    CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
-       |    CAST(('0x' || substr(md5('ps:' || CAST(o_orderkey AS VARCHAR)),
-       |      1, 8)) AS BIGINT) + 1 AS u
+       |    ${Hex.prefixSql("md5('ps:' || CAST(o_orderkey AS VARCHAR))", 1, 8)}
+       |      + 1 AS u
        |  FROM orders),
        |p AS (SELECT okey, cents, u, cents * 4294967296 // u AS q FROM w),
        |r AS (SELECT okey, cents, u, q,
@@ -192,9 +193,8 @@ object Wave58 {
     val w = Tables.load(s, d, "orders").select(
       col("o_orderkey").as("okey"),
       expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").as("cents"),
-      (conv(substring(md5(concat(lit("ps:"),
-        col("o_orderkey").cast("string"))), 1, 8), 16, 10).cast("long")
-        + lit(1L)).as("u"))
+      (Hex.prefix(md5(concat(lit("ps:"), col("o_orderkey").cast("string"))),
+        1, 8) + lit(1L)).as("u"))
     val p = w.withColumn("q", expr("cents * 4294967296 div u"))
     // top-(K+1) via TakeOrdered under the (q desc, okey) total order;
     // tau = min priority of that frame = the (K+1)-th priority

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.{Hex, Sketches}
 
 /** Wave 60 — set-OPERATION sketching (the KMV/theta bottom-k
   * intersection estimate between two cohorts — the audience-overlap
@@ -23,10 +24,11 @@ object Wave60 {
     * DataSketches theta-sketch set-op shape): cohorts A = 1995
     * customers, B = 1996 customers, each summarized by the bottom-K
     * of its DISTINCT md5-u48 hash values (dedup before the bottom-K
-    * keeps the estimator collision-robust — r11 ADVICE); the combined
-    * bottom-K L prices the union as
-    * U = (K−1)·2^48 div max(L), and the intersection estimate is
-    * |L ∩ S_A ∩ S_B| · U div K (the Jaccard-times-union identity).
+    * keeps the estimator collision-robust); the combined bottom-K L
+    * prices the union as U = (K−1)·2^48 div max(L) (the
+    * [[graft.functions.Sketches]] KMV estimator), and the intersection
+    * estimate is |L ∩ S_A ∩ S_B| · U div K (the Jaccard-times-union
+    * identity).
     * The EXACT distinct union/intersection ride along as witnesses,
     * so estimator quality is in the hash, not a comment.
     *
@@ -41,8 +43,7 @@ object Wave60 {
        |    o_custkey AS ck FROM orders
        |  WHERE EXTRACT(YEAR FROM o_orderdate) IN (1995, 1996)),
        |h AS (SELECT yr, ck,
-       |    CAST(('0x' || substr(md5('th:' || CAST(ck AS VARCHAR)), 1, 12))
-       |      AS BIGINT) AS hv
+       |    ${Sketches.kmvHashSql("md5('th:' || CAST(ck AS VARCHAR))")} AS hv
        |  FROM m),
        |hd AS (SELECT DISTINCT yr, hv FROM h),
        |r AS (SELECT yr, hv,
@@ -57,8 +58,8 @@ object Wave60 {
        |cmn AS (SELECT COUNT(*) AS n_common FROM l
        |  JOIN sa ON sa.hv = l.hv JOIN sb ON sb.hv = l.hv),
        |est AS (SELECT kl.klmax, kl.nl, cmn.n_common,
-       |    ($SketchK - 1) * 281474976710656 // kl.klmax AS union_est,
-       |    cmn.n_common * (($SketchK - 1) * 281474976710656 // kl.klmax)
+       |    ${Sketches.kmvEstimateSql(SketchK, "kl.klmax")} AS union_est,
+       |    cmn.n_common * ${Sketches.kmvEstimateSql(SketchK, "kl.klmax")}
        |      // $SketchK AS inter_est,
        |    cmn.n_common * 1000000 // $SketchK AS jaccard_ppm
        |  FROM kl, cmn),
@@ -79,13 +80,12 @@ object Wave60 {
       .select(year(col("o_orderdate")).as("yr"), col("o_custkey").as("ck"))
       .filter(col("yr").isin(1995, 1996)).distinct()
     val h = m.withColumn("hv",
-      conv(substring(md5(concat(lit("th:"), col("ck").cast("string"))),
-        1, 12), 16, 10).cast("long"))
+      Sketches.kmvHash(md5(concat(lit("th:"), col("ck").cast("string")))))
     // KMV sketches hold DISTINCT hash values: dedup hv within each
     // cohort BEFORE the bottom-K, so a 48-bit collision between two
-    // custkeys cannot double-count in the l⋈sa⋈sb intersection (r11
-    // ADVICE — both engines agreed, but the estimator and Wave60Spec's
-    // set-based recompute would have diverged at the first collision).
+    // custkeys cannot double-count in the l⋈sa⋈sb intersection (both
+    // engines would still agree, but the estimator and Wave60Spec's
+    // set-based recompute would diverge at the first collision).
     val hd = h.select(col("yr"), col("hv")).distinct()
     val r = graft.ops.TopK.perGroup(hd,
       partitionBy = Seq(col("yr")),
@@ -97,8 +97,7 @@ object Wave60 {
     val cmn = l.join(sa, "hv").join(sb, "hv")
       .agg(count(lit(1)).as("n_common"))
     val est = kl.crossJoin(broadcast(cmn))
-      .withColumn("union_est",
-        expr(s"(${SketchK - 1} * 281474976710656L) div klmax"))
+      .withColumn("union_est", Sketches.kmvEstimate(SketchK, col("klmax")))
       .withColumn("inter_est", expr(s"n_common * union_est div $SketchK"))
       .withColumn("jaccard_ppm", expr(s"n_common * 1000000 div $SketchK"))
     val ex = m.groupBy("ck").agg(countDistinct(col("yr")).as("ny"))
@@ -152,7 +151,7 @@ object Wave60 {
       s"""WITH c AS (SELECT o_orderpriority AS pri,
          |    CAST(COUNT(*) AS BIGINT) AS true_count FROM orders GROUP BY 1),
          |u AS (SELECT pri, true_count,
-         |    CAST(('0x' || substr(md5('dp:' || pri), 1, 8)) AS BIGINT) AS u
+         |    ${Hex.prefixSql("md5('dp:' || pri)", 1, 8)} AS u
          |  FROM c),
          |n AS (SELECT pri, true_count, CAST($sqlCase AS BIGINT) AS noise
          |  FROM u)
@@ -163,9 +162,7 @@ object Wave60 {
       val c = Tables.load(s, d, "orders")
         .groupBy(col("o_orderpriority").as("pri"))
         .agg(count(lit(1)).as("true_count"))
-      val u = c.withColumn("u",
-        conv(substring(md5(concat(lit("dp:"), col("pri"))), 1, 8), 16, 10)
-          .cast("long"))
+      val u = c.withColumn("u", Hex.prefix(md5(concat(lit("dp:"), col("pri"))), 1, 8))
       val noise = GeoThresholds.dropRight(1).foldRight(
         lit(GeoThresholds.last._2.toLong)) { case ((t, k), rest) =>
         when(col("u") < t, k.toLong).otherwise(rest)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Session, Tables}
+import graft.functions.Hex
 import graft.text.Text
 
 /** Wave 79 — LLM-text provenance: green-list watermark detection
@@ -37,8 +38,7 @@ object Wave79 {
       |  FROM documents),
       |dg AS (SELECT doc_id, lang,
       |    CAST(COUNT(*) AS BIGINT) AS n,
-      |    CAST(SUM(CASE WHEN CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT)
-      |                       % 4 = 0
+      |    CAST(SUM(CASE WHEN ${Hex.prefixSql("md5(w)", 1, 8)} % 4 = 0
       |             THEN 1 ELSE 0 END) AS BIGINT) AS g
       |  FROM tok GROUP BY 1, 2),
       |fl AS (SELECT lang, n, g,
@@ -61,8 +61,8 @@ object Wave79 {
           .as("w"))
     val dg = tok
       .select(col("doc_id"), col("lang"),
-        when(conv(substring(md5(col("w").cast("binary")), 1, 8), 16, 10)
-          .cast("long") % 4 === 0, 1L).otherwise(0L).as("is_green"))
+        when(Hex.prefix(md5(col("w").cast("binary")), 1, 8) % 4 === 0, 1L)
+          .otherwise(0L).as("is_green"))
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n"), sum(col("is_green")).as("g"))
     dg.select(col("lang"), col("n"), col("g"),

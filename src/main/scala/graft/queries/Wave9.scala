@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Session, Tables}
 import graft.ops.Iterate
 import graft.functions.Exact._
+import graft.functions.Hex
 import graft.text.Text
 
 /** Wave 9 — exact-integer time-series smoothing, sequential change
@@ -942,8 +943,7 @@ object Wave9 {
       "q_bootstrap_ci",
       s"""WITH o AS (SELECT o_orderkey,
          |        CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
-         |        CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12))
-         |             AS BIGINT) AS h48
+         |        ${Hex.prefixSql("md5(CAST(o_orderkey AS VARCHAR))", 1, 12)} AS h48
          |      FROM orders),
          |rep AS (SELECT unnest(range(0, 200)) AS b),
          |u AS (SELECT r.b, o.cents,
@@ -977,8 +977,8 @@ object Wave9 {
           // uniform stays uniform, and the 200x fan-out is pure long
           // arithmetic inside codegen instead of 30M md5 string
           // evaluations (26s of GC churn -> ~2s at sf0.1)
-          conv(substring(md5(col("o_orderkey").cast("string")
-            .cast("binary")), 1, 12), 16, 10).cast("long").as("h48"))
+          Hex.prefix(md5(col("o_orderkey").cast("string").cast("binary")), 1, 12)
+            .as("h48"))
       val wt = PoissonThresholds.zipWithIndex.reverse
         .foldLeft(lit(PoissonThresholds.length.toLong)) {
           case (acc, (t, i)) => when(col("u32") < t, i.toLong).otherwise(acc)
@@ -986,7 +986,7 @@ object Wave9 {
       // 200x fan-out via explode of a CONSTANT sequence, not
       // crossJoin(broadcast(rep)): the BNLJ materialized ~30M joined
       // UnsafeRows fast enough to fill the heap and hand the suite a
-      // 13s full-GC pause (r9 verdict #2). Generate(explode) is
+      // 13s full-GC pause. Generate(explode) is
       // whole-stage-codegen'd, so fan-out -> u32 -> wt -> partial agg
       // run in ONE pipeline per input row with no intermediate row
       // materialization; only (cents, h48) ride into the fan-out.
@@ -1191,8 +1191,8 @@ object Wave9 {
       |              * (0.001 / (CAST(c AS DOUBLE) / total)) AS p_keep
       |          FROM cnt, tot),
       |kept AS (SELECT t.doc_id, t.i, t.w FROM tok t JOIN keepp k ON k.w = t.w
-      |         WHERE (CAST(('0x' || substr(md5(CAST(t.doc_id AS VARCHAR) || ':'
-      |                 || CAST(t.i AS VARCHAR)), 1, 8)) AS BIGINT) + 1)
+      |         WHERE (${Hex.prefixSql(
+        "md5(CAST(t.doc_id AS VARCHAR) || ':' || CAST(t.i AS VARCHAR))", 1, 8)} + 1)
       |               / 4294967296.0 < k.p_keep),
       |ctx AS (SELECT k.doc_id, k.i, k.w AS center, o.o AS off, t2.w AS context
       |        FROM kept k, (SELECT unnest([-2, -1, 1, 2]) AS o) o
@@ -1206,9 +1206,9 @@ object Wave9 {
       |         FROM negw),
       |negtot AS (SELECT CAST(SUM(wt) AS BIGINT) AS bigw FROM negw),
       |negs AS (SELECT c.doc_id, c.i, c.off, c.center, c.context, j.j,
-      |           CAST(('0x' || substr(md5(CAST(c.doc_id AS VARCHAR) || ':'
-      |             || CAST(c.i AS VARCHAR) || ':' || CAST(c.off AS VARCHAR)
-      |             || ':' || CAST(j.j AS VARCHAR)), 1, 8)) AS BIGINT)
+      |           ${Hex.prefixSql("md5(CAST(c.doc_id AS VARCHAR) || ':' || " +
+        "CAST(c.i AS VARCHAR) || ':' || CAST(c.off AS VARCHAR) || ':' || " +
+        "CAST(j.j AS VARCHAR))", 1, 8)}
       |             % nt.bigw AS u
       |         FROM ctx c, (SELECT unnest(range(0, 3)) AS j) j, negtot nt)
       |SELECT n.doc_id, n.i AS pos, n.off, n.center, n.context,
@@ -1229,8 +1229,7 @@ object Wave9 {
           * (lit(0.001) / (col("c").cast("double") / col("total"))))
       .select("w", "p_keep")
     def u32(parts: org.apache.spark.sql.Column*) =
-      conv(substring(md5(concat_ws(":", parts: _*).cast("binary")), 1, 8),
-        16, 10).cast("long")
+      Hex.prefix(md5(concat_ws(":", parts: _*).cast("binary")), 1, 8)
     // subsample gate is vocabulary-grain (corpus-scaling): the equi-
     // join on w is stats/AQE-decided (the RANGE join against negc
     // below stays hinted — broadcast is the only physical strategy

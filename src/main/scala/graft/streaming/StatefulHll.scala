@@ -3,57 +3,27 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
+import graft.functions.Sketches
 
 /** Streaming HyperLogLog via mapGroupsWithState — the incremental form
   * of the batch `q_sketch_hll_fx`, with the IDENTICAL portable
-  * construction (register = first md5 byte, rank = 49 − bit-length of
-  * the next 48 hash bits, harmonic sum as the exact integer
-  * Σ2^(49−M_j)): per key the state is the 256 register maxima — a
-  * fixed 256 ints forever, the textbook bounded-state sketch — and
-  * every micro-batch folds its hashes in by register-wise max. Because
-  * register-wise max is associative and commutative, the sketch after
-  * any prefix of micro-batches equals the batch sketch over the same
-  * rows (StreamingSpec pins incremental ≡ batch on a two-batch
-  * stream), and two keys' states merge by the same max — the property
-  * that lets per-shard streaming sketches roll up to global
-  * cardinalities without rescans.
+  * construction ([[graft.functions.Sketches]]' HLL): per key the
+  * state is the 256 register maxima — a fixed 256 ints forever, the
+  * textbook bounded-state sketch — and every micro-batch folds its
+  * hashes in by register-wise max. Because register-wise max is
+  * associative and commutative, the sketch after any prefix of
+  * micro-batches equals the batch sketch over the same rows
+  * (StreamingSpec pins incremental ≡ batch on a two-batch stream), and
+  * two keys' states merge by the same max — the property that lets
+  * per-shard streaming sketches roll up to global cardinalities
+  * without rescans.
   *
   * Shape at scale: state per key is 256 ints regardless of stream
   * length; each trigger shuffles only the NEW (key, hash) pairs; the
-  * estimate is one exact integer division of the precomputed
-  * α₂₅₆·m²·2⁴⁹ constant — no floats anywhere. */
+  * estimate is one exact integer division — no floats anywhere. */
 object StatefulHll {
 
   final case class HllUpdate(key: String, n_zero: Long, hll_est: Long)
-
-  /** α₂₅₆·m²·2⁴⁹·10⁶ as one exact integer (α scaled by 10⁶ = 718273);
-    * shared numerator of the batch oracle and the streaming estimate. */
-  val NumeratorE6: BigInt = BigInt("26499596412111161535758336")
-
-  /** (register, rank) of one md5 hex hash — the same split as the
-    * batch SQL: byte 0 picks the register, the next 48 bits rank. */
-  private[streaming] def regRank(h: String): (Int, Int) = {
-    val reg = Integer.parseInt(h.substring(0, 2), 16)
-    val w = java.lang.Long.parseLong(h.substring(2, 14), 16)
-    val r =
-      if (w == 0L) 49
-      else 49 - (64 - java.lang.Long.numberOfLeadingZeros(w))
-    (reg, r)
-  }
-
-  /** Estimate from a 256-register state: exact integer division of the
-    * shared numerator by (Σ2^(49−M_j))·10⁶. */
-  private[streaming] def estimate(regs: Array[Int]): (Long, Long) = {
-    var ss = BigInt(0)
-    var zeros = 0L
-    var j = 0
-    while (j < regs.length) {
-      ss += BigInt(1) << (49 - regs(j))
-      if (regs(j) == 0) zeros += 1
-      j += 1
-    }
-    (zeros, (NumeratorE6 / (ss * 1000000)).toLong)
-  }
 
   def hllDistinct(
       spark: SparkSession,
@@ -71,12 +41,12 @@ object StatefulHll {
         (key, rows, state) =>
           val regs = state.getOption.getOrElse(new Array[Int](256))
           rows.foreach { case (_, h) =>
-            val (reg, r) = regRank(h)
-            if (r > regs(reg)) regs(reg) = r
+            val reg = Sketches.hllRegister(h)
+            regs(reg) = math.max(regs(reg), Sketches.hllRank(h))
           }
           state.update(regs)
-          val (zeros, est) = estimate(regs)
-          HllUpdate(key, zeros, est)
+          HllUpdate(key, regs.count(_ == 0).toLong,
+            Sketches.hllEstimate(regs.map(m => BigInt(1) << (49 - m)).sum))
       }
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
+import graft.functions.Sketches
 
 /** Streaming KMV (bottom-k) distinct sketch via mapGroupsWithState —
   * the incremental form of the batch `q_sketch_kmv`: per key, the
@@ -16,8 +17,9 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   *
   * Shape at scale: state per key is k strings regardless of stream
   * length; each trigger shuffles only the NEW (key, hash) pairs.
-  * The estimator is the same exact integer division as the batch
-  * query ((k−1)·2^48 / h_(k) on the first 48 hash bits).
+  * The estimator is the batch query's exact integer division
+  * ((k−1)·2^48 / h_(k) on the first 48 hash bits, from
+  * [[graft.functions.Sketches]]).
   */
 object StatefulKmv {
 
@@ -43,8 +45,7 @@ object StatefulKmv {
           state.update(merged)
           val est =
             if (merged.length < k) merged.length.toLong
-            else (k - 1).toLong * 281474976710656L /
-              math.max(java.lang.Long.parseLong(merged.last.take(12), 16), 1L)
+            else Sketches.kmvEstimate(k, Sketches.kmvHash(merged.last))
           KmvUpdate(key, merged.length.toLong, est)
       }
   }

@@ -1,9 +1,21 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.matching.Regex
 
 /** Driver-contract sanity: the registry is the single source of truth. */
 class RegistrySpec extends AnyFunSuite {
+
+  /** Files under `under` whose text matches `spelling`, relative to
+    * `under`, sorted. */
+  private def filesMatching(spelling: Regex, under: String = "src/main"): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(under)
+    java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p))
+      .filter(p => spelling.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toList.sorted
+  }
 
   test("query names are unique") {
     val names = SparkEntry.registry.map(_.name)
@@ -35,13 +47,8 @@ class RegistrySpec extends AnyFunSuite {
   test("the shuffle width is decided once: only graft/Session.scala " +
     "names spark.sql.shuffle.partitions, and Session.partitions reads " +
     "the session's live value") {
-    import scala.jdk.CollectionConverters._
     val key = "spark.sql.shuffle.partitions"
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val readers = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains(key))
-      .map(p => root.relativize(p).toString).toList
+    val readers = filesMatching(Regex.quote(key).r, under = "src/main/scala")
     assert(readers == List("graft/Session.scala"),
       s"files naming $key outside graft.Session: $readers")
     val conf = SharedSpark.spark.conf
@@ -55,16 +62,32 @@ class RegistrySpec extends AnyFunSuite {
 
   test("the whitespace tokenizer is spelled once: no src/main file but " +
     "graft/text/Text.scala lowercases and splits on ' '") {
-    import scala.jdk.CollectionConverters._
     val spelling =
       """split\(lower\(|toLowerCase(\(java\.util\.Locale\.ROOT\))?\.split\(" "\)""".r
-    val root = java.nio.file.Paths.get("src/main")
-    val spellers = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p))
-      .filter(p => spelling.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
-      .map(p => root.relativize(p).toString).toList
+    val spellers = filesMatching(spelling)
     assert(spellers == List("scala/graft/text/Text.scala"),
       s"files spelling the tokenizer outside graft.text.Text: $spellers")
+  }
+
+  test("md5 integers are spelled once: only graft/functions/Hex.scala " +
+    "decodes a hex prefix, only graft/functions/Sketches.scala holds the " +
+    "KMV and HLL constants, and only graft/plans/FxLog2.scala spells the " +
+    "fxlog2 oracle CTE") {
+    val hex = "scala/graft/functions/Hex.scala"
+    val decoders = filesMatching("""'0x'|16,\s*10\)|parse(Int|Long)\(.*,\s*16\)""".r)
+      .filterNot(_ == hex)
+    assert(decoders.isEmpty,
+      s"files decoding an md5 hex prefix outside graft.functions.Hex: $decoders")
+    val sketches = "scala/graft/functions/Sketches.scala"
+    val holders = filesMatching(
+      "281474976710656|17732923532771328|26499596412111161535758336".r)
+      .filterNot(_ == sketches)
+    assert(holders.isEmpty,
+      s"files holding KMV/HLL constants outside graft.functions.Sketches: $holders")
+    val fxl = filesMatching("""fxl\(n, i, x, r\)""".r)
+      .filterNot(_ == "scala/graft/plans/FxLog2.scala")
+    assert(fxl.isEmpty,
+      s"files spelling the fxlog2 oracle CTE outside graft.plans.FxLog2: $fxl")
   }
 
   test("the program's env vars are exactly SPARK_GRAFT_CPUS and " +

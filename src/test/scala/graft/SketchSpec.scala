@@ -83,6 +83,35 @@ class SketchSpec extends AnyFunSuite {
     }
   }
 
+  test("the md5 hex-prefix decode and the sketch arithmetic on it agree " +
+    "between their Spark and Scala forms at every (from, width) in use, " +
+    "and width 16 is rejected") {
+    import graft.functions.{Hex, Sketches}
+    import spark.implicits._
+    val uses = Seq((1, 2), (3, 12), (1, 8), (1, 12), (1, 15))
+    val hexes = spark.range(300).select(md5(col("id").cast("string")).as("h"))
+      .union(Seq("0" * 32, "f" * 32).toDF("h"))
+    val rows = hexes.select(col("h") +:
+        uses.map { case (from, width) => Hex.prefix(col("h"), from, width) } :+
+        Sketches.kmvEstimate(64, Sketches.kmvHash(col("h"))) :+
+        Sketches.hllRegister(col("h")) :+ Sketches.hllRank(col("h")): _*)
+      .collect()
+    assert(rows.length == 302)
+    rows.foreach { r =>
+      val h = r.getString(0)
+      val local = uses.map { case (from, width) => Hex.prefix(h, from, width) } ++
+        Seq(Sketches.kmvEstimate(64, Sketches.kmvHash(h)),
+          Sketches.hllRegister(h).toLong, Sketches.hllRank(h).toLong)
+      assert((1 to local.length).map(r.getLong) == local,
+        s"Spark and Scala forms disagree on $h")
+    }
+    assert(Hex.prefix("f" * 32, 1, 15) == (1L << 60) - 1)
+    assert(Sketches.hllRank("0" * 32) == 49 && Sketches.hllRank("f" * 32) == 1)
+    intercept[IllegalArgumentException](Hex.prefix(col("h"), 1, 16))
+    intercept[IllegalArgumentException](Hex.prefixSql("h", 1, 16))
+    intercept[IllegalArgumentException](Hex.prefix("f" * 32, 1, 16))
+  }
+
   test("KMV mergeability: the day->month merged sketch estimate equals " +
     "a direct month-level bottom-k (sketch of union = union of sketches)") {
     val li = Tables.load(spark, SharedSpark.sf001, "lineitem")
